@@ -20,7 +20,8 @@ import logging
 from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
 
 from gcs2postgres_spark.config import Config
 from gcs2postgres_spark.reconcile import reconcile_to_target
@@ -47,13 +48,17 @@ def transfer_file(
     fmt: str | None = None,
 ) -> TransferResult:
     """One file → reconcile → sink (the reference's DataProducer +
-    DataConsumer pair, src/db/db.go:17-92 + :149-186, as one Spark job)."""
+    DataConsumer pair, src/db/db.go:17-92 + :149-186, as one Spark job).
+    The row count rides the write as an observed metric — no second
+    job reads the sink back."""
     try:
         df = read_source(spark, path, fmt=fmt)
-        out = reconcile_to_target(df, target_schema)
+        rows = Observation()
+        out = reconcile_to_target(df, target_schema).observe(
+            rows, F.count(F.lit(1)).alias("rows")
+        )
         write_parquet(out, f"{sink_dir}/{target_table}", mode="overwrite")
-        n = spark.read.parquet(f"{sink_dir}/{target_table}").count()
-        return TransferResult(target_table, n, True)
+        return TransferResult(target_table, int(rows.get["rows"]), True)
     except Exception as e:  # isolate per-table failures (unlike reference Fatalf)
         log.exception("transfer failed for %s", target_table)
         return TransferResult(target_table, 0, False, str(e))

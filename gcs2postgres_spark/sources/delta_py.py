@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from gcs2postgres_spark.sources import fsio, logstore
+from gcs2postgres_spark.sources import file_stats, fsio, logstore
 
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 _CHECKPOINT_RE = re.compile(r"^(\d{20})\.checkpoint\.parquet$")
@@ -2428,88 +2428,6 @@ def write_checkpoint(
     )
 
 
-def _pq_footer_meta(path: str):
-    """pyarrow footer metadata for a local OR scheme'd file (scheme'd
-    bytes come through fsio/Hadoop — a whole-object read, so callers
-    use this only as a fallback when log stats are absent)."""
-    import io as _io
-
-    import pyarrow.parquet as _pq
-
-    if fsio.has_scheme(path):
-        return _pq.ParquetFile(_io.BytesIO(fsio.read_bytes(path))).metadata
-    return _pq.ParquetFile(path).metadata
-
-
-def _parquet_stats_json(path: str) -> str | None:
-    """Per-file column statistics in the protocol's ``stats`` JSON shape
-    ({numRecords, minValues, maxValues, nullCount}) from the parquet
-    FOOTER — a metadata read, no data rows. Columns whose row groups
-    lack stats (or carry non-JSON-safe types) are simply absent; readers
-    treat absence as "cannot skip". Temporal values render as ISO-8601
-    strings (lexicographic order == chronological, so the skip filter's
-    string comparison stays correct). No string truncation is applied
-    (real writers cap at 32 chars with round-up; files here are
-    self-written so exact bounds are free and strictly tighter)."""
-    import datetime as _dt
-
-    import pyarrow.parquet as _pq
-
-    def _safe(v):
-        if isinstance(v, bytes):
-            return None
-        if isinstance(v, (_dt.datetime, _dt.date)):
-            return v.isoformat()
-        if isinstance(v, (bool, int, float, str)):
-            return v
-        return None
-
-    try:
-        md = _pq.ParquetFile(path).metadata
-    except Exception:
-        return None
-    mins: dict = {}
-    maxs: dict = {}
-    nulls: dict = {}
-    complete: set = set()
-    for rg in range(md.num_row_groups):
-        for ci in range(md.row_group(rg).num_columns):
-            col = md.row_group(rg).column(ci)
-            name = col.path_in_schema
-            if "." in name:  # nested: out of scope for file skipping
-                continue
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                nulls.pop(name, None)
-                mins.pop(name, None)
-                maxs.pop(name, None)
-                complete.discard(name)
-                continue
-            if rg == 0:
-                complete.add(name)
-            if name not in complete:
-                continue
-            lo, hi = _safe(st.min), _safe(st.max)
-            if lo is None or hi is None:
-                complete.discard(name)
-                mins.pop(name, None)
-                maxs.pop(name, None)
-                nulls.pop(name, None)
-                continue
-            mins[name] = lo if name not in mins else min(mins[name], lo)
-            maxs[name] = hi if name not in maxs else max(maxs[name], hi)
-            if st.null_count is not None:
-                nulls[name] = nulls.get(name, 0) + st.null_count
-    return json.dumps(
-        {
-            "numRecords": md.num_rows,
-            "minValues": mins,
-            "maxValues": maxs,
-            "nullCount": nulls,
-        }
-    )
-
-
 _ISO_TEMPORAL = re.compile(
     r"^\d{4}-\d{2}-\d{2}"
     r"([ T]\d{2}:\d{2}(:\d{2}(\.\d+)?)?([+-]\d{2}:?\d{2}|Z)?)?$"
@@ -2568,49 +2486,15 @@ def _stats_skip_file(add: dict, stats_filter: dict[str, tuple]) -> bool:
     return False
 
 
-_STATS_TYPES = {
-    "byte", "short", "integer", "long", "float", "double",
-    "string", "date", "timestamp", "timestamp_ntz", "boolean",
-}
-
-
-def _stats_spark_job(
-    spark: SparkSession, staging: str, data_fields: list
-) -> dict[str, str]:
-    """Per-file column statistics via ONE distributed aggregation over
-    the staged files — {STAGING-RELATIVE path: protocol stats JSON}.
-    This is the jar-ful writer's task-side stats collection re-expressed
-    as a follow-up Spark job: executor-side, scheme-agnostic (the scan
-    goes through the same Hadoop FS as any Spark read), no serial driver
-    footer walk. The collect is one row per STAGED file — bounded by
-    this append's file count, not by rows.
-
-    Keys are relative to ``staging`` (``pcol=v/part-....parquet``), NOT
-    basenames: Spark's partitionBy reuses identical part-file basenames
-    across partition directories, so a basename key would collapse
-    colliding files and misattribute min/max bounds — which can make
-    stats-skipping silently drop files that DO contain matching rows.
-    Relativization matches the FULL staging prefix (fsio.relativize),
-    never a basename token: an ancestor directory sharing the staging
-    dir's basename would shift a token split and silently desync keys
-    from the caller's manifest entries. A stats row that cannot be
-    relativized, or a failed stats scan over files this commit just
-    wrote, is an internal error and propagates — committing adds with
-    missing/zero stats would corrupt numRecords-derived row tracking."""
-    cols = [f.name for f in data_fields if f.dataType.typeName() in _STATS_TYPES]
-    staged = spark.read.option("basePath", staging).parquet(staging)
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for c in cols:
-        q = f"`{c}`"
-        aggs.append(F.min(q).alias(f"__mn_{c}"))
-        aggs.append(F.max(q).alias(f"__mx_{c}"))
-        aggs.append(F.sum(F.col(q).isNull().cast("long")).alias(f"__nc_{c}"))
-    rows = (
-        staged.withColumn("__f", F.input_file_name())
-        .groupBy("__f")
-        .agg(*aggs)
-        .collect()
-    )
+def _stats_json(st: file_stats.FileStats) -> str:
+    """A file's ``FileStats`` in the protocol's ``stats`` JSON shape
+    ({numRecords, minValues, maxValues, nullCount}). Temporal values
+    render as ISO-8601 strings (datetime.isoformat: 'T' separator, which
+    _stats_gt reconciles with SQL literals); values JSON cannot carry
+    (binary, decimal) leave the column's range out, and readers treat
+    absence as "cannot skip". No string truncation (real writers cap at
+    32 chars with round-up; files here are self-written, so exact
+    bounds are free and strictly tighter)."""
 
     def _jsonable(v):
         if isinstance(v, (_dt.datetime, _dt.date)):
@@ -2619,33 +2503,19 @@ def _stats_spark_job(
             return v
         return None
 
-    out: dict[str, str] = {}
-    for r in rows:
-        mins, maxs, nulls = {}, {}, {}
-        for c in cols:
-            lo, hi = _jsonable(r[f"__mn_{c}"]), _jsonable(r[f"__mx_{c}"])
-            if lo is not None and hi is not None:
-                mins[c], maxs[c] = lo, hi
-            nulls[c] = int(r[f"__nc_{c}"] or 0)
-        raw = fsio.relativize(r["__f"], staging)
-        if raw is None:
-            raise RuntimeError(
-                f"staged-stats desync: {r['__f']!r} is not under the "
-                f"staging dir {staging!r}"
-            )
-        # index under both the raw URI-relative form and the unquoted
-        # form: the caller's listing (Hadoop getPath().toString() or
-        # posix walk) and input_file_name() may disagree on percent-
-        # encoding of partition-dir values
-        out[raw] = out[unquote(raw)] = json.dumps(
-            {
-                "numRecords": int(r["__n"]),
-                "minValues": mins,
-                "maxValues": maxs,
-                "nullCount": nulls,
-            }
-        )
-    return out
+    mins, maxs = {}, {}
+    for c, lo in st.mins.items():
+        lo, hi = _jsonable(lo), _jsonable(st.maxs[c])
+        if lo is not None and hi is not None:
+            mins[c], maxs[c] = lo, hi
+    return json.dumps(
+        {
+            "numRecords": st.rows,
+            "minValues": mins,
+            "maxValues": maxs,
+            "nullCount": st.nulls,
+        }
+    )
 
 
 def _stage_data_files(
@@ -2656,21 +2526,21 @@ def _stage_data_files(
     data_change: bool = True,
 ) -> list[dict]:
     """Write df's parquet files into the table directory (executor-side,
-    partitionBy-aware) and return the protocol ``add`` actions. Files
-    land under uuid-suffixed Spark part names, so successive commits
-    never collide.
+    partitionBy-aware) and return the protocol ``add`` actions, each
+    with per-file stats from the file's parquet footer
+    (sources/file_stats.py — VARIANT files, whose footers pyarrow
+    cannot parse, are committed without stats). Files land under
+    uuid-suffixed Spark part names, so successive commits never collide.
 
-    Posix tables keep the original layout (files moved from the staging
-    dir into the table root / partition dirs; per-file footer stats for
-    small appends). SCHEME'd tables (``file:``, ``gs://``, ...) write
-    to FINAL unique paths directly — one ``data-<uuid>/`` prefix per
-    commit, no rename (object stores have none) — and collect stats
-    with the distributed job. Either way the add actions carry the same
-    fields and the same stats JSON shape."""
+    Posix tables keep the original layout: files move from the staging
+    dir into the table root / partition dirs. SCHEME'd tables
+    (``file:``, ``gs://``, ...) write to FINAL unique paths directly —
+    one ``data-<uuid>/`` prefix per commit, no rename (object stores
+    have none). Either way the add actions carry the same fields and
+    the same stats."""
     import shutil
     import uuid
 
-    spark = df.sparkSession
     remote = fsio.has_scheme(table_path)
     sid = uuid.uuid4().hex[:8]
     prefix = f"data-{sid}" if remote else f"_staging_{sid}"
@@ -2680,100 +2550,35 @@ def _stage_data_files(
         writer = writer.partitionBy(*part_cols)
     writer.parquet(staging)
 
+    with_stats = not _has_variant(df.schema)
     adds: list[dict] = []
-    data_fields = [f for f in df.schema.fields if f.name not in part_cols]
-    if remote:
-        files = sorted(
-            (p, sz) for p, sz in fsio.list_files(staging)
-            if p.endswith(".parquet")
-        )
-        stats_by_rel = (
-            _stats_spark_job(spark, staging, data_fields) if files else {}
-        )
-        claimed: set[str] = set()
-        for full, sz in files:
-            rel = fsio.relativize(full, staging)
-            if rel is None:
-                raise RuntimeError(
-                    f"staged file {full!r} is not under staging {staging!r}"
-                )
-            segs = rel.split("/")
-            pv = {}
-            for seg in segs[:-1]:
-                k, _, val = seg.partition("=")
-                pv[k] = unquote(val)
-            rel_path = "/".join([prefix, *segs])
-            add = {
-                "path": quote(rel_path, safe="/="),
-                "partitionValues": pv,
-                "size": int(sz),
-                "modificationTime": now_ms,
-                "dataChange": data_change,
-            }
-            # look up by the SAME staging-relative path the stats job
-            # keyed on — basenames collide across partition directories
-            st = stats_by_rel.get(rel) or stats_by_rel.get(unquote(rel))
-            claimed.update({rel, unquote(rel)})
-            if st:
-                add["stats"] = st
-            adds.append({"add": add})
-        # every stats row must belong to a listed file (a missing STATS
-        # key is legitimate — zero-row parts yield no group row — but a
-        # stats key no listing claims means the two sides relativized
-        # differently, the silent desync this assert turns loud)
-        unclaimed = {unquote(k) for k in stats_by_rel} - {
-            unquote(c) for c in claimed
-        }
-        if unclaimed:
-            raise RuntimeError(
-                f"staged-stats desync: {len(unclaimed)} stats rows match "
-                f"no listed staged file, e.g. {sorted(unclaimed)[:3]}"
-            )
-        # no move: the staged names ARE the final names (unique per
-        # commit); _SUCCESS markers are dropped lazily by vacuum
-        return adds
-
-    # posix staging: the ~2 ms/file LOCAL footer probe beats a
-    # distributed re-read at any realistic file count (measured: 256
-    # files, footer walk 1.7 s total write vs 5.2 s with the job — see
-    # BASELINE.md r14 note). The distributed job exists for SCHEME'd
-    # paths above, where per-object footer RTT (50-100 ms) would make
-    # a 10^4-file walk minutes of serial driver wall.
-    walk = [
-        (root, name)
-        for root, _dirs, files in os.walk(staging)
-        for name in files
-        if name.endswith(".parquet")
-    ]
-    for root, name in walk:
-        src = os.path.join(root, name)
+    for full, sz in file_stats.part_files(staging):
+        # relative to the staging dir, never a basename: partitionBy
+        # reuses identical part basenames across partition directories
+        rel = fsio.relativize(full, staging)
+        segs = rel.split("/")
         pv = {}
-        rel_dir_parts = []
-        rel = os.path.relpath(src, staging)
-        for seg in rel.split(os.sep)[:-1]:
+        for seg in segs[:-1]:
             k, _, val = seg.partition("=")
             pv[k] = unquote(val)
-            rel_dir_parts.append(seg)
-        dest_dir = os.path.join(table_path, *rel_dir_parts)
-        os.makedirs(dest_dir, exist_ok=True)
-        dest = os.path.join(dest_dir, name)
-        os.replace(src, dest)
-        rel_path = "/".join([*rel_dir_parts, name])
         add = {
-            "path": quote(rel_path, safe="/="),
+            "path": quote(f"{prefix}/{rel}" if remote else rel, safe="/="),
             "partitionValues": pv,
-            "size": os.path.getsize(dest),
+            "size": int(sz),
             "modificationTime": now_ms,
             "dataChange": data_change,
         }
-        # per-file column stats power planning-time file skipping
-        # (footer read — metadata-scale; a jar-ful writer collects the
-        # same stats inline during the write task)
-        stats = _parquet_stats_json(dest)
-        if stats:
-            add["stats"] = stats
+        if with_stats:
+            add["stats"] = _stats_json(file_stats.read(full, sz))
+        if not remote:
+            dest = os.path.join(table_path, *segs)
+            os.makedirs(os.path.dirname(dest), exist_ok=True)
+            os.replace(full, dest)
         adds.append({"add": add})
-    shutil.rmtree(staging, ignore_errors=True)
+    # scheme'd: the staged names ARE the final names (unique per
+    # commit); _SUCCESS markers are dropped lazily by vacuum
+    if not remote:
+        shutil.rmtree(staging, ignore_errors=True)
     return adds
 
 
@@ -2947,8 +2752,9 @@ def _assign_base_row_ids(
             except (ValueError, TypeError, KeyError):
                 n = None
         if n is None:
-            n = _pq_footer_meta(
-                _resolve_add_path(table_path, unquote(a["add"]["path"]))
+            n = file_stats.footer(
+                _resolve_add_path(table_path, unquote(a["add"]["path"])),
+                a["add"].get("size"),
             ).num_rows
         a["add"]["baseRowId"] = next_id
         a["add"]["defaultRowCommitVersion"] = version
@@ -3541,62 +3347,35 @@ def write_delta(
                 row_tracked = True
     if not fresh and meta is not None and gen_cols:
         # advance each identity column's high water mark from the STAGED
-        # files' parquet footer statistics (metadata read, O(files) —
-        # never a second data pass) and commit the updated metaData in
-        # the SAME version as the adds (atomic: a racing writer that
-        # rebases over us sees the new hwm)
-        import pyarrow.parquet as _pq
-
+        # files' min/max stats (the add's own stats JSON, recorded by
+        # staging; the file's footer when the add has none — metadata
+        # reads, never a second data pass) and commit the updated
+        # metaData in the SAME version as the adds (atomic: a racing
+        # writer that rebases over us sees the new hwm)
         extremes: dict[str, int] = {}
         for a in adds:
-            # prefer the add's own stats JSON (recorded by staging — no
-            # extra IO, any scheme); footer probe only when absent
-            stj = a["add"].get("stats")
-            if stj:
-                try:
-                    parsed = json.loads(stj)
-                except (ValueError, TypeError):
-                    parsed = None
-                if parsed is not None:
-                    for g in gen_cols:
-                        name = g["name"]
-                        side = (
-                            parsed.get("maxValues" if g["step"] > 0 else "minValues")
-                            or {}
-                        )
-                        if name not in side:
-                            continue
-                        v = int(side[name])
-                        cur = extremes.get(name)
-                        better = (
-                            v > cur if g["step"] > 0 else v < cur
-                        ) if cur is not None else True
-                        if better:
-                            extremes[name] = v
+            try:
+                parsed = json.loads(a["add"].get("stats") or "null")
+            except (ValueError, TypeError):
+                parsed = None
+            if parsed is not None:
+                mins = parsed.get("minValues") or {}
+                maxs = parsed.get("maxValues") or {}
+            else:
+                fst = file_stats.read(
+                    _resolve_add_path(table_path, unquote(a["add"]["path"])),
+                    a["add"].get("size"),
+                )
+                mins, maxs = fst.mins, fst.maxs
+            for g in gen_cols:
+                name = g["name"]
+                side = maxs if g["step"] > 0 else mins
+                if name not in side:
                     continue
-            fmeta = _pq_footer_meta(
-                _resolve_add_path(table_path, unquote(a["add"]["path"]))
-            )
-            for rg in range(fmeta.num_row_groups):
-                row_group = fmeta.row_group(rg)
-                for ci in range(row_group.num_columns):
-                    col = row_group.column(ci)
-                    name = col.path_in_schema
-                    if name not in {g["name"] for g in gen_cols}:
-                        continue
-                    st = col.statistics
-                    if st is None or not st.has_min_max:
-                        continue
-                    for g in gen_cols:
-                        if g["name"] != name:
-                            continue
-                        v = int(st.max if g["step"] > 0 else st.min)
-                        cur = extremes.get(name)
-                        better = (
-                            v > cur if g["step"] > 0 else v < cur
-                        ) if cur is not None else True
-                        if better:
-                            extremes[name] = v
+                v = int(side[name])
+                cur = extremes.get(name)
+                if cur is None or (v > cur if g["step"] > 0 else v < cur):
+                    extremes[name] = v
         if extremes:
             schema_json = json.loads(meta["schemaString"])
             for f in schema_json["fields"]:
@@ -4718,9 +4497,9 @@ def convert_to_delta(
     commits protocol + metaData (schema inferred through Spark's
     partition-aware reader, so partition columns come back typed) + one
     ``add`` per parquet file with partitionValues parsed from its
-    directory segments and per-file stats (footer probe locally, one
-    distributed job on scheme'd stores — the same split the write path
-    uses). The training-pipeline onboarding move: raw parquet corpora
+    directory segments and per-file stats from each file's parquet
+    footer (sources/file_stats.py, the same reader the write path
+    uses, on any scheme). The training-pipeline onboarding move: raw parquet corpora
     gain ACID commits, time travel, DML, and stats skipping with zero
     data movement, exactly Delta's own CONVERT.
 
@@ -4772,11 +4551,7 @@ def convert_to_delta(
             f"directory layout {detected}"
         )
     part_cols = detected
-    data_fields = [f for f in df.schema.fields if f.name not in part_cols]
-    remote = fsio.has_scheme(dir_path)
-    stats_by_rel = (
-        _stats_spark_job(spark, dir_path, data_fields) if remote else {}
-    )
+    with_stats = not _has_variant(df.schema)
     adds: list[dict] = []
     for full, sz in sorted(listed):
         rel = _rel(full)
@@ -4797,13 +4572,8 @@ def convert_to_delta(
             "modificationTime": now,
             "dataChange": True,
         }
-        st = (
-            (stats_by_rel.get(rel) or stats_by_rel.get(unquote(rel)))
-            if remote
-            else _parquet_stats_json(full)
-        )
-        if st:
-            add["stats"] = st
+        if with_stats:
+            add["stats"] = _stats_json(file_stats.read(full, sz))
         adds.append({"add": add})
     actions = [
         {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},

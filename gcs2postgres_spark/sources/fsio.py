@@ -214,9 +214,9 @@ def relativize(full: str, base: str) -> str | None:
     not under ``base`` — matching on the FULL directory prefix, never a
     basename token (an ancestor directory sharing the staging dir's
     basename must not shift the split point: a wrong key silently
-    desyncs staged-file stats from their manifest entries). Tolerant of
-    the two renderings the callers actually see disagree on:
-    ``file:``-scheme prefixes (input_file_name URIs vs posix walks) and
+    misplaces files and partition values). Tolerant of the renderings
+    that disagree between a caller's path and a listing: ``file:``-scheme
+    prefixes (Hadoop lists ``file:///x`` as ``file:/x``) and
     percent-encoding of partition-dir values."""
     from urllib.parse import unquote as _unq
 

@@ -66,7 +66,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gcs2postgres_spark.sources import fsio, logstore
+from gcs2postgres_spark.sources import file_stats, fsio, logstore
 from gcs2postgres_spark.sources.avro_py import (
     read_avro_file,
     read_avro_file_meta,
@@ -1764,14 +1764,12 @@ def data_file_entry(path: str, status: int = 1, snapshot_id: int = 1) -> dict:
 
         fmt, nrows = "AVRO", avro_row_count(path)
     else:
-        import pyarrow.parquet as pq
-
-        fmt, nrows = "PARQUET", pq.ParquetFile(path).metadata.num_rows
+        fmt, nrows = "PARQUET", file_stats.footer(path).num_rows
     return {
         "status": status,
         "snapshot_id": snapshot_id,
         "data_file": {
-            "file_path": os.path.abspath(path),
+            "file_path": fsio.absolute(path),
             "file_format": fmt,
             "partition": {},
             "record_count": nrows,
@@ -1814,7 +1812,7 @@ def write_snapshot_metadata(
                 "snapshot-id": s["snapshot-id"],
                 "timestamp-ms": s.get("timestamp-ms", 0),
                 "summary": {"operation": "append"},
-                "manifest-list": os.path.abspath(s["manifest-list"]),
+                "manifest-list": fsio.absolute(s["manifest-list"]),
             }
             for s in snapshots
         ],
@@ -1835,7 +1833,7 @@ def write_manifest_list(path: str, manifest_paths: list[str], snapshot_id: int) 
         MANIFEST_LIST_SCHEMA,
         [
             {
-                "manifest_path": os.path.abspath(p),
+                "manifest_path": fsio.absolute(p),
                 "manifest_length": fsio.size(p),
                 "partition_spec_id": 0,
                 "added_snapshot_id": snapshot_id,
@@ -1985,49 +1983,24 @@ def _storage_value(v, t: str):
     return v
 
 
-def _parquet_bounds(
-    path: str, bounds_spec: dict[str, tuple[int, str]]
+def _bounds3(
+    st: file_stats.FileStats, bounds_spec: dict[str, tuple[int, str]]
 ) -> tuple[list[dict], list[dict], list[dict]]:
-    """(lower_bounds, upper_bounds, null_value_counts) manifest maps
-    (avro kv-record form, keyed by FIELD ID) from the parquet footer —
-    a metadata read; columns with incomplete row-group stats are simply
-    absent (readers treat absence as "cannot skip")."""
-    import pyarrow.parquet as _pq
-
-    try:
-        md = _pq.ParquetFile(path).metadata
-    except Exception:
-        return [], [], []
-    mins: dict = {}
-    maxs: dict = {}
-    nulls: dict = {}
-    broken: set = set()
-    for rg in range(md.num_row_groups):
-        for ci in range(md.row_group(rg).num_columns):
-            col = md.row_group(rg).column(ci)
-            name = col.path_in_schema
-            if name not in bounds_spec or name in broken:
-                continue
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                broken.add(name)
-                for d in (mins, maxs, nulls):
-                    d.pop(name, None)
-                continue
-            mins[name] = st.min if name not in mins else min(mins[name], st.min)
-            maxs[name] = st.max if name not in maxs else max(maxs[name], st.max)
-            if st.null_count is not None:
-                nulls[name] = nulls.get(name, 0) + st.null_count
+    """A file's ``FileStats`` as the manifest's (lower_bounds,
+    upper_bounds, null_value_counts) maps — avro kv-record form, keyed
+    by FIELD ID, in field-id order. A range the spec's single-value
+    form cannot encode is left out (readers treat absence as "cannot
+    skip")."""
     lower, upper, nullc = [], [], []
-    for name in sorted(mins):
-        fid, t = bounds_spec[name]
-        lo, hi = _bound_encode(mins[name], t), _bound_encode(maxs[name], t)
-        if lo is None or hi is None:
-            continue
-        lower.append({"key": fid, "value": lo})
-        upper.append({"key": fid, "value": hi})
-    for name in sorted(nulls):
-        nullc.append({"key": bounds_spec[name][0], "value": int(nulls[name])})
+    for name, (fid, t) in sorted(bounds_spec.items(), key=lambda kv: kv[1][0]):
+        if name in st.mins:
+            lo = _bound_encode(st.mins[name], t)
+            hi = _bound_encode(st.maxs[name], t)
+            if lo is not None and hi is not None:
+                lower.append({"key": fid, "value": lo})
+                upper.append({"key": fid, "value": hi})
+        if name in st.nulls:
+            nullc.append({"key": fid, "value": int(st.nulls[name])})
     return lower, upper, nullc
 
 
@@ -2039,7 +2012,9 @@ def _parquet_counts_via_spark(spark, paths: list[str]) -> dict[str, int]:
     """Per-file row counts via ONE distributed count-by-file job — the
     fallback when pyarrow cannot parse the footers (VARIANT-typed
     parquet uses a logical type pyarrow 16 does not know; Spark's own
-    reader does). Returns {abs path -> rows}."""
+    reader does). Returns {path as passed -> rows}; the job scans EVERY
+    listed file, so a file with no count row genuinely has zero rows
+    (an empty input partition can stage a 0-row part)."""
     from pyspark.sql import functions as _F
 
     rows = (
@@ -2051,7 +2026,47 @@ def _parquet_counts_via_spark(spark, paths: list[str]) -> dict[str, int]:
         .count()
         .collect()
     )
-    return {r["fp"]: int(r["count"]) for r in rows}
+    got = {r["fp"]: int(r["count"]) for r in rows}
+    return {p: got.get(fsio.strip_scheme(fsio.absolute(p)), 0) for p in paths}
+
+
+def _parquet_entries(
+    spark,
+    listed: list[tuple[str, int]],
+    variant: bool,
+    partition_of=None,
+    **entry_kw,
+) -> list[dict]:
+    """Manifest entries for freshly written parquet files ``listed`` as
+    (path, size): rows and bounds from each file's footer
+    (sources/file_stats.py, any scheme). VARIANT files take their
+    counts from one Spark job instead and carry no bounds.
+    ``partition_of(path)`` gives each entry's partition tuple."""
+    counts = (
+        _parquet_counts_via_spark(spark, [p for p, _sz in listed])
+        if variant and listed else {}
+    )
+    return [
+        _v2_entry(
+            p, file_size=sz, record_count=counts.get(p),
+            partition=partition_of(p) if partition_of else None,
+            **entry_kw,
+        )
+        for p, sz in listed
+    ]
+
+
+def _pid_partitions(base: str, part_names: list[str], tup_of: dict):
+    """``partition_of`` for files staged with partitionBy("__pid"): the
+    dense pid in the ``__pid=<n>/`` directory (relative to ``base``)
+    maps back to its typed partition tuple — no data value is ever
+    parsed from a path."""
+
+    def of(path: str) -> dict:
+        pid = int(fsio.relativize(path, base).split("/", 1)[0].split("=", 1)[1])
+        return dict(zip(part_names, tup_of[pid]))
+
+    return of
 
 
 def _v2_entry(
@@ -2065,12 +2080,14 @@ def _v2_entry(
     bounds_spec: dict[str, tuple[int, str]] | None = None,
     record_count: int | None = None,
     file_size: int | None = None,
-    bounds3: tuple[list, list, list] | None = None,
 ) -> dict:
-    """``file_size``/``bounds3``: pre-computed size and
-    (lower, upper, null_counts) manifest maps — the scheme'd staging
-    path supplies them from fsio listings + a distributed stats job so
-    this function never footer-probes a remote object."""
+    """One manifest entry. A parquet file's record count and, for data
+    files with ``bounds_spec``, its lower/upper/null-count maps come
+    from its footer (sources/file_stats.py — a bounded ranged read on
+    scheme'd paths; an unreadable footer raises). ``record_count``
+    overrides the footer (VARIANT files, whose footers pyarrow cannot
+    parse, and UniForm's log-recorded counts) and then no bounds are
+    recorded. ``file_size``: the listing's size, sparing a stat."""
     if dv is not None:
         # v3 deletion vector: (referenced data file, content_offset,
         # content_size_in_bytes, cardinality); record_count is the
@@ -2096,6 +2113,7 @@ def _v2_entry(
                 "content_size_in_bytes": size,
             },
         }
+    fst = None
     if path.endswith(".orc"):
         import pyarrow.orc as _orc
 
@@ -2107,27 +2125,8 @@ def _v2_entry(
     elif record_count is not None:
         fmt, nrows = "PARQUET", int(record_count)
     else:
-        import pyarrow.parquet as pq
-
-        try:
-            if fsio.has_scheme(path):
-                # scheme'd staged file without a precomputed count
-                # (metadata-scale writers like the equality-delete key
-                # list): BOUNDED ranged reads — the parquet reader pulls
-                # only the footer through the seekable RangeReader,
-                # never the whole object to the driver
-                fmt = "PARQUET"
-                nrows = pq.ParquetFile(
-                    fsio.RangeReader(path)
-                ).metadata.num_rows
-            else:
-                fmt, nrows = "PARQUET", pq.ParquetFile(path).metadata.num_rows
-        except OSError as e:
-            raise NotImplementedError(
-                f"cannot read the parquet footer of {path!r} ({e}) — for "
-                "VARIANT-typed files pass record_count (the committers "
-                "compute it via _parquet_counts_via_spark)"
-            ) from None
+        fst = file_stats.read(path, file_size)
+        fmt, nrows = "PARQUET", fst.rows
     entry = {
         "status": 1,
         "snapshot_id": snapshot_id,
@@ -2145,15 +2144,8 @@ def _v2_entry(
             "equality_ids": list(equality_ids) if equality_ids else None,
         },
     }
-    if bounds3 is not None:
-        lower, upper, nullc = bounds3
-        if lower:
-            entry["data_file"]["lower_bounds"] = lower
-            entry["data_file"]["upper_bounds"] = upper
-        if nullc:
-            entry["data_file"]["null_value_counts"] = nullc
-    elif bounds_spec and fmt == "PARQUET" and content == 0:
-        lower, upper, nullc = _parquet_bounds(path, bounds_spec)
+    if bounds_spec and fst is not None and content == 0:
+        lower, upper, nullc = _bounds3(fst, bounds_spec)
         if lower:
             entry["data_file"]["lower_bounds"] = lower
             entry["data_file"]["upper_bounds"] = upper
@@ -2226,30 +2218,16 @@ def write_iceberg_v2_fixture(
         for f in _schema_for_bounds["fields"]
         if isinstance(f["type"], str)
     }
-    _counts: dict[str, int] = {}
-    _has_variant = "variant" in json.dumps(_schema_for_bounds)
-    if _has_variant:
-        # pyarrow cannot parse variant footers: ONE spark job counts all
-        _counts = _parquet_counts_via_spark(df.sparkSession, files)
     data_manifest = os.path.join(mdir, "manifest-data-1.avro")
     write_avro_file(
         data_manifest,
         MANIFEST_ENTRY_SCHEMA_V2,
-        [
-            _v2_entry(
-                p, content=0, seq=1, bounds_spec=_bspec,
-                # the count job scanned EVERY staged file: a file with
-                # no count row genuinely has zero rows (an empty input
-                # partition can stage a 0-row part) — None would send
-                # _v2_entry to the pyarrow footer, which cannot parse
-                # variant footers
-                record_count=(
-                    _counts.get(os.path.abspath(p), 0)
-                    if _has_variant else None
-                ),
-            )
-            for p in files
-        ],
+        _parquet_entries(
+            df.sparkSession,
+            [(p, os.path.getsize(p)) for p in files],
+            variant="variant" in json.dumps(_schema_for_bounds),
+            content=0, seq=1, bounds_spec=_bspec,
+        ),
         codec="null",
         # write-time schema stamp (spec: manifests record the schema
         # they were written under) — gives ORC/Avro files id-based
@@ -2533,7 +2511,7 @@ def write_iceberg(
     sid = max((s["snapshot-id"] for s in snapshots), default=0) + 1
     commit_dir = os.path.join(table_path, "data", f"commit-{sid}-{uuid.uuid4().hex[:8]}")
     df.write.mode("overwrite").parquet(commit_dir)
-    files = [p for p, _sz in _staged_parquet_files(commit_dir)]
+    files = [p for p, _sz in file_stats.part_files(commit_dir)]
     if not files:
         raise ValueError(f"no parquet part files produced under {commit_dir!r}")
 
@@ -2987,39 +2965,10 @@ def add_files(
     now = int(
         snapshot_ts_ms if snapshot_ts_ms is not None else _time.time() * 1000
     )
-    if fsio.has_scheme(src_dir):
-        stats = _staged_stats_spark(spark, src_dir, bounds_spec)
-        entries = []
-        claimed: set[str] = set()
-        for p, sz in files:
-            # full-prefix relativization — src_dir is USER-provided, so
-            # an ancestor sharing its basename (table under .../data-3/
-            # with staging dir data-3) must not shift a token split and
-            # desync these keys from the stats job's
-            rel = fsio.relativize(p, src_dir)
-            if rel is None:
-                raise RuntimeError(
-                    f"add_files: listed {p!r} is not under {src_dir!r}"
-                )
-            st = stats.get(rel) or stats.get(unquote(rel)) or {}
-            claimed.update({unquote(rel)})
-            entries.append(
-                _v2_entry(p, content=0, seq=new_seq, snapshot_id=sid,
-                          record_count=st.get("rows", 0), file_size=sz,
-                          bounds3=st.get("bounds3") or ([], [], []))
-            )
-        unclaimed = {unquote(k) for k in stats} - claimed
-        if unclaimed:
-            raise RuntimeError(
-                f"add_files stats desync: {len(unclaimed)} stats rows "
-                f"match no listed file, e.g. {sorted(unclaimed)[:3]}"
-            )
-    else:
-        entries = [
-            _v2_entry(p, content=0, seq=new_seq, snapshot_id=sid,
-                      bounds_spec=bounds_spec)
-            for p, _sz in files
-        ]
+    entries = _parquet_entries(
+        spark, files, variant=_schema_has_variant(ctx),
+        content=0, seq=new_seq, snapshot_id=sid, bounds_spec=bounds_spec,
+    )
     mdir = os.path.join(table_path, "metadata")
     fsio.makedirs(mdir)
     manifest = os.path.join(mdir, _uniq(f"manifest-addfiles-{sid}.avro"))
@@ -4126,10 +4075,10 @@ def upsert_equality(
     ).distinct().coalesce(1)
     eq_dir = os.path.join(table_path, "data", f"eqdel-{sid}-{uuid.uuid4().hex[:8]}")
     keys.write.mode("overwrite").parquet(eq_dir)
-    delete_entries = [
-        _v2_entry(p, content=2, seq=new_seq, equality_ids=eq_ids, snapshot_id=sid)
-        for p, _sz in _staged_parquet_files(eq_dir)
-    ]
+    delete_entries = _parquet_entries(
+        spark, file_stats.part_files(eq_dir), variant=False,
+        content=2, seq=new_seq, equality_ids=eq_ids, snapshot_id=sid,
+    )
     del_manifest = os.path.join(mdir, _uniq(f"manifest-eqdeletes-{sid}.avro"))
     write_avro_file(
         del_manifest, manifest_entry_schema_v2([]), delete_entries, codec="null"
@@ -4996,81 +4945,6 @@ def _v2_commit_snapshot(
             continue
 
 
-def _staged_stats_spark(
-    spark: SparkSession,
-    commit_dir: str,
-    bounds_spec: dict[str, tuple[int, str]],
-) -> dict[str, dict]:
-    """Per-staged-file record counts + encoded lower/upper/null-count
-    bounds via ONE distributed aggregation over ``commit_dir`` — the
-    scheme-agnostic twin of the posix footer probe (executors scan
-    through the same Hadoop FS as any read; the collect is one row per
-    staged file). Returns {COMMIT-DIR-RELATIVE path: {"rows": n,
-    "bounds3": (lower, upper, nullc)}}.
-
-    Keys are relative paths (``__pid=3/part-....parquet``), not
-    basenames — Spark's partitionBy reuses identical part basenames
-    across partition dirs, and a basename key would collapse colliding
-    files into one entry (misattributed bounds -> wrong stats-skips;
-    collapsed record_count -> overlapping v3 first_row_id blocks).
-    Relativization matches the FULL commit-dir prefix (fsio.relativize)
-    — an ancestor dir sharing the commit dir's basename must not shift
-    a token split and desync keys from the caller's entries.
-    Failures PROPAGATE: these are files this commit just wrote, so an
-    unreadable staging scan is an internal error — swallowing it into
-    {} would commit every file with record_count=0, corrupting row
-    lineage and foreign engines' count pushdowns. A file the job
-    scanned but that yields no group row genuinely has ZERO rows
-    (the read lists every staged file; zero-row parts contribute no
-    rows), so callers may treat a missing key as rows=0."""
-    from urllib.parse import unquote as _unq
-    staged = spark.read.option("basePath", commit_dir).parquet(commit_dir)
-    names = [c for c in staged.columns if c in bounds_spec]
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for c in names:
-        q = f"`{c}`"
-        aggs.append(F.min(q).alias(f"__mn_{c}"))
-        aggs.append(F.max(q).alias(f"__mx_{c}"))
-        aggs.append(F.sum(F.col(q).isNull().cast("long")).alias(f"__nc_{c}"))
-    rows = (
-        staged.withColumn("__f", F.input_file_name())
-        .groupBy("__f").agg(*aggs).collect()
-    )
-    out: dict[str, dict] = {}
-    for r in rows:
-        lower, upper, nullc = [], [], []
-        for c in names:
-            fid, t = bounds_spec[c]
-            mn, mx = r[f"__mn_{c}"], r[f"__mx_{c}"]
-            if mn is not None and mx is not None:
-                lo, hi = _bound_encode(mn, t), _bound_encode(mx, t)
-                if lo is not None and hi is not None:
-                    lower.append({"key": fid, "value": lo})
-                    upper.append({"key": fid, "value": hi})
-            nullc.append({"key": fid, "value": int(r[f"__nc_{c}"] or 0)})
-        raw = fsio.relativize(r["__f"], commit_dir)
-        if raw is None:
-            raise RuntimeError(
-                f"staged-stats desync: {r['__f']!r} is not under the "
-                f"commit dir {commit_dir!r}"
-            )
-        # both raw and unquoted forms: the caller's fsio listing and
-        # input_file_name() may disagree on percent-encoding
-        out[raw] = out[_unq(raw)] = {
-            "rows": int(r["__n"]), "bounds3": (lower, upper, nullc),
-        }
-    return out
-
-
-def _staged_parquet_files(commit_dir: str) -> list[tuple[str, int]]:
-    """(path, size) for every staged part file — fsio bulk listing, any
-    scheme."""
-    return sorted(
-        (p, sz) for p, sz in fsio.list_files(commit_dir)
-        if os.path.basename(p).startswith("part-") and p.endswith(".parquet")
-    )
-
-
 def _stage_v2_data_files(
     spark: SparkSession,
     replacement: DataFrame,
@@ -5106,8 +4980,6 @@ def _stage_v2_data_files(
         if isinstance(ctx["field_types"].get(fid), str)
     }
     commit_dir = os.path.join(table_path, "data", f"commit-{sid}-{uuid.uuid4().hex[:8]}")
-    remote = fsio.has_scheme(table_path)
-    data_entries: list[dict] = []
     if part_struct_names:
         ptcols = [f"__pt_{i}" for i in range(len(part_struct_names))]
         with_pt = replacement.select(
@@ -5143,84 +5015,18 @@ def _stage_v2_data_files(
         # this is the standard dynamic-partition-write shuffle.
         rep = rep.repartition(F.col("__pid"))
         rep.write.partitionBy("__pid").mode("overwrite").parquet(commit_dir)
-        tup_of = {pid: tup for tup, pid in pid_of.items()}
-        if remote:
-            # scheme'd staging: fsio bulk listing + ONE distributed
-            # stats job — no posix glob, no per-file footer probe
-            listed = _staged_parquet_files(commit_dir)
-            stats = (
-                _staged_stats_spark(spark, commit_dir, bounds_spec)
-                if listed else {}
-            )
-            for full, sz in listed:
-                rel = fsio.relativize(full, commit_dir)
-                if rel is None:
-                    raise RuntimeError(
-                        f"staged {full!r} is not under {commit_dir!r}"
-                    )
-                pid = int(rel.split("/", 1)[0].split("=", 1)[1])
-                pdict = dict(zip(part_struct_names, tup_of[pid]))
-                # rel-path key (basenames collide across __pid dirs);
-                # a key the successful job omitted is a zero-row part
-                st = stats.get(rel) or stats.get(unquote(rel)) or {}
-                data_entries.append(
-                    _v2_entry(full, content=0, seq=new_seq, snapshot_id=sid,
-                              partition=pdict,
-                              record_count=st.get("rows", 0),
-                              file_size=sz,
-                              bounds3=st.get("bounds3") or ([], [], []))
-                )
-        else:
-            staged = sorted(glob.glob(os.path.join(commit_dir, "__pid=*", "part-*.parquet")))
-            spark_counts = bool(staged) and _schema_has_variant(ctx)
-            var_counts = _parquet_counts_via_spark(spark, staged) if spark_counts else {}
-
-            def _rc(p: str) -> int | None:
-                # a zero-row part file yields NO count row: missing = 0
-                return var_counts.get(os.path.abspath(p), 0) if spark_counts else None
-
-            for d in sorted(glob.glob(os.path.join(commit_dir, "__pid=*"))):
-                pid = int(os.path.basename(d).split("=", 1)[1])
-                pdict = dict(zip(part_struct_names, tup_of[pid]))
-                data_entries.extend(
-                    _v2_entry(p, content=0, seq=new_seq, snapshot_id=sid,
-                              partition=pdict, bounds_spec=bounds_spec,
-                              record_count=_rc(p))
-                    for p in sorted(glob.glob(os.path.join(d, "part-*.parquet")))
-                )
+        partition_of = _pid_partitions(
+            commit_dir, part_struct_names,
+            {pid: tup for tup, pid in pid_of.items()},
+        )
     else:
         replacement.write.mode("overwrite").parquet(commit_dir)
-        if remote:
-            listed = _staged_parquet_files(commit_dir)
-            stats = (
-                _staged_stats_spark(spark, commit_dir, bounds_spec)
-                if listed else {}
-            )
-            data_entries = [
-                _v2_entry(full, content=0, seq=new_seq, snapshot_id=sid,
-                          record_count=(
-                              stats.get(fsio.relativize(full, commit_dir)) or {}
-                          ).get("rows", 0),
-                          file_size=sz,
-                          bounds3=(
-                              stats.get(fsio.relativize(full, commit_dir)) or {}
-                          ).get("bounds3")
-                          or ([], [], []))
-                for full, sz in listed
-            ]
-        else:
-            staged = sorted(glob.glob(os.path.join(commit_dir, "part-*.parquet")))
-            spark_counts = bool(staged) and _schema_has_variant(ctx)
-            var_counts = _parquet_counts_via_spark(spark, staged) if spark_counts else {}
-            data_entries = [
-                _v2_entry(p, content=0, seq=new_seq, snapshot_id=sid,
-                          bounds_spec=bounds_spec,
-                          record_count=(
-                              var_counts.get(os.path.abspath(p), 0)
-                              if spark_counts else None
-                          ))
-                for p in staged
-            ]
+        partition_of = None
+    data_entries = _parquet_entries(
+        spark, file_stats.part_files(commit_dir),
+        variant=_schema_has_variant(ctx), partition_of=partition_of,
+        content=0, seq=new_seq, snapshot_id=sid, bounds_spec=bounds_spec,
+    )
     if ctx.get("format_version", 2) >= 3:
         # v3 row lineage: each data file gets a first_row_id block
         # [base, base + record_count) carved sequentially from the
@@ -5488,8 +5294,6 @@ def _v2_row_level_commit(
 ) -> int | None:
     import time as _time
     import uuid
-
-    import pyarrow.parquet as pq
 
     # Partitioned tables: delete files belong to a partition spec like
     # data files (spec "Delete files"), so every delete/data file this
@@ -5780,7 +5584,6 @@ def _v2_row_level_commit(
         del_dir = os.path.join(
             table_path, "data", f"delete-{sid}-{uuid.uuid4().hex[:8]}"
         )
-        delete_entries: list[dict] = []
         if fmt_version >= 3:
             # v3: row-level deletes are DELETION VECTORS (spec v3 —
             # parquet position-delete files must not be written). Per
@@ -5813,90 +5616,53 @@ def _v2_row_level_commit(
                 )
                 for r in sorted(dv_rows, key=lambda r: r["data_fp"])
             ]
-        elif part_fields:
-            # Route each matched (file, pos) to its data file's partition
-            # (broadcast map join, one row per file — metadata-sized) and
-            # write partitionBy(__pid): ONE distributed job, one output
-            # directory per partition, each delete file spec-scoped to
-            # exactly one partition tuple. Dir names carry only the dense
-            # integer pid, so driver-side mapping back to typed partition
-            # values never parses data values from paths.
-            pid_rows = [
-                (fp, _pid(tuple(part.get(n) for n in part_struct_names)))
-                for fp, part in sorted(data_parts.items())
-            ]
-            pid_df = spark.createDataFrame(pid_rows, "__pid_fp string, __pid int")
-            matches = matches.join(
-                F.broadcast(pid_df), matches["file_path"] == pid_df["__pid_fp"]
-            ).drop("__pid_fp")
-            (
-                matches.repartitionByRange(
-                    F.col("__pid"), F.col("file_path"), F.col("pos")
-                )
-                .sortWithinPartitions("__pid", "file_path", "pos")
-                .write.partitionBy("__pid")
-                .mode("overwrite")
-                .parquet(del_dir)
-            )
-            tup_of = {pid: tup for tup, pid in pid_of.items()}
-            if fsio.has_scheme(table_path):
-                listed = _staged_parquet_files(del_dir)
-                counts = _parquet_counts_via_spark(
-                    spark, [p for p, _sz in listed]
-                ) if listed else {}
-
-                def _cnt(p):
-                    return counts.get(re.sub(r"^file:(//)?", "", p), 0)
-
-                for full, sz in listed:
-                    rel = full.split(f"{os.path.basename(del_dir)}/", 1)[1]
-                    pid = int(rel.split("/", 1)[0].split("=", 1)[1])
-                    if _cnt(full) <= 0:
-                        continue
-                    pdict = dict(zip(part_struct_names, tup_of[pid]))
-                    delete_entries.append(
-                        _v2_entry(full, content=1, seq=new_seq,
-                                  snapshot_id=sid, partition=pdict,
-                                  record_count=_cnt(full), file_size=sz)
-                    )
-            else:
-                for d in sorted(glob.glob(os.path.join(del_dir, "__pid=*"))):
-                    pid = int(os.path.basename(d).split("=", 1)[1])
-                    pdict = dict(zip(part_struct_names, tup_of[pid]))
-                    delete_entries.extend(
-                        _v2_entry(
-                            p, content=1, seq=new_seq, snapshot_id=sid, partition=pdict
-                        )
-                        for p in sorted(glob.glob(os.path.join(d, "part-*.parquet")))
-                        if pq.ParquetFile(p).metadata.num_rows > 0  # footer read only
-                    )
         else:
-            (
-                matches.repartitionByRange(F.col("file_path"), F.col("pos"))
-                .sortWithinPartitions("file_path", "pos")
-                .write.mode("overwrite")
-                .parquet(del_dir)
-            )
-            if fsio.has_scheme(table_path):
-                listed = _staged_parquet_files(del_dir)
-                counts = _parquet_counts_via_spark(
-                    spark, [p for p, _sz in listed]
-                ) if listed else {}
-                delete_entries = [
-                    _v2_entry(full, content=1, seq=new_seq, snapshot_id=sid,
-                              record_count=counts.get(
-                                  re.sub(r"^file:(//)?", "", full), 0
-                              ),
-                              file_size=sz)
-                    for full, sz in listed
-                    if counts.get(re.sub(r"^file:(//)?", "", full), 0) > 0
+            if part_fields:
+                # Route each matched (file, pos) to its data file's partition
+                # (broadcast map join, one row per file — metadata-sized) and
+                # write partitionBy(__pid): ONE distributed job, one output
+                # directory per partition, each delete file spec-scoped to
+                # exactly one partition tuple. Dir names carry only the dense
+                # integer pid, so driver-side mapping back to typed partition
+                # values never parses data values from paths.
+                pid_rows = [
+                    (fp, _pid(tuple(part.get(n) for n in part_struct_names)))
+                    for fp, part in sorted(data_parts.items())
                 ]
+                pid_df = spark.createDataFrame(pid_rows, "__pid_fp string, __pid int")
+                matches = matches.join(
+                    F.broadcast(pid_df), matches["file_path"] == pid_df["__pid_fp"]
+                ).drop("__pid_fp")
+                (
+                    matches.repartitionByRange(
+                        F.col("__pid"), F.col("file_path"), F.col("pos")
+                    )
+                    .sortWithinPartitions("__pid", "file_path", "pos")
+                    .write.partitionBy("__pid")
+                    .mode("overwrite")
+                    .parquet(del_dir)
+                )
+                partition_of = _pid_partitions(
+                    del_dir, part_struct_names,
+                    {pid: tup for tup, pid in pid_of.items()},
+                )
             else:
-                delete_entries = [
-                    _v2_entry(p, content=1, seq=new_seq, snapshot_id=sid)
-                    for p in sorted(glob.glob(os.path.join(del_dir, "part-*.parquet")))
-                    if pq.ParquetFile(p).metadata.num_rows > 0  # footer read only
-                ]
+                (
+                    matches.repartitionByRange(F.col("file_path"), F.col("pos"))
+                    .sortWithinPartitions("file_path", "pos")
+                    .write.mode("overwrite")
+                    .parquet(del_dir)
+                )
+                partition_of = None
+            # zero-row parts (empty range partitions) are not delete files
+            delete_entries = [
+                e for e in _parquet_entries(
+                    spark, file_stats.part_files(del_dir), variant=False,
+                    partition_of=partition_of,
+                    content=1, seq=new_seq, snapshot_id=sid,
+                )
+                if e["data_file"]["record_count"] > 0
+            ]
         if not delete_entries:
             fsio.delete(del_dir, recursive=True)
             if replacement is None:

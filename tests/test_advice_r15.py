@@ -1,15 +1,8 @@
 """Round-15 regression pins for the r14 ADVICE findings:
 
-1. (high) The distributed staging-stats jobs (delta_py._stats_spark_job,
-   iceberg_py._staged_stats_spark) must key per-file stats by the
-   STAGING-RELATIVE path, not the basename: Spark partitionBy reuses
-   identical part basenames across partition dirs, so a basename key
-   collapses colliding files — misattributed min/max can make stats
-   skipping silently drop files that DO contain matching rows, and
-   collapsed numRecords corrupts row-id allocation.
-2. (med) A staged file missing from the Iceberg stats map must not be
-   silently committed with record_count=0 unless it genuinely has zero
-   rows; a FAILED stats job must propagate, not dissolve into {}.
+1. (high) per-file stats keyed by the staging-relative path, and
+2. (med) a failed stats read propagates — both pinned in
+   test_stats_skip.py with the other file-stats pins.
 3. (low) _v2_row_level_commit's replacement data manifest must carry
    the schema-id stamp like every other data-manifest write, so
    UPDATE/MERGE-added files keep the zero-footer-probe plan path.
@@ -27,8 +20,6 @@
 from __future__ import annotations
 
 import glob
-import json
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -41,128 +32,17 @@ from gcs2postgres_spark.sources.delta_py import (
     write_delta,
 )
 from gcs2postgres_spark.sources.iceberg_py import (
-    _staged_stats_spark,
     append_iceberg_v2,
     create_iceberg_v2_table,
     read_iceberg_py,
     update_where,
 )
-from gcs2postgres_spark.sources.logstore import (
-    FakeObjectStore,
-    set_log_store_override,
-)
-
-
-@pytest.fixture
-def fake_store():
-    store = FakeObjectStore()
-    set_log_store_override(store)
-    yield store
-    set_log_store_override(None)
-
-
-@pytest.fixture
-def one_shuffle_partition(spark):
-    """Force every staged write through ONE task so identical part-file
-    basenames land in EVERY partition directory — the exact collision
-    the basename-keyed stats map collapsed."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    yield
-    spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def _skewed_df(spark):
-    # partition p has p+1 rows (1..4): any stats collapse across
-    # partition dirs misattributes BOTH bounds and numRecords
+    # partition p has p+1 rows (1..4)
     rows = [(p, i, p * 100 + i) for p in range(4) for i in range(p + 1)]
     return spark.createDataFrame(rows, "p int, i int, v int")
-
-
-# ---------------------------------------------------------------------------
-# 1. (high) stats keyed by staging-relative path, not basename
-# ---------------------------------------------------------------------------
-
-def test_partitioned_remote_delta_stats_per_file(spark, tmp_path, fake_store,
-                                                 one_shuffle_partition):
-    t = f"file://{tmp_path}/t_part_stats"
-    df = _skewed_df(spark).repartition(1)  # one task -> colliding basenames
-    write_delta(df, t, "overwrite", partition_by=["p"],
-                timestamp_ms=1_700_000_000_000)
-    log = fsio.read_text(fsio.join(t, "_delta_log", f"{0:020d}.json"))
-    adds = [json.loads(ln)["add"] for ln in log.splitlines() if '"add"' in ln]
-    assert len(adds) == 4
-    # sanity: the collision actually happened (same basename everywhere)
-    basenames = {a["path"].rsplit("/", 1)[-1] for a in adds}
-    assert len(basenames) == 1, "fixture no longer collides basenames"
-    for a in adds:
-        p = int(a["partitionValues"]["p"])
-        st = json.loads(a["stats"])
-        assert st["numRecords"] == p + 1, (p, st)
-        assert st["minValues"]["v"] == p * 100
-        assert st["maxValues"]["v"] == p * 100 + p
-    # end-to-end: stats skipping with per-file bounds returns exact rows
-    got = read_delta_py(spark, t, stats_filter={"v": (300, None)})
-    assert sorted(r["v"] for r in got.where("v >= 300").collect()) == [
-        300, 301, 302, 303,
-    ]
-
-
-def test_partitioned_remote_iceberg_record_counts(spark, tmp_path, fake_store,
-                                                  one_shuffle_partition):
-    t = f"file://{tmp_path}/t_ice_part_stats"
-    df = _skewed_df(spark)
-    create_iceberg_v2_table(df.schema, t, partition_spec=[("p", "identity")])
-    append_iceberg_v2(spark, t, df, snapshot_ts_ms=1_700_000_000_000)
-    manifests = sorted(glob.glob(f"{tmp_path}/t_ice_part_stats/metadata/"
-                                 "manifest-data-*.avro"))
-    assert manifests
-    entries = []
-    for m in manifests:
-        _s, rows, _meta = read_avro_file_meta(m)
-        entries.extend(rows)
-    by_p: dict[int, int] = {}
-    for e in entries:
-        p = e["data_file"]["partition"]["p"]
-        by_p[p] = by_p.get(p, 0) + int(e["data_file"]["record_count"])
-    assert by_p == {0: 1, 1: 2, 2: 3, 3: 4}, by_p
-    got = read_iceberg_py(spark, t)
-    assert got.count() == 10
-
-
-def test_partitioned_remote_iceberg_dml_stats(spark, tmp_path, fake_store,
-                                              one_shuffle_partition):
-    """UPDATE across all partitions: replacement files staged per
-    partition keep per-file record counts (the advice's 3657 site)."""
-    t = f"file://{tmp_path}/t_ice_dml_stats"
-    df = _skewed_df(spark)
-    create_iceberg_v2_table(df.schema, t, partition_spec=[("p", "identity")])
-    append_iceberg_v2(spark, t, df, snapshot_ts_ms=1_700_000_000_000)
-    update_where(spark, t, "i = 0", {"v": "v + 1000"},
-                 snapshot_ts_ms=1_700_000_001_000)
-    got = read_iceberg_py(spark, t)
-    assert got.count() == 10
-    assert got.where("v >= 1000").count() == 4  # one i=0 row per p
-    # v3-style lineage correctness depends on record_count: every
-    # replacement entry must carry its own (nonzero) count
-    manifests = sorted(glob.glob(f"{tmp_path}/t_ice_dml_stats/metadata/"
-                                 "manifest-data-*.avro"))
-    newest = max(manifests, key=os.path.getmtime)
-    _s, rows, _m = read_avro_file_meta(newest)
-    assert rows and all(int(r["data_file"]["record_count"]) > 0 for r in rows)
-    total = sum(int(r["data_file"]["record_count"]) for r in rows)
-    assert total == 4, total
-
-
-# ---------------------------------------------------------------------------
-# 2. (med) failed stats job propagates; no silent record_count=0
-# ---------------------------------------------------------------------------
-
-def test_staged_stats_failure_propagates(spark, tmp_path):
-    with pytest.raises(Exception):
-        _staged_stats_spark(
-            spark, f"file://{tmp_path}/nonexistent-staging-dir", {}
-        )
 
 
 # ---------------------------------------------------------------------------

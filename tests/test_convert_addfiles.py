@@ -85,7 +85,7 @@ def test_convert_remote_scheme(spark, tmp_path):
         convert_to_delta(spark, d, timestamp_ms=1_700_000_000_000)
         got = read_delta_py(spark, d)
         assert got.count() == 12
-        # stats came from the distributed job, commit through the seam
+        # stats came from the files' footers, commit through the seam
         log = fsio.read_text(fsio.join(d, "_delta_log", f"{0:020d}.json"))
         adds = [json.loads(x)["add"] for x in log.splitlines() if '"add"' in x]
         assert adds and all("stats" in a for a in adds)

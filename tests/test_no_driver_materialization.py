@@ -61,11 +61,6 @@ ALLOWED = {
         'clone.agg(F.sum("k"))',
     ],
     "sources/delta_py.py": [
-        # staged-file stats job (r14): ONE aggregate row per file staged
-        # by THIS append — bounded by the append's file count (the same
-        # O(files) planning bound every Delta writer pays to emit add
-        # actions); the aggregation itself runs distributed
-        'groupBy("__f")',
         # Delta log replay collects (path, partitionValues[, DV
         # descriptor]) per live file — metadata, one small row per data
         # file, never table data; the same bound every Delta client pays
@@ -97,12 +92,6 @@ ALLOWED = {
     ],
 }
 
-ALLOWED["sources/iceberg_py.py"].append(
-    # staged-file stats job (r14): ONE row per file staged by this
-    # commit (bounds + record counts) — the O(files) manifest-entry
-    # bound every Iceberg committer pays; aggregation is distributed
-    'groupBy("__f")'
-)
 ALLOWED["sources/iceberg_py.py"].append(
     # _stage_v2_data_files routing map: DISTINCT **TRANSFORMED**
     # partition tuples (bucket/truncate/day results) — one row per

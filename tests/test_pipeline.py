@@ -369,3 +369,26 @@ def test_observation_metrics_on_load(spark, sf_dir):
     ).collect()[0]
     assert got["n_rows"] == want["n_rows"]
     assert abs(got["total_qty"] - want["total_qty"]) < 1e-6
+
+
+def test_transfer_rows_match_source_count(spark, sf_dir, tmp_path):
+    # TransferResult.rows is observed on the sink write itself (no job
+    # reads the sink back); it must equal the source's own count, also
+    # for a source with no rows
+    from gcs2postgres_spark.pipeline import transfer_file
+
+    src = f"{sf_dir}/lineitem.parquet"
+    want = spark.read.parquet(src).count()
+    got = transfer_file(
+        spark, src, "lineitem_out",
+        [("l_orderkey", "int8"), ("l_quantity", "numeric")],
+        str(tmp_path / "sink"),
+    )
+    assert got.ok and got.rows == want > 0
+    assert spark.read.parquet(str(tmp_path / "sink" / "lineitem_out")).count() == want
+
+    empty = str(tmp_path / "empty_src")
+    spark.read.parquet(src).limit(0).write.parquet(empty)
+    got = transfer_file(spark, empty, "empty_out", [("l_orderkey", "int8")],
+                        str(tmp_path / "sink"), fmt="parquet")
+    assert got.ok and got.rows == 0

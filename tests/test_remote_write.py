@@ -75,6 +75,14 @@ class _GuardedStore(FakeObjectStore):
         finally:
             _ALLOW.ok = False
 
+    def read_range(self, path, offset, length):
+        # the store's ranged read IS the seam footer probes go through
+        _ALLOW.ok = True
+        try:
+            return super().read_range(path, offset, length)
+        finally:
+            _ALLOW.ok = False
+
 
 @pytest.fixture
 def tripwired_store(monkeypatch):
@@ -128,7 +136,8 @@ def test_remote_write_read_roundtrip_tripwired(spark, tmp_path, tripwired_store)
     assert got.count() == 15
     assert read_delta_py(spark, t, version_as_of=0).count() == 10
     assert tripwired_store.puts >= 2  # commits went through the seam
-    # adds carry distributed-job stats and live under data-*/ prefixes
+    # adds carry footer stats (ranged reads through the store seam)
+    # and live under data-*/ prefixes
     log = fsio.read_text(
         fsio.join(t, "_delta_log", f"{0:020d}.json")
     )
@@ -291,9 +300,23 @@ def test_remote_iceberg_create_append_read_tripwired(spark, tmp_path, tripwired_
     append_iceberg_v2(spark, t, _ice_df(spark, 10, 15), snapshot_ts_ms=1_700_000_001_000)
     got = read_iceberg_py(spark, t)
     assert got.count() == 15
-    # manifest entries carry distributed-job bounds: a stats filter
-    # prunes (planning-time) and the data still reads exactly
+    # manifest entries carry footer bounds: a stats filter prunes
+    # (planning-time) and the data still reads exactly
     assert read_iceberg_py(spark, t, stats_filter={"k": (1000, None)}).count() == 0
+
+
+def test_remote_iceberg_v1_append_twice(spark, tmp_path, fake_store):
+    """The v1 writer keeps scheme'd manifest-list / manifest / data
+    paths as URIs: joining them onto the cwd sent the next append
+    looking for '<cwd>/file:/…/snap-1.avro'."""
+    from gcs2postgres_spark.sources.iceberg_py import read_iceberg_py, write_iceberg
+
+    t = _uri(tmp_path, "ice_v1")
+    write_iceberg(_ice_df(spark, 0, 10), t, "append", snapshot_ts_ms=1_700_000_000_000)
+    write_iceberg(_ice_df(spark, 10, 20), t, "append", snapshot_ts_ms=1_700_000_001_000)
+    got = read_iceberg_py(spark, t)
+    assert got.count() == 20
+    assert sorted(r["k"] for r in got.collect()) == list(range(20))
 
 
 def test_remote_iceberg_dml_and_merge(spark, tmp_path, fake_store):

@@ -12,6 +12,12 @@ contract: missing stats, unknown columns, or undecodable values KEEP
 the file; callers still apply the predicate as a row filter. At 100 TB
 this is the manifest-level min/max skip every production scan planner
 performs — zero I/O for files whose recorded range cannot match.
+
+Both formats take their per-file stats from ONE footer reader
+(sources/file_stats.py) on every scheme; the pins below check that a
+posix and a ``file://`` append record identical stats, that scheme'd
+footers are fetched as bounded ranged reads, that stats stay keyed per
+file across partition directories, and that a failed read raises.
 """
 
 from __future__ import annotations
@@ -20,10 +26,15 @@ import datetime as dt
 import glob
 import json
 import os
+import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
+from gcs2postgres_spark.sources import file_stats, fsio
+from gcs2postgres_spark.sources.avro_py import read_avro_file_meta
 from gcs2postgres_spark.sources.delta_py import (
+    _assign_base_row_ids,
     _stats_skip_file,
     read_delta_py,
     replay_head_state,
@@ -34,8 +45,15 @@ from gcs2postgres_spark.sources.iceberg_py import (
     _bound_decode,
     _bound_encode,
     _storage_value,
+    append_iceberg_v2,
+    create_iceberg_v2_table,
     read_iceberg_py,
+    update_where,
     write_iceberg_v2_fixture,
+)
+from gcs2postgres_spark.sources.logstore import (
+    FakeObjectStore,
+    set_log_store_override,
 )
 
 
@@ -160,3 +178,279 @@ def test_iceberg_temporal_stats_filter(spark, tmp_path):
     scanned = read_iceberg_py(spark, t, stats_filter={"ts": (cut, None)})
     assert scanned.count() == 50  # one of four range files survives
     assert scanned.filter(F.col("ts") >= F.lit(cut)).count() == 50
+
+
+@pytest.fixture
+def fake_store():
+    store = FakeObjectStore()
+    set_log_store_override(store)
+    yield store
+    set_log_store_override(None)
+
+
+@pytest.fixture
+def one_shuffle_partition(spark):
+    """Force every staged write through ONE task so identical part-file
+    basenames land in EVERY partition directory — the exact collision
+    the basename-keyed stats map collapsed."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    yield
+    spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def _skewed_df(spark):
+    # partition p has p+1 rows (1..4): any stats collapse across
+    # partition dirs misattributes BOTH bounds and numRecords
+    rows = [(p, i, p * 100 + i) for p in range(4) for i in range(p + 1)]
+    return spark.createDataFrame(rows, "p int, i int, v int")
+
+
+# ---------------------------------------------------------------------------
+# per-file stats keyed by staging-relative path, not basename
+# ---------------------------------------------------------------------------
+
+def test_partitioned_remote_delta_stats_per_file(spark, tmp_path, fake_store,
+                                                 one_shuffle_partition):
+    t = f"file://{tmp_path}/t_part_stats"
+    df = _skewed_df(spark).repartition(1)  # one task -> colliding basenames
+    write_delta(df, t, "overwrite", partition_by=["p"],
+                timestamp_ms=1_700_000_000_000)
+    log = fsio.read_text(fsio.join(t, "_delta_log", f"{0:020d}.json"))
+    adds = [json.loads(ln)["add"] for ln in log.splitlines() if '"add"' in ln]
+    assert len(adds) == 4
+    # sanity: the collision actually happened (same basename everywhere)
+    basenames = {a["path"].rsplit("/", 1)[-1] for a in adds}
+    assert len(basenames) == 1, "fixture no longer collides basenames"
+    for a in adds:
+        p = int(a["partitionValues"]["p"])
+        st = json.loads(a["stats"])
+        assert st["numRecords"] == p + 1, (p, st)
+        assert st["minValues"]["v"] == p * 100
+        assert st["maxValues"]["v"] == p * 100 + p
+    # end-to-end: stats skipping with per-file bounds returns exact rows
+    got = read_delta_py(spark, t, stats_filter={"v": (300, None)})
+    assert sorted(r["v"] for r in got.where("v >= 300").collect()) == [
+        300, 301, 302, 303,
+    ]
+
+
+def test_partitioned_remote_iceberg_record_counts(spark, tmp_path, fake_store,
+                                                  one_shuffle_partition):
+    t = f"file://{tmp_path}/t_ice_part_stats"
+    df = _skewed_df(spark)
+    create_iceberg_v2_table(df.schema, t, partition_spec=[("p", "identity")])
+    append_iceberg_v2(spark, t, df, snapshot_ts_ms=1_700_000_000_000)
+    manifests = sorted(glob.glob(f"{tmp_path}/t_ice_part_stats/metadata/"
+                                 "manifest-data-*.avro"))
+    assert manifests
+    entries = []
+    for m in manifests:
+        _s, rows, _meta = read_avro_file_meta(m)
+        entries.extend(rows)
+    by_p: dict[int, int] = {}
+    for e in entries:
+        p = e["data_file"]["partition"]["p"]
+        by_p[p] = by_p.get(p, 0) + int(e["data_file"]["record_count"])
+    assert by_p == {0: 1, 1: 2, 2: 3, 3: 4}, by_p
+    got = read_iceberg_py(spark, t)
+    assert got.count() == 10
+
+
+def test_partitioned_remote_iceberg_dml_stats(spark, tmp_path, fake_store,
+                                              one_shuffle_partition):
+    """UPDATE across all partitions: replacement files staged per
+    partition keep per-file record counts (the advice's 3657 site)."""
+    t = f"file://{tmp_path}/t_ice_dml_stats"
+    df = _skewed_df(spark)
+    create_iceberg_v2_table(df.schema, t, partition_spec=[("p", "identity")])
+    append_iceberg_v2(spark, t, df, snapshot_ts_ms=1_700_000_000_000)
+    update_where(spark, t, "i = 0", {"v": "v + 1000"},
+                 snapshot_ts_ms=1_700_000_001_000)
+    got = read_iceberg_py(spark, t)
+    assert got.count() == 10
+    assert got.where("v >= 1000").count() == 4  # one i=0 row per p
+    # v3-style lineage correctness depends on record_count: every
+    # replacement entry must carry its own (nonzero) count
+    manifests = sorted(glob.glob(f"{tmp_path}/t_ice_dml_stats/metadata/"
+                                 "manifest-data-*.avro"))
+    newest = max(manifests, key=os.path.getmtime)
+    _s, rows, _m = read_avro_file_meta(newest)
+    assert rows and all(int(r["data_file"]["record_count"]) > 0 for r in rows)
+    total = sum(int(r["data_file"]["record_count"]) for r in rows)
+    assert total == 4, total
+
+
+# ---------------------------------------------------------------------------
+# a failed stats read propagates; no silent record_count=0 / missing stats
+# ---------------------------------------------------------------------------
+
+def test_footer_stats_failure_propagates(spark, tmp_path, fake_store,
+                                         monkeypatch):
+    # a missing staging dir raises instead of listing nothing
+    with pytest.raises(Exception):
+        file_stats.part_files(f"file://{tmp_path}/nonexistent-staging-dir")
+    # an unreadable footer raises, posix and scheme'd
+    bad = tmp_path / "part-00000-bad.parquet"
+    bad.write_bytes(b"PAR1 this is not a parquet file PAR1")
+    for p in (str(bad), f"file://{bad}"):
+        with pytest.raises(Exception):
+            file_stats.read(p)
+    # ... and a commit whose footer read fails commits nothing
+    df = _skewed_df(spark)
+    ti = f"file://{tmp_path}/t_fail_ice"
+    td = f"file://{tmp_path}/t_fail_delta"
+    create_iceberg_v2_table(df.schema, ti)
+    append_iceberg_v2(spark, ti, df, snapshot_ts_ms=1_700_000_000_000)
+    write_delta(df, td, "overwrite", timestamp_ms=1_700_000_000_000)
+
+    def unreadable(path, size=None):
+        raise OSError(f"footer of {path} unreadable")
+
+    monkeypatch.setattr(file_stats, "footer", unreadable)
+    with pytest.raises(OSError, match="unreadable"):
+        append_iceberg_v2(spark, ti, df, snapshot_ts_ms=1_700_000_001_000)
+    with pytest.raises(OSError, match="unreadable"):
+        write_delta(df, td, "append", timestamp_ms=1_700_000_001_000)
+    monkeypatch.undo()
+    assert read_iceberg_py(spark, ti).count() == 10
+    assert read_delta_py(spark, td).count() == 10
+
+
+# ---------------------------------------------------------------------------
+# one footer reader: posix and file:// appends record identical stats
+# ---------------------------------------------------------------------------
+
+def _mixed(spark, n=20_000, parts=2):
+    """An all-NULL column, NaN doubles, a timestamp and a non-ASCII
+    string; ``parts`` range files, each far above pyarrow's 64 KiB
+    footer window (so a whole-file read cannot pass for a footer read)."""
+    return (
+        spark.range(0, n, 1, parts)  # contiguous, deterministic splits
+        .select(
+            F.col("id").alias("k"),
+            F.lit(None).cast("string").alias("nothing"),
+            F.when(F.col("id") % 1000 == 7, F.lit(float("nan")))
+            .otherwise(F.col("id") / 8)
+            .alias("d"),
+            F.timestamp_seconds(F.col("id") + 1_700_000_000).alias("ts"),
+            F.concat(
+                F.lit("ünï-"), F.sha2(F.col("id").cast("string"), 256)
+            ).alias("s"),
+        )
+    )
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted under a fresh job group."""
+    sc = spark.sparkContext
+    group = f"stats-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _delta_stats(spark, t):
+    live, _ = replay_head_state(spark, t)
+    return sorted(a["stats"] for a in live.values())
+
+
+def _iceberg_bounds(t):
+    out = []
+    for m in glob.glob(f"{fsio.strip_scheme(t)}/metadata/manifest-data-*.avro"):
+        _s, rows, _m = read_avro_file_meta(m)
+        for r in rows:
+            f = r["data_file"]
+            out.append(
+                (
+                    f["record_count"],
+                    *(
+                        [(e["key"], e["value"]) for e in f.get(k) or ()]
+                        for k in ("lower_bounds", "upper_bounds",
+                                  "null_value_counts")
+                    ),
+                )
+            )
+    return sorted(out)
+
+
+def test_posix_and_remote_appends_record_identical_stats(spark, tmp_path,
+                                                         fake_store):
+    df = _mixed(spark)
+    posix = {"delta": str(tmp_path / "pd"), "iceberg": str(tmp_path / "pi")}
+    remote = {k: f"file://{tmp_path}/r{k[0]}" for k in posix}
+    for t in (posix["iceberg"], remote["iceberg"]):
+        create_iceberg_v2_table(df.schema, t)
+
+    def append(fmt, t):
+        if fmt == "delta":
+            write_delta(df, t, "overwrite", timestamp_ms=1_700_000_000_000)
+        else:
+            append_iceberg_v2(spark, t, df, snapshot_ts_ms=1_700_000_000_000)
+
+    jobs = {}
+    for fmt in ("delta", "iceberg"):
+        jobs[fmt, "posix"] = _jobs(spark, lambda: append(fmt, posix[fmt]))
+    # posix footers are opened directly, never through the store
+    assert fake_store.range_reads == 0
+    for fmt in ("delta", "iceberg"):
+        jobs[fmt, "remote"] = _jobs(spark, lambda: append(fmt, remote[fmt]))
+    # the same code on every scheme: no extra stats job for file://
+    for fmt in ("delta", "iceberg"):
+        assert jobs[fmt, "remote"] == jobs[fmt, "posix"], jobs
+
+    # scheme'd stats came from bounded footer reads, not whole files
+    data_bytes = sum(
+        sz
+        for t in remote.values()
+        for p, sz in fsio.list_files(t)
+        if p.endswith(".parquet")
+    )
+    assert fake_store.range_reads >= 4  # 2 files per format
+    assert fake_store.bytes_ranged < data_bytes / 4, (
+        fake_store.bytes_ranged, data_bytes,
+    )
+
+    stats = _delta_stats(spark, posix["delta"])
+    assert stats == _delta_stats(spark, remote["delta"])
+    parsed = [json.loads(s) for s in stats]
+    assert sum(st["numRecords"] for st in parsed) == 20_000
+    for st in parsed:
+        n = st["numRecords"]
+        assert st["nullCount"]["nothing"] == n  # all-NULL: count, no range
+        assert "nothing" not in st["minValues"]
+        assert st["minValues"]["s"].startswith("ünï-")
+        assert st["minValues"]["ts"] < st["maxValues"]["ts"]
+
+    bounds = _iceberg_bounds(posix["iceberg"])
+    assert bounds == _iceberg_bounds(remote["iceberg"])
+    assert sum(b[0] for b in bounds) == 20_000
+    nothing_id = 2  # field ids follow column order
+    for rc, lower, _upper, nulls in bounds:
+        assert dict(nulls)[nothing_id] == rc
+        assert nothing_id not in dict(lower)
+
+
+def test_stats_less_add_row_count_is_a_ranged_read(spark, tmp_path,
+                                                   fake_store):
+    """Row tracking's fallback for an add without stats reads the
+    file's row count from its footer: a bounded ranged read, never a
+    download of the whole data object."""
+    t = f"file://{tmp_path}/t_rowtrack"
+    write_delta(_mixed(spark).coalesce(1), t, "overwrite",
+                timestamp_ms=1_700_000_000_000)
+    live, _ = replay_head_state(spark, t)
+    (add,) = live.values()
+    add = {k: v for k, v in add.items() if k != "stats"}
+    before = fake_store.bytes_ranged
+    dm = _assign_base_row_ids(spark, t, [{"add": add}], 1)
+    hwm = json.loads(dm["domainMetadata"]["configuration"])[
+        "rowIdHighWaterMark"
+    ]
+    assert hwm - add["baseRowId"] + 1 == 20_000
+    assert 0 < fake_store.bytes_ranged - before < add["size"], (
+        fake_store.bytes_ranged - before, add["size"],
+    )
