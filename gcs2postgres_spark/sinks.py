@@ -120,9 +120,12 @@ copy_csv_cell, copy_csv_line = _copy_serializers()
 
 def make_copy_partition(dsn: str, table: str, columns: list[str], connect_factory=None):
     """Build the per-partition COPY function (partition iterator → CSV
-    buffer → COPY ... FROM STDIN). Factory-nested so cloudpickle ships it
-    by value to executors (workers may not have this package on their
-    sys.path — same reasoning as operators/multimodal.py _make_decoder).
+    lines → COPY ... FROM STDIN). The connection opens on the first row
+    (an empty partition never connects) and each ~1 MiB of lines is
+    sent as it fills, so a partition is never held whole in memory.
+    Factory-nested so cloudpickle ships it by value to executors
+    (workers may not have this package on their sys.path — same
+    reasoning as operators/multimodal.py _make_decoder).
 
     ``connect_factory`` defaults to ``psycopg.connect`` (imported lazily
     ON THE EXECUTOR); tests inject a mock with the same context-manager
@@ -136,25 +139,32 @@ def make_copy_partition(dsn: str, table: str, columns: list[str], connect_factor
     _serialize = copy_csv_line
 
     def copy_partition(rows) -> None:
-        import io
+        import itertools
 
         connect = connect_factory
         if connect is None:
             import psycopg
 
             connect = psycopg.connect
-        buf = io.StringIO()
-        n = 0
-        for row in rows:
-            buf.write(_serialize(row))
-            n += 1
-        if n == 0:
+        rows = iter(rows)
+        first = next(rows, None)
+        if first is None:
             return  # empty partition: never open a connection
-        buf.seek(0)
         with connect(dsn) as conn, conn.cursor() as cur:
+            # an exception below leaves the copy context with it, so
+            # the server gets CopyFail and loads nothing
             with cur.copy(stmt) as cp:
-                while chunk := buf.read(1 << 20):
-                    cp.write(chunk)
+                buf: list[str] = []
+                size = 0
+                for row in itertools.chain((first,), rows):
+                    line = _serialize(row)
+                    buf.append(line)
+                    size += len(line)
+                    if size >= 1 << 20:
+                        cp.write("".join(buf))
+                        buf, size = [], 0
+                if buf:
+                    cp.write("".join(buf))
             conn.commit()
 
     return copy_partition

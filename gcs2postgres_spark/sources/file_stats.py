@@ -24,6 +24,7 @@ check the schema first and take that case elsewhere.
 
 from __future__ import annotations
 
+import math
 import os
 from dataclasses import dataclass
 
@@ -37,10 +38,12 @@ class FileStats:
     timestamps, ``date``, ``str``, ``bytes``, ``Decimal``, ...).
 
     A column is absent from ``mins``/``maxs`` when a row group holding
-    non-null values lacks min/max statistics (an all-NULL row group
-    contributes no range and needs none), and absent from ``nulls``
-    when a row group lacks a null count. Absent means unknown, which
-    every reader treats as "cannot skip". Nested leaves are left out."""
+    non-null values lacks min/max statistics or has a NaN min or max
+    (an all-NULL row group contributes no range and needs none; a NaN
+    bound is not valid stats JSON and the Iceberg spec forbids it), and
+    absent from ``nulls`` when a row group lacks a null count. Absent
+    means unknown, which every reader treats as "cannot skip". Nested
+    leaves are left out."""
 
     rows: int
     mins: dict
@@ -48,9 +51,17 @@ class FileStats:
     nulls: dict
 
 
+def _is_nan(v) -> bool:
+    return isinstance(v, float) and math.isnan(v)
+
+
 def part_files(path: str) -> list[tuple[str, int]]:
     """(full path, size) of every Spark part file under ``path``,
-    sorted — one bulk listing on any scheme."""
+    sorted — one bulk listing on any scheme. A missing directory
+    raises ``FileNotFoundError`` (a posix walk would list nothing, and
+    the commit would then add no files)."""
+    if not fsio.isdir(path):
+        raise FileNotFoundError(f"staging directory {path} does not exist")
     return sorted(
         (p, sz) for p, sz in fsio.list_files(path)
         if os.path.basename(p).startswith("part-") and p.endswith(".parquet")
@@ -88,7 +99,9 @@ def read(path: str, size: int | None = None) -> FileStats:
                 no_nulls.add(name)
             else:
                 nulls[name] = nulls.get(name, 0) + n_null
-            if st is not None and st.has_min_max:
+            if st is not None and st.has_min_max and not (
+                _is_nan(st.min) or _is_nan(st.max)
+            ):
                 lo, hi = st.min, st.max
                 mins[name] = lo if name not in mins else min(mins[name], lo)
                 maxs[name] = hi if name not in maxs else max(maxs[name], hi)

@@ -1,9 +1,7 @@
-"""Round-14 regression pins for the r13 ADVICE findings:
+"""Round-14 regression pins for the r13 ADVICE findings (finding 1,
+the timestamp separator in stats-skip comparisons, is pinned in
+tests/test_stats_skip.py):
 
-1. (high) _stats_skip_file must not wrongly skip files when Delta stats
-   record timestamps with a 'T' separator (datetime.isoformat / real
-   delta-spark writers) while the SQL literal uses a space — 'T' > ' '
-   lexicographically, so a naive string compare drops same-day files.
 2. (med) _rewrite_select must not derive file-skip bounds from a WHERE
    clause when the statement can bring in a second relation (JOIN /
    WITH / comma cross join / set ops) — an unqualified conjunct on the
@@ -28,77 +26,10 @@ import os
 import pytest
 
 from gcs2postgres_spark.sources.delta_py import (
-    _stats_skip_file,
-    read_delta_py,
     set_delta_property,
     write_delta,
 )
 from gcs2postgres_spark.sources.predicate_bounds import bounds_from_predicate
-
-
-# ---------------------------------------------------------------------------
-# 1. timestamp separator in stats-skip comparisons
-# ---------------------------------------------------------------------------
-
-def _add(mn, mx):
-    return {"stats": json.dumps({
-        "numRecords": 2,
-        "minValues": {"ts": mn},
-        "maxValues": {"ts": mx},
-        "nullCount": {"ts": 0},
-    })}
-
-
-def test_stats_skip_timestamp_separator_not_wrongly_skipped():
-    # file covers the whole day (T-separated stats, as isoformat emits);
-    # bound is a same-day space-separated SQL literal: rows DO match
-    a = _add("2024-06-01T00:00:00", "2024-06-01T23:59:59")
-    assert _stats_skip_file(a, {"ts": (None, "2024-06-01 12:00:00")}) is False
-    assert _stats_skip_file(a, {"ts": ("2024-06-01 12:00:00", None)}) is False
-
-
-def test_stats_skip_timestamp_separator_still_prunes():
-    # genuinely disjoint day: skip holds under BOTH raw-lexicographic
-    # and parsed-datetime semantics, so the file is still pruned
-    a = _add("2024-06-02T00:00:00", "2024-06-02T23:59:59")
-    assert _stats_skip_file(a, {"ts": (None, "2024-06-01 12:00:00")}) is True
-    assert _stats_skip_file(a, {"ts": ("2024-06-03 00:00:00", None)}) is True
-
-
-def test_stats_skip_ambiguous_string_column_kept():
-    # space-separated values IN the data vs a T-separated literal: the
-    # temporal reading says skip, but a plain STRING column compares
-    # lexicographically (' ' < 'T') and its rows would match — the two
-    # semantics disagree, so the file must be KEPT
-    a = _add("2024-06-01 13:00:00", "2024-06-01 14:00:00")
-    assert _stats_skip_file(a, {"ts": (None, "2024-06-01T12:00:00")}) is False
-
-
-def test_stats_skip_timestamp_end_to_end(spark, tmp_path):
-    """Same-day upper bound over a real table: no silent row loss."""
-    from pyspark.sql import functions as F
-
-    t = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(1, "2024-06-01 03:00:00"), (2, "2024-06-01 20:00:00")],
-        "k INT, s STRING",
-    ).select("k", F.to_timestamp("s").alias("ts"))
-    write_delta(df.repartition(2, "k"), t, "overwrite")
-    got = read_delta_py(
-        spark, t, stats_filter={"ts": (None, "2024-06-01 12:00:00")}
-    ).where("ts <= timestamp'2024-06-01 12:00:00'")
-    assert [r["k"] for r in got.collect()] == [1]
-
-
-def test_iceberg_storage_value_parses_iso_literals():
-    from gcs2postgres_spark.sources.iceberg_py import _storage_value
-
-    micros = 1_717_243_200_000_000  # 2024-06-01T12:00:00Z
-    assert _storage_value("2024-06-01 12:00:00", "timestamp") == micros
-    assert _storage_value("2024-06-01T12:00:00", "timestamptz") == micros
-    assert _storage_value("2024-06-01", "date") == 19875
-    # unparseable literal stays a string (caller keeps the file)
-    assert _storage_value("not-a-date", "timestamp") == "not-a-date"
 
 
 # ---------------------------------------------------------------------------

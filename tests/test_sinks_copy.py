@@ -82,17 +82,19 @@ def test_serializers_pickle_by_value():
 
 
 class _FakeCopy:
-    def __init__(self, sink):
-        self.sink = sink
+    def __init__(self, log):
+        self.log = log
 
     def __enter__(self):
         return self
 
-    def __exit__(self, *a):
+    def __exit__(self, exc_type, *a):
+        # psycopg sends CopyFail when the block exits with an exception
+        self.log["copy_exit"] = exc_type
         return False
 
     def write(self, chunk):
-        self.sink.append(chunk)
+        self.log.setdefault("chunks", []).append(chunk)
 
 
 class _FakeCursor:
@@ -107,7 +109,7 @@ class _FakeCursor:
 
     def copy(self, stmt):
         self.log["stmt"] = stmt
-        return _FakeCopy(self.log.setdefault("chunks", []))
+        return _FakeCopy(self.log)
 
 
 class _FakeConn:
@@ -178,6 +180,37 @@ def test_copy_partition_empty_iterator_never_connects():
     )
     fn(iter([]))
     assert calls == []
+
+
+def test_copy_partition_streams_bounded_buffers():
+    """A partition larger than one buffer is sent in ~1 MiB writes as
+    rows arrive, never held whole; the payload is the same byte for
+    byte, and a failure mid-partition aborts the COPY."""
+    rows = [(i, f"row-{i:08d}-" + "x" * 60, None) for i in range(60_000)]
+    old_payload = "".join(copy_csv_line(r) for r in rows)
+    assert len(old_payload) > 3 * (1 << 20)
+    longest = max(len(copy_csv_line(r)) for r in rows)
+    log: dict = {}
+    fn = make_copy_partition(
+        "dsn", "t", ["a", "b", "c"], connect_factory=lambda dsn: _FakeConn(log)
+    )
+    fn(iter(rows))
+    chunks = log["chunks"]
+    assert len(chunks) >= 3
+    assert all(len(c) <= (1 << 20) + longest for c in chunks)
+    assert "".join(chunks) == old_payload
+    assert log["copy_exit"] is None and log["committed"] is True
+
+    def failing():
+        yield from rows[:30_000]
+        raise RuntimeError("source failed mid-partition")
+
+    log = {}
+    with pytest.raises(RuntimeError, match="mid-partition"):
+        fn(failing())
+    assert log["chunks"]  # some rows were already sent when it failed
+    assert log["copy_exit"] is RuntimeError
+    assert "committed" not in log
 
 
 def test_copy_partition_over_real_socket_v3_framing():

@@ -25,6 +25,7 @@ from __future__ import annotations
 import datetime as dt
 import glob
 import json
+import math
 import os
 import uuid
 
@@ -125,6 +126,72 @@ def test_delta_string_bounds_lexicographic(spark, tmp_path):
     assert sum(_stats_skip_file(a, flt) for a in live.values()) >= 1
     got = read_delta_py(spark, t, stats_filter=flt).filter("s >= 'x'")
     assert [r["s"] for r in got.collect()] == ["zeta"]
+
+
+# ---------------------------------------------------------------------------
+# timestamp separator in stats-skip comparisons: 'T'-separated stats
+# (datetime.isoformat, delta-spark) against a space-separated literal
+# ---------------------------------------------------------------------------
+
+def _add(mn, mx):
+    return {"stats": json.dumps({
+        "numRecords": 2,
+        "minValues": {"ts": mn},
+        "maxValues": {"ts": mx},
+        "nullCount": {"ts": 0},
+    })}
+
+
+def test_stats_skip_timestamp_separator_not_wrongly_skipped():
+    # file covers the whole day (T-separated stats, as isoformat emits);
+    # bound is a same-day space-separated SQL literal: rows DO match
+    a = _add("2024-06-01T00:00:00", "2024-06-01T23:59:59")
+    assert _stats_skip_file(a, {"ts": (None, "2024-06-01 12:00:00")}) is False
+    assert _stats_skip_file(a, {"ts": ("2024-06-01 12:00:00", None)}) is False
+
+
+def test_stats_skip_timestamp_separator_still_prunes():
+    # genuinely disjoint day: skip holds under BOTH raw-lexicographic
+    # and parsed-datetime semantics, so the file is still pruned
+    a = _add("2024-06-02T00:00:00", "2024-06-02T23:59:59")
+    assert _stats_skip_file(a, {"ts": (None, "2024-06-01 12:00:00")}) is True
+    assert _stats_skip_file(a, {"ts": ("2024-06-03 00:00:00", None)}) is True
+
+
+def test_stats_skip_ambiguous_string_column_kept():
+    # space-separated values IN the data vs a T-separated literal: the
+    # temporal reading says skip, but a plain STRING column compares
+    # lexicographically (' ' < 'T') and its rows would match — the two
+    # semantics disagree, so the file must be KEPT
+    a = _add("2024-06-01 13:00:00", "2024-06-01 14:00:00")
+    assert _stats_skip_file(a, {"ts": (None, "2024-06-01T12:00:00")}) is False
+
+
+def test_stats_skip_timestamp_end_to_end(spark, tmp_path):
+    """Same-day upper bound over a real table: no silent row loss."""
+    from pyspark.sql import functions as F
+
+    t = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(1, "2024-06-01 03:00:00"), (2, "2024-06-01 20:00:00")],
+        "k INT, s STRING",
+    ).select("k", F.to_timestamp("s").alias("ts"))
+    write_delta(df.repartition(2, "k"), t, "overwrite")
+    got = read_delta_py(
+        spark, t, stats_filter={"ts": (None, "2024-06-01 12:00:00")}
+    ).where("ts <= timestamp'2024-06-01 12:00:00'")
+    assert [r["k"] for r in got.collect()] == [1]
+
+
+def test_iceberg_storage_value_parses_iso_literals():
+    from gcs2postgres_spark.sources.iceberg_py import _storage_value
+
+    micros = 1_717_243_200_000_000  # 2024-06-01T12:00:00Z
+    assert _storage_value("2024-06-01 12:00:00", "timestamp") == micros
+    assert _storage_value("2024-06-01T12:00:00", "timestamptz") == micros
+    assert _storage_value("2024-06-01", "date") == 19875
+    # unparseable literal stays a string (caller keeps the file)
+    assert _storage_value("not-a-date", "timestamp") == "not-a-date"
 
 
 # ----------------------------------------------------------------- iceberg
@@ -287,9 +354,12 @@ def test_partitioned_remote_iceberg_dml_stats(spark, tmp_path, fake_store,
 
 def test_footer_stats_failure_propagates(spark, tmp_path, fake_store,
                                          monkeypatch):
-    # a missing staging dir raises instead of listing nothing
-    with pytest.raises(Exception):
-        file_stats.part_files(f"file://{tmp_path}/nonexistent-staging-dir")
+    # a missing staging dir raises instead of listing nothing, on every
+    # scheme (a posix walk of a missing dir would list no files)
+    missing = tmp_path / "nonexistent-staging-dir"
+    for p in (str(missing), f"file://{missing}"):
+        with pytest.raises(FileNotFoundError):
+            file_stats.part_files(p)
     # an unreadable footer raises, posix and scheme'd
     bad = tmp_path / "part-00000-bad.parquet"
     bad.write_bytes(b"PAR1 this is not a parquet file PAR1")
@@ -428,10 +498,37 @@ def test_posix_and_remote_appends_record_identical_stats(spark, tmp_path,
     bounds = _iceberg_bounds(posix["iceberg"])
     assert bounds == _iceberg_bounds(remote["iceberg"])
     assert sum(b[0] for b in bounds) == 20_000
-    nothing_id = 2  # field ids follow column order
-    for rc, lower, _upper, nulls in bounds:
+    nothing_id, d_id = 2, 3  # field ids follow column order
+    for rc, lower, upper, nulls in bounds:
         assert dict(nulls)[nothing_id] == rc
         assert nothing_id not in dict(lower)
+
+        # NaN doubles: no range recorded, so no NaN bound
+        for key, value in lower + upper:
+            if key == d_id:
+                assert not math.isnan(_bound_decode(value, "double"))
+        assert d_id not in dict(lower) and d_id not in dict(upper)
+
+    # NaN: no NaN token in the stats JSON (strict parsers reject it) ...
+    def no_constant(token):
+        raise ValueError(f"non-JSON constant {token} in Delta stats")
+
+    for st in stats:
+        parsed_st = json.loads(st, parse_constant=no_constant)
+        assert "d" not in parsed_st["minValues"]
+        assert "d" not in parsed_st["maxValues"]
+
+    # ... and a filter on the NaN column still returns every matching
+    # row (Spark orders NaN above every double, so NaN rows match)
+    for cond, flt in (("d >= 2000", {"d": (2000, None)}),
+                      ("d <= 100", {"d": (None, 100)})):
+        want = df.filter(cond).count()
+        for t in (posix["delta"], remote["delta"]):
+            got = read_delta_py(spark, t, stats_filter=flt).filter(cond)
+            assert got.count() == want, (t, cond)
+        for t in (posix["iceberg"], remote["iceberg"]):
+            got = read_iceberg_py(spark, t, stats_filter=flt).filter(cond)
+            assert got.count() == want, (t, cond)
 
 
 def test_stats_less_add_row_count_is_a_ranged_read(spark, tmp_path,
