@@ -63,8 +63,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     session-tz TIMESTAMP so every query (and the streaming twins built
     with timestamp_micros) sees one type:
     - TIMESTAMP(NANOS): Spark has no nanos type; with
-      ``spark.sql.legacy.parquet.nanosAsLong=true`` (set by session.py /
-      tune_for_session) it reads as long nanoseconds, converted here to
+      ``spark.sql.legacy.parquet.nanosAsLong=true`` (pinned by session.py)
+      it reads as long nanoseconds, converted here to
       a µs timestamp (floor — matches DuckDB's CAST(ts_ns AS TIMESTAMP));
     - TIMESTAMP(MICROS) without tz: Spark reads TIMESTAMP_NTZ, which
       Spark 4 refuses to cast to double (sessionize's lag-gap math) —

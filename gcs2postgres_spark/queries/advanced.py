@@ -26,16 +26,9 @@ from pyspark.sql.types import IntegerType, MapType, StringType
 from gcs2postgres_spark.catalog import load_table
 from gcs2postgres_spark.operators.prefix import driver_prefix_sums
 from gcs2postgres_spark.queries.registry import register
-from gcs2postgres_spark.session import tune_for_session
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_for_session(spark)
-    return load_table(spark, sf_dir, name)
 
 
 def _sql(spark: SparkSession, sf_dir: str, tables: list[str], query: str) -> DataFrame:
-    tune_for_session(spark)
     for t in tables:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(query)
@@ -86,7 +79,7 @@ def pivot_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     passing the values avoids Spark's extra distinct-discovery job AND
     pins the output schema (a discovery pass at 100 TB is a full extra
     scan)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     piv = (
         o.groupBy("o_orderstatus")
         .pivot("o_orderpriority", PRIORITIES)
@@ -182,8 +175,8 @@ def q12_priority_caseagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 adapted: join + conditional-sum (CASE inside agg). The
     CASE folds into the partial aggregate, so the shuffle carries two
     longs per group, not rows."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
@@ -208,8 +201,8 @@ FROM lineitem JOIN part ON l_partkey = p_partkey
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 adapted: part is the small side → broadcast hash join, no
     shuffle of lineitem; the global agg is a two-stage partial/final."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
@@ -242,9 +235,9 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     order/customer dims. The agg shrinks lineitem to one row per orderkey
     BEFORE the joins — the order matters at scale (agg-then-join, never
     join-then-agg when the agg is on the fact side alone)."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("qty_sum"))
@@ -279,7 +272,7 @@ def q2_min_per_group_joinback(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2's core shape: rows matching their group's minimum —
     aggregate-then-join-back. The per-group min relation is tiny →
     broadcast, so the fact side never shuffles."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     mins = p.groupBy(F.col("p_type").alias("mt")).agg(F.min("p_retailprice").alias("min_rp"))
     return (
         p.join(
@@ -314,9 +307,9 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushes to the lineitem scan, customer dim broadcasts, global top-20
     compiles to TakeOrderedAndProject (per-partition heap, no full
     sort)."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -357,15 +350,15 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     region's customers, by year — a 7-table join where the CASE folds
     into the partial aggregate (share = conditional-sum / sum in one
     pass). All dims broadcast; lineitem↔orders is the only shuffle."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = _t(spark, sf_dir, "nation").select(
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n1_key"), F.col("n_regionkey").alias("n1_region")
     )
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA").select("r_regionkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n2 = _t(spark, sf_dir, "nation").select(
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA").select("r_regionkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("supp_nation")
     )
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -413,7 +406,7 @@ def agg_corr_covar(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines accumulate co-moments in different orders, so the raw
     doubles differ in the last ulp and an exact value-hash would flap.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .agg(
@@ -441,7 +434,7 @@ ORDER BY l_returnflag
 def agg_minby_maxby_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Argmin/argmax/mode aggregates — single-pass, partial-aggregatable
     (each carries one candidate row of state per group)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .agg(
@@ -474,14 +467,14 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 adapted: cross-nation shipping volume — a 6-table join
     where every dimension broadcasts (nation twice, under two aliases);
     only lineitem↔orders shuffles."""
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = _t(spark, sf_dir, "nation").select(
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
     )
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation")
     )
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -518,8 +511,8 @@ def q19_disjunctive_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     disjuncts can only be evaluated post-join, but Catalyst derives the
     common implied predicates where possible and the part side still
     broadcasts."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size", "p_type")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size", "p_type")
     cond = (
         (
             (F.col("p_brand") == "Brand#1")
@@ -562,7 +555,7 @@ def agg_collect_set_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality. Output cells stay scalar: the verification harness
     canonicalizes row values by hashing, and raw array cells are
     unhashable there."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     statuses = F.array_sort(F.collect_set("l_linestatus"))
     return (
         li.groupBy("l_returnflag")
@@ -591,7 +584,7 @@ def sample_deterministic_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 5% sample by key mod — the reproducible alternative
     to df.sample() for pipeline debugging (same rows every run, every
     engine; at 100 TB the predicate pushes to the scan)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.filter(F.col("o_orderkey") % 20 == 0).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sampled"),
         F.round(F.sum("o_totalprice"), 2).alias("sampled_value"),
@@ -617,7 +610,7 @@ def map_props_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-string column → typed MapType via from_json, then map access
     (element_at) and aggregation. The parse happens once in the projection
     (codegen'd Jackson parse), not per map access."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     m = F.from_json(F.col("props"), MapType(StringType(), IntegerType()))
     k = F.element_at(m, "k")
     return (
@@ -650,7 +643,7 @@ def array_ops_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     array_max — all Catalyst expressions over the packed array, no
     explode (exploding 100 TB of embeddings to average one element would
     be a 64× row blowup)."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     emb = F.col("embedding")
     return (
         e.groupBy("label")
@@ -683,7 +676,7 @@ def explode_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """explode/unnest parity: split → explode → count — the classic
     word-count shape (explode is generate-side, the agg is partial+final
     so the shuffle carries (token, count) pairs, not raw tokens)."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
     return (
         d.select(F.explode(F.split(F.lower(F.trim(F.col("text"))), " ")).alias("token"))
         .filter(F.col("token") != "")
@@ -739,7 +732,7 @@ def unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows via DataFrame.unpivot — one aggregation pass then a
     generate-side expand (the oracle's UNION ALL form would scan three
     times; unpivot reads the aggregate once)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     wide = li.groupBy("l_returnflag").agg(
         F.sum("l_quantity").alias("sum_qty"),
         F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
@@ -796,7 +789,7 @@ def grouped_map_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    li = _t(spark, sf_dir, "lineitem").select("l_returnflag", "l_quantity", "l_extendedprice")
+    li = load_table(spark, sf_dir, "lineitem").select("l_returnflag", "l_quantity", "l_extendedprice")
     return (
         li.groupBy("l_returnflag")
         .applyInPandas(
@@ -833,7 +826,7 @@ def grouped_agg_weighted_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     def wmean(price: pd.Series, qty: pd.Series) -> float:
         return float((price * qty).sum() / qty.sum())
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_linestatus")
         .agg(F.round(wmean("l_extendedprice", "l_quantity"), 4).alias("qty_weighted_price"))
@@ -861,7 +854,7 @@ def text_normalize_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalization + dedup-by-fingerprint per language: lowercase, trim,
     collapse whitespace runs, md5 — the canonicalization step before exact
     dedup in a training-data pipeline."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     norm = F.md5(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "))
     return (
         d.groupBy("lang")
@@ -901,10 +894,10 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     here the dim WOULD broadcast; the query demonstrates the exact
     salt/replicate algebra with a plain-join oracle proving no row is
     lost or doubled (operators/skew.py salted_skew_join)."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         (F.col("l_orderkey") % 5).alias("hot_key"), "l_extendedprice", "l_orderkey"
     )
-    o = _t(spark, sf_dir, "orders").select((F.col("o_orderkey") % 5).alias("d_key"), "o_orderpriority")
+    o = load_table(spark, sf_dir, "orders").select((F.col("o_orderkey") % 5).alias("d_key"), "o_orderpriority")
     dim = o.groupBy("d_key").agg(F.min("o_orderpriority").alias("prio"))
     from gcs2postgres_spark.operators.skew import salted_skew_join
 
@@ -967,7 +960,7 @@ def part_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     back broadcast per-partition offsets (a partition-count-sized frame)
     — no single-task global window, so the operator scales to hundreds
     of millions of parts instead of walling on one core."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     # exact integer arithmetic per ROW (price cents × discount points):
     # every sum afterwards is int64, bit-identical on any engine — a
     # float path drifts at class scale and flips rounding knife-edges
@@ -1068,8 +1061,8 @@ def basket_pair_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     item-count table. At 100 TB the only heavy operator is the
     per-basket pair expansion, which partitions cleanly on the basket
     key; skewed mega-baskets would be capped or salted upstream."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     items = (
         li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .select(F.col("l_orderkey").alias("basket"), F.col("p_brand").alias("item"))

@@ -27,12 +27,6 @@ from gcs2postgres_spark.catalog import load_table
 from gcs2postgres_spark.functions.exact import exact_intdiv, ratio_6dp
 from gcs2postgres_spark.operators.prefix import driver_prefix_max, driver_prefix_sums
 from gcs2postgres_spark.queries.registry import register
-from gcs2postgres_spark.session import tune_for_session
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_for_session(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -70,7 +64,7 @@ def events_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     (earliest start wins ties, a total order). Two shuffles on user_id
     total, window state O(1) per row — scales to any user count because
     the only window partitions by the user key."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     days = e.select("user_id", F.to_date("ts").alias("day")).distinct()
     w = Window.partitionBy("user_id").orderBy("day")
     isl = days.withColumn("anchor", F.date_sub(F.col("day"), F.row_number().over(w)))
@@ -123,7 +117,7 @@ def scd2_state_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     The dimension-history shape every warehouse maintains; here derived
     in two windows over one user_id shuffle. At 100 TB the state stays
     O(1) per row and the partition key is the natural entity key."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ch = (
         e.withColumn("prev", F.lag("event_type").over(w))
@@ -176,7 +170,7 @@ def events_equidepth_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``row_number() OVER (ORDER BY value)``. Bin = floor((rank-1)*10/n);
     the division's only near-integer cases are exactly-divisible ones,
     which IEEE doubles return exactly, so floor agrees on both engines."""
-    e = _t(spark, sf_dir, "events").select("value", "event_id")
+    e = load_table(spark, sf_dir, "events").select("value", "event_id")
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     # one physical execution for every branch (see
     # events_watermark_late_drop for the misalignment flake this blocks)
@@ -247,7 +241,7 @@ def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     peaks (earliest on ties) — the classic location-shift detector.
     One groupBy shuffle over the raw events; everything after runs on
     |types|×|days| rows."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.to_date("ts").alias("day")).agg(
         F.avg("value").alias("m")
     )
@@ -339,7 +333,7 @@ def events_resample_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly 0 (the observation sorts before the grid row), so the
     observed value passes through bit-exactly. The user_id < 40 cap
     bounds only the oracle's runtime, not the operator."""
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id") < 40)
+    e = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 40)
     ev = e.groupBy("user_id", "ts").agg(F.max_by("value", "event_id").alias("value"))
     grid = (
         ev.groupBy("user_id")
@@ -453,7 +447,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     sit on exact values; recency/frequency are ints already. Quantile
     definition (linear interpolation at p·(n−1)) matches Spark
     percentile == DuckDB quantile_cont on exact integer inputs."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     per_c = o.groupBy("o_custkey").agg(
         F.max(F.to_date("o_orderdate")).alias("last_order"),
@@ -573,12 +567,12 @@ def dq_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     small parents into broadcast anti joins automatically; fact-sized
     parents shuffle on the key) reduced to a scalar — five bounded
     aggregates unioned, nothing wide ever materialized."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    p = _t(spark, sf_dir, "part")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    p = load_table(spark, sf_dir, "part")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
 
     def audit(child: DataFrame, ckey: str, parent: DataFrame, pkey: str, name: str) -> DataFrame:
         total = child.agg(F.count(F.lit(1)).alias("child_rows"))
@@ -628,7 +622,7 @@ def dq_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     so no engine's libm rounding near powers of ten can flip a digit.
     One map-side projection + a 9-group aggregate; the expected share
     log10(1+1/d) is a literal per group."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     digit = F.substring(cents.cast("string"), 1, 1).cast("long")
     d = o.select(digit.alias("digit"))
@@ -700,7 +694,7 @@ def dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute force in tests/test_properties.py."""
     from gcs2postgres_spark.operators.dedup import prefix_jaccard_pairs
 
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
     return prefix_jaccard_pairs(
         docs, "doc_id", "text", threshold_num=3, threshold_den=5
     ).orderBy("id_a", "id_b")
@@ -749,8 +743,8 @@ def graph_bfs_3hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     chained EXCEPT CTEs."""
     from gcs2postgres_spark.operators.graph import bfs_layers
 
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     # per-hop COUNTS are the output → node identity is internal; longs
     # (cust 2k, supp 2k+1) instead of "c{key}"/"s{key}" strings keep
     # the frontier joins and per-hop checkpoints cheap
@@ -818,7 +812,7 @@ def agg_higher_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     never enters. Two shuffles on the group key; the one-pass
     raw-moment identity (m2 = E[x²]−μ²) is deliberately avoided — its
     catastrophic cancellation is the classic distributed-stats bug."""
-    e = _t(spark, sf_dir, "events").select("event_type", "value")
+    e = load_table(spark, sf_dir, "events").select("event_type", "value")
     mu = e.groupBy("event_type").agg(F.avg("value").alias("mu"))
     d = e.join(F.broadcast(mu), "event_type").select(
         "event_type", (F.col("value") - F.col("mu")).alias("d")
@@ -885,7 +879,7 @@ def events_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     denominator and the slope decays to noise — the classic numerical
     trap of streaming regression. NULL slope when the window has no
     time spread (denominator exactly 0 on both engines)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     wu = Window.partitionBy("user_id")
     wk = (
         Window.partitionBy("user_id")
@@ -944,7 +938,7 @@ def profile_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     profiles through one groupBy + one scalar-sized aggregate —
     map-side partials all the way; the three profiles union to a 3-row
     frame."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
 
     def profile(col: str) -> DataFrame:
         cnt = li.groupBy(F.col(col).alias("k")).agg(F.count(F.lit(1)).alias("c"))
@@ -1002,7 +996,7 @@ def lineitem_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     reaches the total. Weights are exact integers (quantity), so the
     2·cumw ≥ W comparison can never float-flip. No single-task global
     window anywhere — the selection scales to any row count."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_extendedprice").alias("price"),
         F.round("l_quantity").cast("long").alias("wt"),
         "l_orderkey",
@@ -1072,7 +1066,7 @@ def dataset_interleave_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     through one task; the formula costs one map-side multiply."""
     from gcs2postgres_spark.operators.dedup import portable_hash60
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     doms = (
         d.select("source")
         .distinct()
@@ -1141,7 +1135,7 @@ def events_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast join. No single-task global window anywhere, so the
     classification scales to the full ingest log. Counts per
     (type, verdict) are exact timestamp comparisons — no floats."""
-    e = _t(spark, sf_dir, "events").select("event_id", "event_type", "ts")
+    e = load_table(spark, sf_dir, "events").select("event_id", "event_type", "ts")
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     # MATERIALIZE the ranged frame before anything branches off it:
     # spark_partition_id() is only meaningful relative to one physical
@@ -1208,8 +1202,8 @@ def supplier_ship_latency_pcts(spark: SparkSession, sf_dir: str) -> DataFrame:
     are not causally ordered (negative latencies exist); the metric is
     the raw distribution, which is exactly what percentile tracking
     reports."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     lat = li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).select(
         "l_suppkey",
         F.datediff(F.to_date("l_shipdate"), F.to_date("o_orderdate")).alias("days"),
@@ -1262,7 +1256,7 @@ def events_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizons × users-sized frame, never the raw log. The curve is
     monotone non-increasing by construction; counts are exact integer
     comparisons. At 100 TB only the first groupBy touches the log."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     fu = e.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("first_day"))
     off = (
         e.join(fu, "user_id")

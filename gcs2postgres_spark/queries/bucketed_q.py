@@ -35,7 +35,6 @@ from gcs2postgres_spark.queries.advanced import Q12_STYLE_SQL, Q18_STYLE_SQL
 from gcs2postgres_spark.queries.joins import Q3_ORACLE
 from gcs2postgres_spark.queries.registry import register
 from gcs2postgres_spark.queries.tpch_rest import Q21_STYLE_SQL
-from gcs2postgres_spark.session import tune_for_session
 
 
 def _n_buckets(spark: SparkSession) -> int:
@@ -60,7 +59,6 @@ def bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     is reused — the write is the once-per-warehouse ingest cost."""
     import tempfile
 
-    tune_for_session(spark)
     spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
     n = _n_buckets(spark)
     # tag includes source-file (mtime, size): regenerated testdata at the

@@ -24,7 +24,6 @@ from gcs2postgres_spark.operators.corpus import (
     tfidf_top_terms,
 )
 from gcs2postgres_spark.queries.registry import register
-from gcs2postgres_spark.session import tune_for_session
 
 _TOKS = r"string_split_regex(lower(trim(text)), '\s+')"
 
@@ -59,7 +58,6 @@ def corpus_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc window top-k; corpus size joins in as a broadcast 1-row
     frame, never a global window. Scores are rounded before ranking in
     BOTH engines, making the (score desc, term asc) order total."""
-    tune_for_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return tfidf_top_terms(docs, k=3).orderBy("doc_id", "rank")
 
@@ -91,7 +89,6 @@ def corpus_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     token array is materialized once and sliced per chunk. chunk_hash
     is the portable md5 content id downstream dedup/packing joins on;
     the oracle recomputes every hash, so one shifted window breaks it."""
-    tune_for_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return chunk_windows(docs, size=32, stride=24).orderBy("doc_id", "chunk_idx")
 
@@ -119,7 +116,6 @@ def corpus_bigram_lm_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from zip_with over the token array and its shift (linear, no
     per-element re-split), then one partial-agg shuffle; the (cnt desc,
     w1, w2) rank is a total order so the cut is deterministic."""
-    tune_for_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return bigram_counts(docs, top_n=20)
 
@@ -154,7 +150,6 @@ def corpus_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     LM is trained on the same data, so every probability is nonzero and
     the whole statistic is exactly SQL-replayable — the oracle rebuilds
     the LM and replays every per-document average."""
-    tune_for_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return bigram_perplexity(docs).orderBy("doc_id")
 
@@ -183,7 +178,6 @@ def corpus_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     trainer optimization: pair counting is O(vocab × word_len), not
     O(corpus)); overlapping occurrences within a word each count, as in
     the textbook algorithm."""
-    tune_for_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return bpe_pair_counts(docs, top_n=20)
 
@@ -242,7 +236,6 @@ def corpus_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential step of BPE. The oracle unrolls the identical recurrence
     as static CTEs, so a wrong tie-break, overlap handling, or count in
     ANY round fails the compare."""
-    tune_for_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return bpe_train_merges(docs, n_merges=3)
 
@@ -339,7 +332,6 @@ def corpus_bpe_encode_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen, no UDF). The oracle replays training AND encoding as
     static CTEs, so a wrong merge, tie-break, or encode order fails
     the compare."""
-    tune_for_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     merges = bpe_train_merges(docs, n_merges=3)
     return bpe_token_histogram(docs, merges, top_n=20)
@@ -375,7 +367,6 @@ def corpus_bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-document counts re-aggregate, folded into 16 deterministic
     buckets for a stable compare. Both shuffles ride high-cardinality
     keys; the merge chain never touches corpus-sized data."""
-    tune_for_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     merges = bpe_train_merges(docs, n_merges=3)
     per_doc = bpe_encode_docs(docs, merges)
@@ -433,7 +424,6 @@ def corpus_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe: the query-term filter prunes postings before any shuffle,
     df/corpus stats broadcast back, global top-k via per-partition
     heaps. Scores rounded 6dp on both engines; ties → doc_id."""
-    tune_for_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return bm25_search(docs, BM25_TERMS)
 
@@ -473,7 +463,6 @@ def corpus_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     just the bound). The fixed 768-cell counter table is the
     heavy-hitter / frequency-cap primitive that replaces a full groupBy
     at 100 TB: cells aggregate with map-side partials and broadcast."""
-    tune_for_session(spark)
     from gcs2postgres_spark.operators.dedup import portable_hash60
 
     docs = load_table(spark, sf_dir, "documents")
@@ -564,7 +553,6 @@ def corpus_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 bigram collocations by PMI (count floor 5) — phrase
     mining / tokenizer-merge heuristic over the corpus; marginals as
     windowed sums over the aggregated bigram table, N broadcast."""
-    tune_for_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return bigram_pmi(docs)
 
@@ -603,7 +591,6 @@ def corpus_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     token- or vocab-cardinality data."""
     from pyspark.sql import Window
 
-    tune_for_session(spark)
     d = load_table(spark, sf_dir, "documents")
     d = widen_doc_scan(d, "doc_id")  # guide §2.5 parallelism guard
     toks = d.select(

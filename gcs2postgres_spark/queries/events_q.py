@@ -12,12 +12,6 @@ from pyspark.sql import functions as F
 from gcs2postgres_spark.catalog import load_table
 from gcs2postgres_spark.operators.skew import salted_two_phase_agg
 from gcs2postgres_spark.queries.registry import register
-from gcs2postgres_spark.session import tune_for_session
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_for_session(spark)
-    return load_table(spark, sf_dir, name)
 
 
 JSON_EXTRACT_ORACLE = """
@@ -39,7 +33,7 @@ def json_extract_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate re-parses the JSON for each access (measured 41× the
     DuckDB baseline in round 1; this form is one parse regardless of how
     many fields the aggregates touch)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     parsed = e.select(
         "event_type", F.from_json(F.col("props"), "k BIGINT").alias("p")
     )
@@ -71,7 +65,7 @@ def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1h window (batch form). The streaming twin uses
     F.window(ts, '1 hour') + watermark; date_trunc('hour') is the identical
     grouping expressed oracle-checkably."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(
             F.date_trunc("hour", F.col("ts")).alias("window_start"),
@@ -101,7 +95,7 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding window, 2h size / 1h slide, via F.window — Spark expands each
     row into size/slide window copies before the aggregation (same expansion
     the oracle's UNION ALL spells out)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
@@ -139,7 +133,7 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic two-window plan (single shuffle on user_id; both windows share
     the same partitioning so Catalyst reuses the sort). Streaming twin uses
     F.session_window."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.col("ts").cast("double") - F.lag(F.col("ts").cast("double")).over(w)
     flagged = e.select(
@@ -187,7 +181,7 @@ def agg_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     a plain groupBy lands each key on one reducer; salting spreads each
     key over 8, then merges. Exact same result as the plain GROUP BY —
     which is precisely what the oracle checks."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         salted_two_phase_agg(e, ["user_id"], salt_buckets=8)
         # quantize the double sum: salted two-phase accumulation order
@@ -202,7 +196,7 @@ def events_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed dedup keeping the first occurrence — deterministic form of
     dropDuplicates(['user_id','event_type']) (which keeps an arbitrary row).
     Streaming twin: dropDuplicates within watermark."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy("user_id", "event_type")
         .agg(F.min("event_id").alias("first_event_id"), F.min("ts").alias("first_ts"))
@@ -230,7 +224,7 @@ def events_click_purchase_attr(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual predicate evaluated inside the hash join, so this is NOT
     a cartesian — same property the streaming version's state store
     relies on to bound state per user."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     c = e.filter(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"),
         "user_id",
@@ -282,7 +276,7 @@ def stream_interval_join_leftouter(spark: SparkSession, sf_dir: str) -> DataFram
     null-extended rows in tests/test_streaming.py). Same plan shape as
     the inner variant: equi-key user_id carries the hash join, the time
     interval is a residual predicate — no cartesian."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     c = e.filter(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"),
         "user_id",
@@ -334,7 +328,7 @@ def events_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Expand operator before the partial agg, so it is still a single
     shuffle; at 100 TB the day/total levels ride along with the hourly
     aggregation for free instead of re-scanning."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.select(
             F.date_trunc("day", "ts").alias("day"),
@@ -393,7 +387,7 @@ def events_ewma_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the z-score — no UDF, one shuffle on user_id, linear in events
     (each row touches at most 20 lags). Feature-engineering shape every
     behavioral-ML pipeline materializes at scale."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wk = w.rowsBetween(-19, Window.currentRow)
     arr = F.reverse(F.collect_list("value").over(wk))  # newest first
@@ -469,7 +463,7 @@ def events_funnel_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
     row touches only its 24h frame, and the whole pattern stays in the
     JVM (no per-row UDF, no self-join blowup). At 100 TB this is a
     single key-partitioned pass over the event log."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     ev = e.select("user_id", "event_type", F.unix_micros(F.col("ts")).alias("uts"))
     day_us = 86_400_000_000
     w = (
@@ -538,7 +532,7 @@ def events_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator (sf0.1 soak runs the same capped set)."""
     from gcs2postgres_spark.operators.joins import asof_join
 
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id") < 40)
+    e = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 40)
     ev = e.groupBy("user_id", "ts").agg(
         F.max_by("value", "event_id").alias("value")
     )
@@ -597,7 +591,7 @@ def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregations sharing the user_id partitioning (first-touch, distinct
     activity) and one equi-join; weeks are date_trunc-aligned so the
     week delta is an exact integer on both engines."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     firsts = e.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).alias("cohort_week")
     )
@@ -651,7 +645,7 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     and resource-overlap metrics; partitioned by the grouping key, the
     cumsum is the standard per-key sequential pass (same scale contract
     as sessionization)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     starts = e.select("event_type", F.col("ts").alias("t"), F.lit(1).alias("delta"))
     ends = e.select(
         "event_type",
@@ -708,7 +702,7 @@ def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact skewed tails it is meant to catch. Exact medians shuffle
     per-group values once each pass; at 100 TB swap in
     approx_percentile with documented error — same plan shape."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     med = e.groupBy("event_type").agg(
         F.expr("percentile(value, 0.5)").alias("med")
     )
@@ -764,7 +758,7 @@ def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage, one partial+final count per bin — the distribution-profiling
     pass that sizes skew mitigations. Identical float arithmetic on
     both engines (same divide/floor/clamp), so bins match exactly."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     b = e.agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
     binned = e.crossJoin(F.broadcast(b)).select(
         F.least(
@@ -817,7 +811,7 @@ def events_rolling_7d_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     7·|pairs|, independent of raw event volume; the HLL-merge variant
     (agg_hll_sketch_merge) replaces the exact distinct when ±2% is
     acceptable at 100 TB."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     du = e.select(
         F.date_trunc("day", F.col("ts")).cast("date").alias("day"), "user_id"
     ).distinct()
@@ -863,7 +857,7 @@ def events_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     (single shuffle); the streaming twin is the stateful
     events_dedup_first with a per-key timestamp state. Counts per type
     certify every keep/drop decision."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     gap = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))
     lagged = e.select("event_type", gap.alias("gap_us"))
@@ -908,7 +902,7 @@ def events_user_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     growth dashboard is built on. Dedupe to (week, user) once, one lag
     window per user, one aggregate; all key-partitioned, week alignment
     via date_trunc so the 7-day delta is exact on both engines."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     wu = e.select(
         F.date_trunc("week", F.col("ts")).cast("date").alias("week"), "user_id"
     ).distinct()
@@ -962,7 +956,7 @@ def events_seasonal_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     anything fancier ships. Scale shape: both models are tiny keyed
     aggregates (|types|×24 and |types| rows) broadcast to one streaming
     pass over the test rows; nothing re-shuffles the fact table."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     cutoff = F.lit("2024-01-24 00:00:00").cast("timestamp")
     base = e.select("event_type", F.hour("ts").alias("hr"), "value", "ts")
     train = base.filter(F.col("ts") < cutoff)
@@ -1028,7 +1022,7 @@ def events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass to bin (bounds broadcast), one (type, bin) aggregate —
     10×|types| rows — then driver-free scalar math on that tiny
     frame."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     cutoff = F.lit("2024-01-16 00:00:00").cast("timestamp")
     cents = e.select(
         "event_type",
@@ -1095,7 +1089,7 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     marginals — the user-journey model behind path analysis and
     next-action prediction. The user_id partitioning is the only
     fact-sized shuffle; the matrix itself is |types|² rows."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ordered = e.select(
         "event_type", F.lead("event_type").over(w).alias("next_type")
@@ -1143,7 +1137,7 @@ def events_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted mean is compared against the naive mean, the difference
     being exactly the sampling-bias correction TWAP exists for. One
     lead() window keyed by type, one aggregate."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     us = (F.unix_micros(F.col("next_ts")) - F.unix_micros(F.col("ts"))).alias("dur_us")
     spans = (
@@ -1207,7 +1201,7 @@ def events_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     window merge happens inside the aggregation — no self-join, no
     second window pass.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     sess = (
         e.groupBy("user_id", F.session_window("ts", "30 minutes").alias("sw"))
         .agg(

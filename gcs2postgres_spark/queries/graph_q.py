@@ -23,12 +23,6 @@ from gcs2postgres_spark.operators.dedup import (
 )
 from gcs2postgres_spark.operators.graph import duplicate_clusters
 from gcs2postgres_spark.queries.registry import register
-from gcs2postgres_spark.session import tune_for_session
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_for_session(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # Same shingle/Jaccard CTEs as MINHASH_LSH_ORACLE (queries/llm.py) — the
@@ -85,7 +79,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep/drop flag. Iterative min-label propagation on DataFrames
     (operators/graph.py) certified against a recursive-CTE transitive
     closure."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     shingled = maybe_persist(shingle_docs(d, "doc_id", "text", shingle_n=3))
     # with_size + carry=("n",): the shingle counts ride the band join
     # instead of two standalone shingler re-runs — see dedup_minhash_lsh
@@ -144,7 +138,7 @@ def graph_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from gcs2postgres_spark.operators.graph import connected_components
 
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     chained = o.select(
         "o_custkey", "o_orderkey", F.lag("o_orderkey").over(w).alias("prev_key")
@@ -217,7 +211,6 @@ def graph_pagerank_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal unroll the oracle replays; per-round cost is one
     key-partitioned join + partial-sum aggregate. Top-20 by rounded
     rank with node tie-break (total order)."""
-    tune_for_session(spark)
     from gcs2postgres_spark.operators.pagerank import pagerank_fixed
 
     o = load_table(spark, sf_dir, "orders")
@@ -297,8 +290,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     wedge fan-out by O(sqrt(m)) and keeps the join skew-safe on
     power-law graphs; closure is one join back against the undirected
     edge set. All counts integer; the coefficient is the only float."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     items = (
         li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .select(F.col("l_orderkey").alias("basket"), F.col("p_brand").alias("item"))
@@ -423,7 +416,6 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     redundant confirming peel (at sf1 the demo graph converges after
     round 1: rounds 2-3 cost two sub-ms degree-frame filters instead
     of two full semi-join passes over 8M edges)."""
-    tune_for_session(spark)
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     # output is COUNTS only, so node identity is internal — encode the
@@ -567,8 +559,8 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from gcs2postgres_spark.operators.pagerank import ppr_fixed
 
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     # long ids through the iteration, string ids re-encoded in the
     # final projection — see graph_pagerank_purchases above
     edges = (

@@ -31,12 +31,6 @@ from gcs2postgres_spark.functions.exact import ratio_6dp
 from gcs2postgres_spark.operators.caching import maybe_persist, widen_doc_scan
 from gcs2postgres_spark.operators.prefix import driver_prefix_sums
 from gcs2postgres_spark.queries.registry import register
-from gcs2postgres_spark.session import tune_for_session
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_for_session(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -74,7 +68,7 @@ def events_autocorr_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     shifted day is an equi-join Catalyst broadcasts. Pearson ``corr``
     matches DuckDB's sample correlation definition.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(F.to_date("ts").alias("day")).agg(F.count(F.lit(1)).alias("cnt"))
     lagged = daily.withColumn(
         "lag", F.explode(F.array(*[F.lit(i) for i in range(1, 8)]))
@@ -131,7 +125,7 @@ def customer_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition row-count offsets (a |shuffle-partitions|-sized
     frame). No single-task global window at any cardinality.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     rev = o.groupBy(F.col("o_custkey").alias("k")).agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("xc")
     )
@@ -195,7 +189,7 @@ def events_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     is |event_types|-bounded after the first groupBy). ``ln`` is IEEE
     libm on both engines; the ≤|types| term sum is rounded to 6.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     cnts = e.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("c"))
     w = Window.partitionBy("user_id")
     withp = cnts.withColumn("n", F.sum("c").over(w)).withColumn(
@@ -248,7 +242,7 @@ def events_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partials, and the top-20 is a TakeOrdered, not a global
     sort. Order within a user is total (ts, event_id).
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = e.select(
         "user_id",
@@ -313,7 +307,7 @@ def ab_test_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-number frame. The guard against p̂∈{0,1} (zero denominator) is
     out of scope: the driver data always has both outcomes.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     users = e.groupBy("user_id").agg(
         F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
             "converted"
@@ -380,7 +374,7 @@ def corpus_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # tokenize runs on the scan width — widen the compact corpus scan
     # first (guide §2.5, same guard as the rest of the corpus tier)
-    d = widen_doc_scan(_t(spark, sf_dir, "documents"), "doc_id")
+    d = widen_doc_scan(load_table(spark, sf_dir, "documents"), "doc_id")
     tf = (
         d.select(
             F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok")
@@ -448,7 +442,7 @@ def corpus_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream: it feeds BOTH the vocab build and the per-doc OOV join —
     # unpersisted, each consumer re-runs the full explode (guide §2.4;
     # size-conditional per operators.caching)
-    d = widen_doc_scan(_t(spark, sf_dir, "documents"), "doc_id")
+    d = widen_doc_scan(load_table(spark, sf_dir, "documents"), "doc_id")
     clean = maybe_persist(
         d.select(
             "doc_id",
@@ -521,7 +515,7 @@ def text_charclass_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # three per-doc regexp_replace passes — widen the compact scan so
     # they spread across cores (guide §2.5)
-    d = widen_doc_scan(_t(spark, sf_dir, "documents"), "doc_id")
+    d = widen_doc_scan(load_table(spark, sf_dir, "documents"), "doc_id")
     ln = F.length("text")
     per_doc = d.where(ln > 0).select(
         "source",
@@ -592,7 +586,7 @@ def agg_binned_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative count crosses the target (cumulative window over ≤256
     rows per group — bounded).
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     rng = e.agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
     width = (F.col("hi") - F.col("lo")) / 256.0
     binned = e.crossJoin(F.broadcast(rng)).select(
@@ -700,8 +694,8 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from gcs2postgres_spark.operators.graph import sssp_bounded
 
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     # node ids are internal (output groups by node TYPE only): longs
     # (cust 2k, supp 2k+1) keep the per-round checkpoints and joins
     # cheap; parity recovers the type
@@ -813,7 +807,7 @@ def corpus_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # widen before the per-doc tokenize+distinct (guide §2.5); persist
     # `drops` below — it is read by BOTH the total aggregate and the
     # spine join, and unpersisted each read re-runs the full tokenize
-    d = widen_doc_scan(_t(spark, sf_dir, "documents"), "doc_id")
+    d = widen_doc_scan(load_table(spark, sf_dir, "documents"), "doc_id")
     ln = F.length("text")
     toks = F.filter(
         F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda x: x != ""
@@ -919,7 +913,7 @@ def corpus_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from gcs2postgres_spark.operators.dedup import shingle_docs
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     # Arrow-batched shingler, NOT the higher-order-function form:
     # string-heavy HOF lambdas run interpreted and measured 14x slower
     # than the oracle at sf1 (70.5 s -> see BASELINE round-5b tier);
@@ -1000,7 +994,7 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Floats are cast to double before averaging (DuckDB's unnested
     FLOAT[] aggregates in double), drift rounded to 5.
     """
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     half = emb.select(
         "label",
         (F.col("vec_id") % 2).cast("int").alias("batch"),
@@ -1084,7 +1078,7 @@ def events_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers whose exact grouped percentile Spark computes
     distributed (ObjectHashAggregate).
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     first_click = (
         e.where(F.col("event_type") == "click")
         .groupBy("user_id")
@@ -1149,7 +1143,7 @@ def events_xcorr_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     series. Calendar-aligned: a day missing from either series
     contributes no pair at any lag.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = lambda typ: (  # noqa: E731
         e.where(F.col("event_type") == typ)
         .groupBy(F.to_date("ts").alias("day"))
@@ -1208,7 +1202,7 @@ def events_user_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     user), both with map-side partials — no windows. ``var_samp``
     matches DuckDB's sample-variance definition.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = e.groupBy("user_id", F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).alias("c")
     )
@@ -1287,8 +1281,8 @@ def dq_order_totals_recon(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials), one key-partitioned LEFT join on the order key, then a
     4-row class rollup.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
     line_sums = li.groupBy("l_orderkey").agg(
         F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("lines_c"),
         F.count(F.lit(1)).alias("n_lines"),
@@ -1362,7 +1356,7 @@ def orders_daily_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     days, no global window; 100 TB of orders still yields
     |days|-bounded output.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = o.select(
         F.to_date("o_orderdate").alias("day"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
@@ -1426,7 +1420,7 @@ def profile_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partials; their join is |distinct keys|-sized; the
     top-1 pick is a TakeOrdered, not a sort.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     ca = (
         e.where(F.col("event_type") == "click")
         .groupBy("user_id")
@@ -1514,9 +1508,9 @@ def nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation) with map-side partials; the supplier⋈nation dim join
     broadcasts; no windows.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
     srev = (
         li.join(
             F.broadcast(s.select("s_suppkey", "s_nationkey")),
@@ -1589,8 +1583,8 @@ def supplier_otif_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle), a map-side CASE, one |suppliers|-keyed count/sum with
     partials.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
     lag = F.datediff(F.to_date("l_shipdate"), F.to_date("o_orderdate"))
     on_time = F.when((lag >= 0) & (lag <= 60), 1).otherwise(0)
     return (
@@ -1636,7 +1630,7 @@ def events_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one 168-cell keyed aggregation; the distinct-user
     count is the only shuffle-heavy part (partial distinct per cell).
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(
             (F.dayofweek("ts") - 1).cast("int").alias("dow"),
@@ -1680,8 +1674,8 @@ def brand_discount_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the part dim broadcasts into the fact scan; one
     |brands|-keyed aggregation with map-side partials; no windows.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     d = li.join(
         F.broadcast(p.select("p_partkey", "p_brand")),
         F.col("l_partkey") == F.col("p_partkey"),
@@ -1742,7 +1736,7 @@ def agg_jackknife_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     jackknife costs one aggregation pass regardless of data size,
     the textbook mergeable-statistics trick.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     b = e.groupBy((F.col("event_id") % 20).cast("int").alias("bucket")).agg(
         F.count(F.lit(1)).alias("n"), F.sum("value").alias("s")
     )
@@ -1824,7 +1818,7 @@ def events_inter_arrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-percentile aggregation — both parallel across users, no
     global ordering anywhere.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gaps = (
         e.select("user_id", "ts", "event_id")
@@ -1882,7 +1876,7 @@ def events_dau_ma7(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar, the same documented-bounded contract as the vocab-rank
     windows.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     dau = e.groupBy(F.to_date("ts").alias("day")).agg(
         F.countDistinct("user_id").alias("dau")
     )
@@ -1937,7 +1931,7 @@ def orders_gmv_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
     |months|-sized frame; the YoY join and ordering run on that
     calendar-bounded frame.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     monthly = o.groupBy(
         F.date_trunc("month", "o_orderdate").cast("date").alias("month")
     ).agg(
@@ -2017,7 +2011,7 @@ def dq_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``container`` in the output so the query works unchanged on a
     catalog that does carry packaging columns.)
     """
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     size_class = (
         F.when(F.col("p_size") <= 10, "small")
         .when(F.col("p_size") <= 30, "medium")
@@ -2101,7 +2095,7 @@ def events_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast per-partition offsets), so no single-task window at any
     cardinality; D folds with one max.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     vals = (
         e.where(F.col("event_type").isin("click", "purchase"))
         .groupBy("value")
@@ -2215,7 +2209,7 @@ def events_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase cumsum exactly as events_ks_two_sample does if values
     are near-unique), two scalar folds.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     vals = (
         e.where(F.col("event_type").isin("click", "purchase"))
         .groupBy("value")
@@ -2331,7 +2325,7 @@ def corpus_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the divergence join), and unpersisted each re-runs the tokenize +
     # count shuffle, which is what the docstring's "never re-reading
     # the raw stream" claim requires at execution level (guide §2.4)
-    d = widen_doc_scan(_t(spark, sf_dir, "documents"), "doc_id")
+    d = widen_doc_scan(load_table(spark, sf_dir, "documents"), "doc_id")
     toks = d.select(
         "source",
         F.explode(
@@ -2396,8 +2390,8 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edge list); ``corr`` folds with partials. Nothing node-sized
     is broadcast.
     """
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     # counts-only output → node identity is internal; longs (cust 2k,
     # supp 2k+1) shuffle/join cheaper than "c{key}"/"s{key}" strings
     # persist the distinct edge list: the plan has FIVE consumers of it
@@ -2476,7 +2470,7 @@ def events_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``var_samp``/``avg`` over the identical conditional columns on
     both engines.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     is_we = (F.dayofweek("ts") - 1).isin(0, 6)
     wd = F.when(~is_we, F.col("value"))
     we = F.when(is_we, F.col("value"))
@@ -2537,8 +2531,8 @@ def supplier_leadtime_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one fact join (lineitem's single shuffle) + one
     |suppliers|-keyed regression aggregate with map-side partials.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
     lat = li.join(
         o.select("o_orderkey", "o_orderdate"),
         F.col("l_orderkey") == F.col("o_orderkey"),

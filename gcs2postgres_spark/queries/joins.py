@@ -16,12 +16,6 @@ from pyspark.sql import functions as F
 from gcs2postgres_spark.catalog import load_table
 from gcs2postgres_spark.operators.joins import asof_join, range_join
 from gcs2postgres_spark.queries.registry import register
-from gcs2postgres_spark.session import tune_for_session
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_for_session(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -48,7 +42,7 @@ LIMIT 10
 @register("q3_shipping_priority", oracle=Q3_ORACLE)
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3: 3-table join, dims broadcast, revenue agg + top-10 by (revenue, date)."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     cutoff = F.to_timestamp(F.lit("1998-03-15 00:00:00"))
@@ -96,7 +90,7 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact-fact shuffle join (lineitem⋈orders) with all dimensions
     broadcast; Catalyst + AQE pick the order, broadcast hints pin the
     small sides."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
@@ -145,7 +139,7 @@ ORDER BY n_name
 @register("join_inner", oracle=JOIN_INNER_ORACLE)
 def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inner equi-join customer x orders on the natural key."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     return (
@@ -171,7 +165,7 @@ ORDER BY n_name
 @register("join_left", oracle=JOIN_LEFT_ORACLE)
 def join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join keeping customers with no orders (null-padded right side)."""
-    n = _t(spark, sf_dir, "nation")
+    n = load_table(spark, sf_dir, "nation")
     s = load_table(spark, sf_dir, "supplier")
     return (
         n.join(s, F.col("n_nationkey") == F.col("s_nationkey"), "left")
@@ -197,7 +191,7 @@ ORDER BY n_name
 @register("join_right", oracle=JOIN_RIGHT_ORACLE)
 def join_right(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right outer join — mirror of join_left with sides swapped."""
-    n = _t(spark, sf_dir, "nation")
+    n = load_table(spark, sf_dir, "nation")
     s = load_table(spark, sf_dir, "supplier")
     return (
         s.join(n, F.col("s_nationkey") == F.col("n_nationkey"), "right")
@@ -227,7 +221,7 @@ ORDER BY nationkey
 def join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join preserving unmatched rows from both sides (null-padded)."""
     c = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .groupBy(F.col("c_nationkey").alias("nationkey"))
         .agg(F.count(F.lit(1)).alias("n_cust"))
     )
@@ -259,7 +253,7 @@ ORDER BY c_custkey
 @register("join_semi", oracle=JOIN_SEMI_ORACLE)
 def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left semi join (EXISTS form): filters the left side, emits no right columns."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 200000)
     return (
         c.join(o, F.col("c_custkey") == F.col("o_custkey"), "left_semi")
@@ -279,7 +273,7 @@ ORDER BY c_custkey
 @register("join_anti", oracle=JOIN_ANTI_ORACLE)
 def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left anti join (NOT IN / NOT EXISTS form) — stops at first match, no duplication."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     return (
         c.join(o, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
@@ -300,7 +294,7 @@ ORDER BY r_name, p_type
 @register("join_cross", oracle=JOIN_CROSS_ORACLE)
 def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cartesian product of two tiny dims with an explicit crossJoin (the only legal cross)."""
-    r = _t(spark, sf_dir, "region")
+    r = load_table(spark, sf_dir, "region")
     p = load_table(spark, sf_dir, "part").select("p_type").distinct()
     return (
         r.crossJoin(F.broadcast(p))
@@ -326,7 +320,7 @@ def join_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theta join: equi component (nationkey) drives the shuffle/broadcast,
     the non-equi predicate is evaluated post-match — the scalable shape for
     mixed conditions (a pure theta join would be a broadcast-nested-loop)."""
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     c = load_table(spark, sf_dir, "customer")
     return (
         F.broadcast(s)
@@ -356,7 +350,7 @@ ORDER BY band
 @register("range_join_bands", oracle=RANGE_JOIN_ORACLE)
 def range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range/band join: each fact row matched to its [lo,hi) band; band table broadcast."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     # SQL VALUES → JVM LocalTableScan: createDataFrame would route the
     # build side through a Python RDD (slow worker spin-up per task)
     bands = spark.sql(
@@ -394,7 +388,7 @@ ORDER BY e.event_id
 def asof_join_events_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join via union + window (see operators/joins.py) — one
     shuffle, no row explosion. Oracle uses DuckDB's native ASOF JOIN."""
-    e = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     o = (
         load_table(spark, sf_dir, "orders")
         .groupBy("o_custkey", "o_orderdate")
@@ -447,7 +441,7 @@ def asof_join_forward_next_purchase(spark: SparkSession, sf_dir: str) -> DataFra
     currentRow..unboundedFollowing + first(ignorenulls)
     (operators/joins.py::asof_join direction='forward'). Oracle is
     DuckDB's native ASOF with the inequality reversed."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     clicks = e.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts"
     )
@@ -522,7 +516,7 @@ def fuzzy_join_entity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes union when a dirt model can damage early tokens."""
     from gcs2postgres_spark.operators.joins import blocked_fuzzy_join
 
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     left = p.select(
         "p_partkey",
         "p_name",
@@ -617,7 +611,7 @@ def fuzzy_join_topk_per_entity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair)."""
     from gcs2postgres_spark.operators.joins import blocked_fuzzy_join_topk
 
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     left = p.select(
         "p_partkey",
         "p_name",

@@ -44,12 +44,6 @@ from gcs2postgres_spark.operators.similarity import (
     train_ivf_quantizer,
 )
 from gcs2postgres_spark.queries.registry import register
-from gcs2postgres_spark.session import tune_for_session
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_for_session(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -69,7 +63,7 @@ ORDER BY doc_id
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact text dedup: keep min doc_id per distinct text + copy count
     (hash-groupBy; deterministic vs dropDuplicates' arbitrary pick)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.groupBy("text")
         .agg(F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("n_copies"))
@@ -91,7 +85,7 @@ ORDER BY first_doc
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonicalizing md5 fingerprint (document fingerprinting / exact-dup
     detection robust to case+whitespace)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.select(fingerprint(F.col("text")).alias("fp"), "doc_id")
         .groupBy("fp")
@@ -126,7 +120,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact token-set Jaccard near-dup pairs (> 0.5) on a bounded id range —
     the exact form of what MinHash-LSH approximates; also the verify step
     of the LSH pipeline."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     return (
         jaccard_pairs(d, "doc_id", "text", shingle_n=1)
         .filter(F.col("jaccard") > 0.5)
@@ -182,7 +176,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-runs the explode+distinct shuffle. Size-conditional
     (operators.caching): at sf0.1 the cache build cost more than the
     re-runs it saved."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     shingled = maybe_persist(shingle_docs(d, "doc_id", "text", shingle_n=3))
     # with_size + carry: the shingle count rides the banding pipeline, so
     # the verify step joins no standalone sizes branches — the r17
@@ -244,7 +238,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     can dirty at most 3 of 4 bands), so the banded join provably finds
     every qualifying pair — no approximation gap. The xxhash64 variant
     (faster, same plan) stays the default in operators/dedup.py."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     fps = simhash(d, "doc_id", "text", bits=60, portable=True)
     return simhash_near_pairs(fps, "doc_id", max_hamming=3, bits=60, bands=4).orderBy(
         "id_a", "id_b"
@@ -276,7 +270,7 @@ def dedup_cosine_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholds, where its recall math actually wins."""
     from gcs2postgres_spark.operators.similarity import blocked_cosine_pairs
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     return (
         blocked_cosine_pairs(e, threshold=0.45)
         .withColumn("cos_sim", F.round(F.col("cos_sim"), 9))
@@ -310,7 +304,7 @@ def similarity_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full corpus — broadcast queries, corpus streams partition-parallel.
     cos_sim quantized to 9dp: BLAS dot vs DuckDB's accumulation differ in
     the last ulp; ranking happens on the raw values, rounding is output-only."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 10)
     return brute_force_cosine_topk(q, e, k=5).orderBy(
         "query_id", F.col("cos_sim").desc(), "neighbor_id"
@@ -325,7 +319,7 @@ def _ann_recall_contract(
     The recall contract is what an external oracle can state about an
     approximate index — the exact baseline rides along only to make the
     assertion computable in-engine."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 10)
     ann = ann_topk(q, e).select("query_id", "neighbor_id")
     exact = brute_force_cosine_topk(q, e, k=5).select("query_id", "neighbor_id")
@@ -418,7 +412,7 @@ def _ivf_partitioned_path(spark: SparkSession, sf_dir: str, n_centroids: int, se
         f"{os.path.getmtime(src)}:{os.path.getsize(src)}".encode()
     ).hexdigest()[:10]
     path = os.path.join(tempfile.gettempdir(), f"spark_graft_ivf_{tag}")
-    base = _t(spark, sf_dir, "embeddings").select(
+    base = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("cid"), F.col("embedding").cast("array<double>").alias("vec")
     )
     cent = train_ivf_quantizer(base, n_centroids=n_centroids, seed=seed)
@@ -443,7 +437,7 @@ def similarity_ivf_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     this entry certifies the scale path's physical layout."""
     n_centroids, n_probe, k, seed = 16, 4, 5, 42
     path, cent = _ivf_partitioned_path(spark, sf_dir, n_centroids, seed)
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 3)
 
     triple = ivf_query_probes(q, cent, "vec_id", "embedding", n_probe)
@@ -501,7 +495,7 @@ ORDER BY label
 def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array-column math battery: per-label L2-norm stats via higher-order
     functions (aggregate/transform) — the JVM-side vector-math pattern."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     vec = F.col("embedding").cast("array<double>")
     return (
         e.groupBy("label")
@@ -542,7 +536,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan first (guide §2.5; documents at sf1 scans as 2 partitions on a
     32-core box, serializing the regex work). Partitioning cannot
     change the grouped sums."""
-    d = widen_doc_scan(_t(spark, sf_dir, "documents"), "doc_id")
+    d = widen_doc_scan(load_table(spark, sf_dir, "documents"), "doc_id")
     return (
         d.groupBy("lang")
         .agg(
@@ -573,7 +567,7 @@ ORDER BY doc_id
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality features (length, lexical diversity, non-alpha
     ratio) — the filter basis of a training-data quality gate."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     cols = quality_score_cols(F.col("text"))
     return d.select(
         "doc_id",
@@ -595,7 +589,7 @@ ORDER BY n_docs DESC, lang
 @register("text_lang_distribution", oracle=LANG_DIST_ORACLE)
 def text_lang_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language distribution: n-gram-heuristic language ID aggregated per language bucket."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.avg(F.col("n_chars").cast("double")).alias("avg_len"))
@@ -646,7 +640,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Widened first: the split + 15 array_contains probes per doc are the
     heavy stage and otherwise run at the narrow corpus-scan width."""
-    d = widen_doc_scan(_t(spark, sf_dir, "documents"), "doc_id")
+    d = widen_doc_scan(load_table(spark, sf_dir, "documents"), "doc_id")
     return (
         d.select(lang_id_heuristic(F.col("text")).alias("predicted"), F.col("lang").alias("actual"))
         .groupBy("predicted", "actual")
@@ -678,7 +672,7 @@ def multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/multimodal.py for the decode plumbing). Output flattened for
     oracle comparability; in-engine the same join carries
     struct(text, embedding, payload)."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     e = load_table(spark, sf_dir, "embeddings")
     return (
         d.join(e, d.doc_id == e.vec_id)
@@ -719,7 +713,7 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Python decode stage — is replayed by the SQL oracle."""
     from gcs2postgres_spark.operators.multimodal import attach_fake_media, decode_media
 
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
     decoded = decode_media(attach_fake_media(d))
     return (
         decoded.groupBy((F.col("width") % 4).alias("w_bucket"))
@@ -780,7 +774,7 @@ def doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; the xxhash64 variant stays the production default."""
     from gcs2postgres_spark.operators.dedup import winnow_shared_pairs
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return winnow_shared_pairs(d, "doc_id", "text", min_shared=5, portable=True).orderBy(
         F.col("n_shared").desc(), "id_a", "id_b"
     )
@@ -846,7 +840,6 @@ def embedding_kmeans_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no RNG), so the oracle replays the identical unrolled recurrence;
     integer cluster populations compare exactly — one flipped
     assignment fails the row hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.operators.similarity import kmeans_lloyd
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -952,7 +945,7 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled recurrence."""
     from gcs2postgres_spark.operators.similarity import pq_adc_topk
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     return pq_adc_topk(emb, m_subspaces=2, k_codes=4, n_iters=1, n_queries=3, topk=5)
 
 
@@ -998,7 +991,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # unbounded per-doc frame explosion — widen a compact corpus scan
     # first (guide §2.5; flagged by the r18 widen-guard sweep)
-    d = widen_doc_scan(_t(spark, sf_dir, "documents"), "doc_id")
+    d = widen_doc_scan(load_table(spark, sf_dir, "documents"), "doc_id")
     rec = d.select(
         "doc_id",
         F.encode(F.col("text"), "utf-8").alias("payload"),
@@ -1061,7 +1054,7 @@ def multimodal_wav_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as _pd
 
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200).select("doc_id")
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200).select("doc_id")
 
     def _make_stage():
         # ship the codec MODULE by value: decode_wav/encode_wav_pcm16 are
@@ -1259,7 +1252,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.prefix_jaccard_pairs) unchanged. The id caps bound
     the demo corpus, not the operator."""
     d = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 1000)
         .select("doc_id", "text")
     )
@@ -1389,7 +1382,7 @@ def agg_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: one groupBy over ≤256 register rows with map-side partial
     max — the sketch any 100 TB distinct-count rollup ships between
     stages instead of raw keys."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     from gcs2postgres_spark.operators.dedup import portable_hash60
 
     h = o.select(
@@ -1490,7 +1483,7 @@ def contrastive_pairs_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast scalar count."""
     from gcs2postgres_spark.operators.dedup import prefix_jaccard_pairs
 
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
     pos = prefix_jaccard_pairs(docs, "doc_id", "text", 3, 5).select(
         F.col("id_a").alias("anchor"),
         F.col("id_b").alias("positive"),
@@ -1566,7 +1559,7 @@ def multimodal_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         image_ahash,
     )
 
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
     hashed = image_ahash(attach_pattern_png(d, key_mod=200, side=8))
     groups = hashed.groupBy("ahash").agg(F.count(F.lit(1)).alias("group_size"))
     return (
@@ -1626,7 +1619,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.containment_pairs)."""
     from gcs2postgres_spark.operators.dedup import containment_pairs
 
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     return containment_pairs(
         d, "doc_id", "text", threshold_num=2, threshold_den=5, shingle_n=3
     ).orderBy("id_a", "id_b")
@@ -1683,7 +1676,7 @@ def multimodal_audio_fp_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pandas as _pd
 
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500).select("doc_id")
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500).select("doc_id")
 
     def _make_stage():
         from pyspark import cloudpickle as _cp
@@ -1769,7 +1762,7 @@ def text_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gcs2postgres_spark.functions.text import pii_redact
     from gcs2postgres_spark.operators.caching import widen_doc_scan
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     # parallelism guard (guide §2.5): the 5-pattern regexp_replace chain
     # over full text is this query's whole cost, and a compact corpus
     # scan runs it on 2 cores at sf1 (operators.caching.widen_doc_scan)
@@ -1856,7 +1849,7 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot-document counts must match exactly."""
     from gcs2postgres_spark.operators.dedup import duplicate_spans
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     per_doc = duplicate_spans(docs, "doc_id", "text", k=SPAN_K, min_docs=2)
     return (
         docs.select("doc_id", "lang")

@@ -23,12 +23,6 @@ from pyspark.sql import functions as F
 
 from gcs2postgres_spark.catalog import load_table
 from gcs2postgres_spark.queries.registry import register
-from gcs2postgres_spark.session import tune_for_session
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_for_session(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -50,7 +44,7 @@ def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiplicity-right) times — distinct from ``intersect`` (set
     semantics, covered by set_intersect). Aggregated to per-key counts
     so the oracle compare is order-free but still multiplicity-exact."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     a = li.filter(F.col("l_returnflag") == "R").select(F.col("l_suppkey").alias("suppkey"))
     b = li.filter(F.col("l_linestatus") == "F").select(F.col("l_suppkey").alias("suppkey"))
     return (
@@ -75,7 +69,7 @@ def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT ALL: multiplicity subtraction, max(l-r, 0) per row —
     distinct from ``subtract`` (EXCEPT DISTINCT, covered by
     set_except)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     a = li.filter(F.col("l_returnflag") == "R").select(F.col("l_suppkey").alias("suppkey"))
     b = li.filter(F.col("l_linestatus") == "F").select(F.col("l_suppkey").alias("suppkey"))
     return (
@@ -103,7 +97,7 @@ def explode_pos_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     the position column is what sequence-aware consumers (n-gram
     windows, BPE merges) key on. One narrow generate per row; no
     shuffle at all until the final presentation sort."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
     return (
         d.select("doc_id", F.posexplode(F.split("text", " ")).alias("pos", "token"))
         .orderBy("doc_id", "pos")
@@ -126,7 +120,7 @@ def explode_outer_rare_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     breaks per-document accounting in dedup/quality pipelines). The
     length-8 token filter leaves ~20% of documents with an empty
     array, so the outer semantics are actually exercised."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     arr = F.filter(F.split("text", " "), lambda x: F.length(x) >= 8)
     return (
         d.select("doc_id", F.explode_outer(arr).alias("token"))
@@ -156,7 +150,6 @@ def lateral_topk_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same physical shape as topk_per_group), so the inner relation is
     NOT re-executed per outer row — the property that matters when the
     outer side has 10^9 rows."""
-    tune_for_session(spark)
     load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation")
     load_table(spark, sf_dir, "supplier").createOrReplaceTempView("supplier")
     return spark.sql(LATERAL_ORACLE)
@@ -183,10 +176,10 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULLs are manufactured with nullif so both branches match rows.
     Broadcast dim → the NULL bucket never concentrates a shuffle
     partition (see module docstring for the at-scale caveat)."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.nullif(F.col("o_orderpriority"), F.lit("1-URGENT")).alias("p")
     )
-    dim = _t(spark, sf_dir, "orders").sparkSession.createDataFrame(
+    dim = load_table(spark, sf_dir, "orders").sparkSession.createDataFrame(
         [("2-HIGH",), (None,)], "allowed_priority: string"
     )
     return (
@@ -227,7 +220,7 @@ def agg_hll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact distinct count plus a boolean asserting the lgK=14
     estimate (±~0.8% RSE) landed within 2%; the merged `__ALL__` row
     proves hll_union_agg re-aggregability."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     per_seg = c.groupBy("c_mktsegment").agg(
         F.hll_sketch_agg("c_custkey", 14).alias("sk"),
         F.countDistinct("c_custkey").alias("exact_distinct"),
@@ -287,7 +280,6 @@ def recursive_cte_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side tiny (12 iterations × 1 row); the fact aggregation is
     the usual partial+final groupBy. Identical SQL runs on both engines
     (ANSI recursive CTE)."""
-    tune_for_session(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(RECURSIVE_SPINE_SQL)
 
@@ -314,7 +306,7 @@ def variant_props_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercised in json_extract_agg), VARIANT parses each row once and
     every subsequent field access is a binary probe — the right shape
     when a props blob is accessed by many expressions at 100 TB."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     v = F.parse_json(F.col("props"))
     k = F.try_variant_get(v, "$.k", "bigint")
     return (
@@ -352,7 +344,7 @@ def hof_array_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     array dimension inside the row. avg is rounded to 5 dp: the fold is
     sequential per row, but averaging across rows is order-sensitive in
     the last bits."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     emb = F.col("embedding")
     sum2x = F.aggregate(
         F.transform(emb, lambda x: x.cast("double") * 2.0),

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from gcs2postgres_spark.catalog import load_table
 from gcs2postgres_spark.queries.registry import register
-from gcs2postgres_spark.session import tune_for_session
 
 MERGE_UPSERT_ORACLE = """
 WITH updates AS (
@@ -45,7 +44,6 @@ def merge_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     format; with Iceberg/Delta jars the same frame feeds MERGE
     directly). Update set simulated deterministically (every 10th
     order re-prioritized) so the oracle replays it exactly."""
-    tune_for_session(spark)
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     base = o.withColumn("src", F.lit(1))
     updates = (
@@ -106,7 +104,6 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round-to-nearest error ≤ scale/2 per element ⇒ mse ≤ scale²/4)
     rather than an exact hash — float summation order differs across
     engines at the last ulp (same policy as the HLL/approx contracts)."""
-    tune_for_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     # TWO projections, like the winnower's gram/minima split: if the
     # min/max/scale expressions sit inline in the per-element lambda,
@@ -186,7 +183,6 @@ def pii_redact_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     and otherwise runs at the compact corpus scan's width (sf3 sweep:
     51.5 s as the #1 ceiling before the guard); the widen repartition
     is the plan's only shuffle besides the final sort."""
-    tune_for_session(spark)
     from gcs2postgres_spark.operators.caching import widen_doc_scan
 
     docs = widen_doc_scan(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -245,7 +241,6 @@ def snapshot_diff_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     join (operators/diff.py), summarized as (status, n, key_sum) so the
     hash certifies the complete classification. The incremental-load
     validation every warehouse runs."""
-    tune_for_session(spark)
     o = load_table(spark, sf_dir, "orders")
     snap_a = o.filter(F.col("o_orderkey") % 11 != 0).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -329,7 +324,6 @@ def bloom_semi_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     output certifies the bitmap bit-for-bit: scanned / bloom-passed /
     exact-semi-join / false-positive counts must all match an
     independent SQL reconstruction of the same filter."""
-    tune_for_session(spark)
     from gcs2postgres_spark.operators.bloom import bloom_build, bloom_prune
 
     sup = load_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") > 9000)
@@ -392,7 +386,6 @@ def profile_table_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     column — the profiling shape that stays affordable at 100 TB; at
     extreme widths swap exact distinct for approx_count_distinct, same
     plan). Output unpivoted to (col, n_nulls, n_distinct)."""
-    tune_for_session(spark)
     o = load_table(spark, sf_dir, "orders")
     cols = [
         "o_custkey",
@@ -456,7 +449,6 @@ def incremental_rollup_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance pipeline rests on. Cost shape at 100 TB: the update
     touches |delta| rows + |dirty days| rollup rows, never the base
     table."""
-    tune_for_session(spark)
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderdate").cast("date").alias("order_date"), "o_totalprice", "o_orderkey"
     )
@@ -530,7 +522,6 @@ def pipeline_checksum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; scales to any table size with map-side partials."""
     from gcs2postgres_spark.operators.dedup import portable_hash60
 
-    tune_for_session(spark)
     o = load_table(spark, sf_dir, "orders")
     row_repr = F.concat_ws(
         "|",

@@ -9,11 +9,14 @@ alias every computed column on both sides.
 
 from __future__ import annotations
 
+import functools
 import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from gcs2postgres_spark.session import tune_for_session
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -96,13 +99,26 @@ REGISTRY: dict[str, QuerySpec] = {}
 
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+    """Register ``fn`` under ``name`` and return it wrapped so every call
+    pins the session's semantics (UTC, lenient casts, nanos-as-long
+    reads: ``tune_for_session``) before the query builds. The driver
+    runs queries on a session it built itself; this is the one place
+    that holds them to the engine's semantics, so query code never pins.
+    """
+
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
+
+        @functools.wraps(fn)
+        def pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
+            tune_for_session(spark)
+            return fn(spark, sf_dir)
+
         REGISTRY[name] = QuerySpec(
-            name, fn, materialize_ctes(oracle) if oracle else oracle
+            name, pinned, materialize_ctes(oracle) if oracle else oracle
         )
-        return fn
+        return pinned
 
     return deco
 

@@ -21,12 +21,6 @@ from pyspark.sql import functions as F
 
 from gcs2postgres_spark.catalog import load_table
 from gcs2postgres_spark.queries.registry import register
-from gcs2postgres_spark.session import tune_for_session
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_for_session(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -53,7 +47,7 @@ ORDER BY l_returnflag, l_linestatus
 @register("q1_pricing_summary", oracle=Q1_ORACLE)
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1: scan -> shipdate filter -> groupBy(flag,status) -> 8 aggregates -> sort (the flagship)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.filter(F.col("l_shipdate") <= F.to_timestamp(F.lit("1998-09-02 00:00:00")))
@@ -90,7 +84,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
 @register("q6_revenue_forecast", oracle=Q6_ORACLE)
 def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6: pure scan-filter-aggregate on range predicates; zero joins, one partial+final agg."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.to_timestamp(F.lit("1996-01-01 00:00:00")))
@@ -122,7 +116,7 @@ ORDER BY o_orderkey
 @register("filter_in_like", oracle=FILTER_IN_LIKE_ORACLE)
 def filter_in_like(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN-list + LIKE + range predicates combined; all pushed to the parquet scan."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.filter(
             F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
@@ -148,7 +142,7 @@ ORDER BY c_custkey
 def filter_null_bool(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IS NULL / IS NOT NULL semantics (testdata has no physical NULLs, so
     nulls are manufactured with nullif — same on the oracle side)."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     seg_or_null = F.nullif(F.col("c_mktsegment"), F.lit("BUILDING"))
     return (
         c.withColumn("seg_or_null", seg_or_null)
@@ -177,7 +171,7 @@ ORDER BY o_orderkey
 @register("project_case_when", oracle=PROJECT_CASE_ORACLE)
 def project_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASE WHEN expression ladder + computed projections, all codegen'd."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.select(
             "o_orderkey",
@@ -215,7 +209,7 @@ ORDER BY l_returnflag
 @register("agg_stats_basic", oracle=AGG_STATS_ORACLE)
 def agg_stats_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sum/avg/min/max/count/stddev in one pass — all partial-aggregatable, one shuffle."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .agg(
@@ -243,7 +237,7 @@ ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
 @register("agg_rollup", oracle=AGG_ROLLUP_ORACLE)
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy (flag -> flag,status -> grand total) in one Expand + single shuffle."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(F.sum("l_quantity").cast("double").alias("sum_qty"), F.count(F.lit(1)).alias("n"))
@@ -264,7 +258,7 @@ ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
 @register("agg_cube", oracle=AGG_CUBE_ORACLE)
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (returnflag, linestatus): all 4 grouping combinations in one Expand + single shuffle."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.cube("l_returnflag", "l_linestatus")
         .agg(F.round(F.avg("l_extendedprice"), 6).alias("avg_price"), F.count(F.lit(1)).alias("n"))
@@ -287,7 +281,7 @@ ORDER BY o_orderpriority
 @register("agg_filtered", oracle=AGG_FILTERED_ORACLE)
 def agg_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered aggregates (sum/count over CASE WHEN) — predicates fold into the map-side partials."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_orderpriority")
         .agg(
@@ -323,7 +317,7 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces exact count-distinct's full shuffle with a fixed-size
     mergeable state; here the exact count rides along only to make the
     estimate externally checkable."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     within = lambda approx, exact: (  # noqa: E731
         F.abs(F.col(approx) - F.col(exact)) <= 0.05 * F.col(exact)
     )
@@ -369,7 +363,7 @@ ORDER BY o_orderpriority
 def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact median via percentile (interpolating, matches DuckDB median on
     doubles); approx variant would use percentile_approx at scale."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_orderpriority")
         .agg(
@@ -404,7 +398,7 @@ ORDER BY c_custkey
 @register("scalar_string_funcs", oracle=SCALAR_STRING_ORACLE)
 def scalar_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String scalar battery: concat, substr, upper/lower, trim, lpad, regexp_replace."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     return (
         c.filter(F.col("c_custkey") < 500)
         .select(
@@ -440,7 +434,7 @@ ORDER BY o_orderkey
 @register("scalar_date_funcs", oracle=SCALAR_DATE_ORACLE)
 def scalar_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time scalar battery: date_trunc, datediff, extract, add_months et al."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.filter(F.col("o_orderkey") < 500)
         .select(
@@ -478,7 +472,7 @@ ORDER BY p_partkey
 @register("scalar_math_funcs", oracle=SCALAR_MATH_ORACLE)
 def scalar_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Math scalar battery: round, abs, log, sqrt, power, sign, mod."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return (
         p.filter(F.col("p_partkey") < 1000)
         .select(
@@ -513,7 +507,7 @@ def topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k: Spark plans this as TakeOrderedAndProject — per-partition
     heap + single-driver merge of k rows, no global sort. Tie-broken on the
     unique key so results are deterministic."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
@@ -537,7 +531,7 @@ SELECT nationkey FROM (
 @register("set_union", oracle=SET_UNION_ORACLE)
 def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION DISTINCT: union followed by dedup — one hash shuffle on the full row."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.union(s).distinct().orderBy("nationkey")
 
@@ -553,7 +547,7 @@ ORDER BY nationkey
 @register("set_intersect", oracle=SET_INTERSECT_ORACLE)
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT DISTINCT: set intersection with dedup semantics."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.intersect(s).orderBy("nationkey")
 
@@ -569,7 +563,7 @@ ORDER BY nationkey
 @register("set_except", oracle=SET_EXCEPT_ORACLE)
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT DISTINCT (subtract): set difference of nation keys across two tables."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     # subtract = EXCEPT DISTINCT (set semantics); exceptAll would keep
     # per-row multiplicity and over-report
@@ -588,7 +582,7 @@ SELECT kind, count(*) AS n FROM (
 @register("set_union_all", oracle=UNION_ALL_ORACLE)
 def set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL: bag union, no dedup shuffle, then aggregated per source tag."""
-    c = _t(spark, sf_dir, "customer").select(
+    c = load_table(spark, sf_dir, "customer").select(
         F.lit("cust").alias("kind"), F.col("c_nationkey").alias("nationkey")
     )
     s = load_table(spark, sf_dir, "supplier").select(
@@ -612,7 +606,7 @@ ORDER BY l_returnflag, l_linestatus, l_shipdate
 @register("distinct_subset", oracle=DISTINCT_ORACLE)
 def distinct_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dropDuplicates on a key subset — hash-shuffle on the subset, first row per key."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") < F.to_timestamp(F.lit("1995-03-01 00:00:00")))
         .select("l_returnflag", "l_linestatus", "l_shipdate")
@@ -646,7 +640,6 @@ ORDER BY c_mktsegment
 def subquery_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar subquery + IN-subquery + CTE. Catalyst decorrelates the IN
     into a left-semi join and the scalar subquery into a broadcast."""
-    tune_for_session(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(

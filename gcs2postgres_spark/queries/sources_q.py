@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from gcs2postgres_spark.catalog import load_table
 from gcs2postgres_spark.queries.registry import register
-from gcs2postgres_spark.session import tune_for_session
 
 ICEBERG_ROUNDTRIP_ORACLE = """
 SELECT n_regionkey,
@@ -46,7 +45,6 @@ def iceberg_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle aggregates the same table straight from parquet, so
     any drift in the manifest walk (lost file, double-counted file,
     misapplied schema) breaks the row/hash match."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import write_iceberg_fixture
     from gcs2postgres_spark.sources.readers import read_source
 
@@ -92,7 +90,6 @@ def delta_row_tracking_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ids deterministic (0..n-1 in key order), so the oracle is plain
     row_number arithmetic — any drift in allocation, backfill, or the
     file->baseRowId broadcast map breaks the hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         enable_row_tracking,
         read_delta_with_row_ids,
@@ -151,7 +148,6 @@ def delta_identity_columns_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     the oracle reproduces the exact sequence with row_number
     arithmetic; the second batch starting at hwm+step pins the
     watermark advance across commits."""
-    tune_for_session(spark)
     from pyspark.sql.types import LongType, StructField, StructType
 
     from gcs2postgres_spark.sources.delta_py import (
@@ -211,7 +207,6 @@ def delta_type_widening_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     types. Rows added post-widening are filtered back out so the oracle
     stays declarative over nation; the aggregate's key_sum breaks on
     any lost/uncast file."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         alter_delta_widen_column,
         read_delta_py,
@@ -288,7 +283,6 @@ def iceberg_orc_deletes_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     into the same snapshot chain (mixed formats are spec-legal). The
     oracle recomputes the end state, so a misaligned position or a
     resurrected row breaks the hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         read_iceberg_py,
         update_where,
@@ -350,7 +344,6 @@ def iceberg_orc_data_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot. The oracle aggregates the source table directly, so a
     lost/double-counted ORC file or a type drift in the ORC scan breaks
     the hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         read_iceberg_py,
         write_iceberg_fixture,
@@ -406,7 +399,6 @@ def iceberg_avro_data_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence gating over the avro scan). The oracle replays the
     surviving-row set declaratively, so a decode drift, a position
     off-by-one, or a sequence-gating slip breaks the hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         read_iceberg_py,
         write_iceberg_v2_fixture,
@@ -468,7 +460,6 @@ def iceberg_v2_deletes_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the surviving-row set declaratively, so a delete
     that leaks, over-applies, or ignores its sequence number breaks
     the hash match."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import write_iceberg_v2_fixture
     from gcs2postgres_spark.sources.readers import read_source
 
@@ -537,7 +528,6 @@ def iceberg_v2_delete_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     n_nationkey=6 may itself sit in an already-deleted region — the
     replacement row must SURVIVE regardless (its data file is newer than
     every delete's sequence number), which the oracle's UNION encodes."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         delete_where,
         overwrite_where,
@@ -595,7 +585,6 @@ def iceberg_partitioned_dml_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     deletes break the hash. Scoping conformance (each delete file
     references only its own partition's data files) is pinned separately
     in tests/test_sources_formats.py."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         delete_where,
         overwrite_where,
@@ -655,7 +644,6 @@ def avro_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (foreachPartition is an action) and read back immediately; the
     aggregate result is small, so the returned plan re-reads only the
     avro files if re-executed."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.avro_py import write_avro_distributed
     from gcs2postgres_spark.sources.readers import read_source
 
@@ -708,7 +696,6 @@ def avro_logical_types_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     two's-complement), dates/timestamps as exact integer days/micros —
     the roundtrip is lossless and the oracle recomputes the same
     aggregates straight from parquet."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.avro_py import write_avro_distributed
     from gcs2postgres_spark.sources.readers import read_source
 
@@ -765,7 +752,6 @@ def delta_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the read must honor BOTH remove actions and typed partition-value
     injection — a dropped remove, a leaked tombstone, or a null/mistyped
     partition column each break the hash vs the declarative oracle."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import write_delta_fixture
     from gcs2postgres_spark.sources.readers import read_source
 
@@ -813,7 +799,6 @@ def delta_column_mapping_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     min(n_name) breaks immediately. The result re-aliases the logical
     column back to first_name so the oracle stays declarative over the
     original table."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         read_delta_py,
         write_delta_column_mapping_fixture,
@@ -870,7 +855,6 @@ def delta_nested_mapping_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     pins the recursive physical->logical projection exactly. Modern
     Databricks runtimes write precisely this table shape — the most
     common real-table refusal before r13 (VERDICT r12 missing #1)."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         read_delta_py,
         write_delta_column_mapping_fixture,
@@ -935,7 +919,6 @@ def delta_deletion_vector_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     target KEYS to per-file positions by scanning only the key column
     with pyarrow (fixture-only convenience on toy tables, same as the
     Iceberg fixture — the reader never does this)."""
-    tune_for_session(spark)
     import os
     from urllib.parse import unquote
 
@@ -1018,7 +1001,6 @@ def delta_dv_delete_where_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     affected file); only descriptor rows reach the driver. The final
     read decodes three deletion vectors and anti-joins them; a leaked,
     double-applied, or dropped-merge position breaks the hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         delete_where_delta,
         read_delta_py,
@@ -1077,7 +1059,6 @@ def delta_change_feed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the region-2 rows as deletes and the appended rows as
     inserts — a resurrected row, a missed DV delta, or an insert
     attributed from an unchanged file breaks the oracle."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         delete_where_delta,
         delta_table_changes,
@@ -1139,7 +1120,6 @@ def iceberg_change_feed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     exactly: deletes of region-2 rows + nation 6, insert of the
     replacement — double-applied or unattributed entries break the
     oracle."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         delete_where,
         iceberg_table_changes,
@@ -1195,7 +1175,6 @@ def delta_schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     physical name (a name-resolving reader returns NULLs and breaks
     min()), and every pre-ALTER row must surface the added column as
     NULL (null_scores == n_nations per group)."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         alter_delta_add_column,
         alter_delta_rename_column,
@@ -1238,7 +1217,6 @@ def iceberg_schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> Data
     a fresh id and reads NULL for existing files. Both are metadata-only
     commits (atomic tmp+rename). The oracle pins the renamed column's
     VALUES, so a name-resolving regression (NULL column) breaks min()."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         alter_iceberg_add_column,
         alter_iceberg_rename_column,
@@ -1285,7 +1263,6 @@ def delta_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay must stop BEFORE commit 1's removes, resurrecting partition
     3 — the oracle aggregates the full table, so travel that lands on
     HEAD (or replays removes early) under-counts and fails."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import write_delta_fixture
     from gcs2postgres_spark.sources.readers import read_source
 
@@ -1325,7 +1302,6 @@ def delta_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     must tombstone every live file of v0+v1 — a missed remove, a wrong
     version number, or a file-name collision across commits each breaks
     one of the two snapshots vs the declarative oracle."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import read_delta_py, write_delta
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -1377,7 +1353,6 @@ def iceberg_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     append snapshot AND at HEAD. Wrong manifest accumulation, a stale
     version-hint, or snapshot-id collisions each break a row vs the
     declarative oracle."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import read_iceberg_py, write_iceberg
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -1429,7 +1404,6 @@ def csv_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     CSV external-table lane (format from file extension,
     src/db/db.go:27) end-to-end with values certified against the
     original parquet."""
-    tune_for_session(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1466,7 +1440,6 @@ def json_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit schema) → aggregate; the reference's JSON lane certified
     value-for-value, including strings with whitespace/quotes surviving
     the JSON encoding."""
-    tune_for_session(spark)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     path = tempfile.mkdtemp(prefix="json_rt_") + "/documents.json"
     d.write.mode("overwrite").json(path)
@@ -1497,7 +1470,6 @@ def orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lineitem → ORC → read_source (format from extension) →
     aggregate: the columnar-format lane beyond parquet, certified
     value-for-value against the original."""
-    tune_for_session(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_quantity"
     )
@@ -1544,7 +1516,6 @@ def parquet_schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> Data
     reads ONE footer per file at planning time; steady-state tables
     promote the merged schema into table metadata (the Delta/Iceberg
     layers here do precisely that via metaData/schemaString)."""
-    tune_for_session(spark)
     n = load_table(spark, sf_dir, "nation")
     path = tempfile.mkdtemp(prefix="schevo_rt_")
     n.filter(F.col("n_nationkey") < 12).select(
@@ -1590,7 +1561,6 @@ def iceberg_partition_prune_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     pruning is an optimization, never the correctness mechanism), and
     tests/test_sources_formats pins via inputFiles() that exactly the
     two matching partitions' files reach the scan."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         read_iceberg_py,
         write_iceberg_partitioned_fixture,
@@ -1646,7 +1616,6 @@ def parquet_partitioned_overwrite_roundtrip(spark: SparkSession, sf_dir: str) ->
     the re-read prunes by partition directory. Certified value-for-
     value against the expected merged state computed from the source.
     """
-    tune_for_session(spark)
     e = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     path = tempfile.mkdtemp(prefix="dyn_overwrite_rt_") + "/events_part"
     (
@@ -1705,7 +1674,6 @@ def csv_malformed_drop_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the CSV parser itself — no pre-scan, no driver filtering; a 100 TB
     dirty feed costs the same single pass a clean one does.
     """
-    tune_for_session(spark)
     o = (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -1769,7 +1737,6 @@ def parquet_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     roundtrip is the same single-pass scan; writer parallelism and
     reader pushdown are codec-independent.
     """
-    tune_for_session(spark)
     li = (
         load_table(spark, sf_dir, "lineitem")
         .where(F.col("l_orderkey") % 10 == 0)
@@ -1818,7 +1785,6 @@ def iceberg_update_where_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     applies the delete files and scans both old and new partitions; a
     row left behind, double-applied, or routed to the wrong partition
     breaks the hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         read_iceberg_py,
         update_where,
@@ -1866,7 +1832,6 @@ def delta_update_where_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     region=2 to the brand-new region=7 (Hive-style layout). The read
     back decodes the vectors, anti-joins them, and injects partition
     values for both old and new directories."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         read_delta_py,
         update_where_delta,
@@ -1964,7 +1929,6 @@ def iceberg_merge_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     The match set is a left-semi join from the tagged live scan onto
     the source keys (never a collected IN-list). A dropped update, a
     resurrected old row, or a lost insert breaks the hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         merge_into,
         read_iceberg_py,
@@ -1996,7 +1960,6 @@ def delta_merge_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of iceberg_merge_upsert_roundtrip — matched keys DV-deleted,
     replacement + insert rows staged partition-wise, ONE log commit.
     The read back must merge per-file vectors with the fresh adds."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         merge_delta,
         read_delta_py,
@@ -2043,7 +2006,6 @@ def iceberg_rewrite_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     The final read sees both deletes; a row resurrected by the rewrite,
     a delete applied twice, or a post-compaction delete matched against
     stale file identities breaks the hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         delete_where,
         read_iceberg_py,
@@ -2088,7 +2050,6 @@ def delta_optimize_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     The final read must apply only the second round of vectors to the
     new files; a stale vector surviving compaction or a resurrected
     row breaks the hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         compact_delta,
         delete_where_delta,
@@ -2158,7 +2119,6 @@ def iceberg_equality_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     resurrect the old row. The read back applies the equality deletes
     as null-safe anti-joins; a self-deleted insert, a surviving old
     row, or a sequence-gate inversion breaks the hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         read_iceberg_py,
         upsert_equality,
@@ -2227,7 +2187,6 @@ def iceberg_partitioned_append_roundtrip(spark: SparkSession, sf_dir: str) -> Da
     read back must see old and new files coexisting in the same
     partitions with correct manifest partition tuples — a mis-scoped
     tuple breaks partition pruning and the hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         append_iceberg_v2,
         read_iceberg_py,
@@ -2290,7 +2249,6 @@ def delta_merge_latest_wins_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     REPLAYED: idempotence demands no commit (None), so the read below
     certifies both the conditional clause and the at-least-once replay
     contract that streaming/cdc_apply.stream_merge_delta builds on."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         merge_delta,
         read_delta_py,
@@ -2349,7 +2307,6 @@ def delta_restore_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation minus only the second predicate. A restore that leaves stale
     vectors, fails to resurrect a file, or breaks subsequent DML shifts
     the aggregate and breaks the hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         delete_where_delta,
         read_delta_py,
@@ -2393,7 +2350,6 @@ def iceberg_rollback_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollback so the second delete's files sequence above everything —
     a committer that reuses rolled-back sequence numbers resurrects or
     double-kills rows and breaks the hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         delete_where,
         read_iceberg_py,
@@ -2448,7 +2404,6 @@ def delta_optimize_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     breaks the exact revenue sum); the file-level min/max pruning the
     curve buys is pinned in tests/test_lakehouse_dml.py. Money math in
     exact integer micros, the repo's ratio_6dp convention."""
-    tune_for_session(spark)
     import os as _os
 
     from gcs2postgres_spark.sources.delta_py import (
@@ -2513,7 +2468,6 @@ def delta_history_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     checked against a VALUES literal, so a committer that silently
     writes extra files, skips a remove, or mislabels its operation
     breaks the hash. The history itself is O(log) metadata."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         compact_delta,
         delete_where_delta,
@@ -2576,7 +2530,6 @@ def iceberg_files_meta_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops a manifest entry, or routes a file to the wrong partition
     tuple breaks the hash WITHOUT any data file being opened (the
     whole query is metadata + one createDataFrame)."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         append_iceberg_v2,
         read_iceberg_meta,
@@ -2630,7 +2583,6 @@ def iceberg_refs_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     The result unions the tag read with the HEAD read; a ref that
     resolves to the wrong snapshot, or an expire that reclaims a
     protected one, breaks the hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         create_ref,
         delete_where,
@@ -2707,7 +2659,6 @@ def lakehouse_sql_dml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parser. A misparsed predicate, a SET split on the wrong comma, or a
     clause mapped to the wrong committer mode changes the final state
     and breaks the hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import read_delta_py, write_delta
     from gcs2postgres_spark.sources.lakehouse_sql import lakehouse_sql
 
@@ -2793,7 +2744,6 @@ def iceberg_transform_partition_roundtrip(spark: SparkSession, sf_dir: str) -> D
     the skip with unreadable-file checks."""
     import datetime as _dt
 
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         append_iceberg_v2,
         create_iceberg_v2_table,
@@ -2867,7 +2817,6 @@ def iceberg_transform_dml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     applies position deletes across old and new partitions."""
     import datetime as _dt
 
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         append_iceberg_v2,
         create_iceberg_v2_table,
@@ -2941,7 +2890,6 @@ def lakehouse_sql_select_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     (one statement may join BOTH formats at DIFFERENT versions). This
     completes the reference's SQL passthrough surface
     (src/db/db.go:59) for reads; round 11 shipped it write-only."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import delete_where_delta, write_delta
     from gcs2postgres_spark.sources.iceberg_py import (
         create_ref,
@@ -3012,7 +2960,6 @@ def delta_constraints_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the table is untouched by the refused write); a conforming
     UPDATE applies. The oracle reproduces the conforming-update-only
     state, so any leak of the refused write's rows breaks the hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         alter_delta_add_constraint,
         read_delta_py,
@@ -3086,7 +3033,6 @@ def lakehouse_sql_insert_ctas_roundtrip(spark: SparkSession, sf_dir: str) -> Dat
     and INSERT INTO ... VALUES (positional binding to the table's
     columns). The read back goes through the jar-less Iceberg reader,
     so mis-routed partitions or dropped appends break the hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import write_delta
     from gcs2postgres_spark.sources.iceberg_py import read_iceberg_py
     from gcs2postgres_spark.sources.lakehouse_sql import lakehouse_sql
@@ -3151,7 +3097,6 @@ def iceberg_wap_branch_publish_roundtrip(spark: SparkSession, sf_dir: str) -> Da
     ``fast_forward`` publishes them atomically in one metadata version.
     The oracle is the post-publish state; a premature leak to the head
     or a lost staged row breaks the hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         append_iceberg_v2,
         create_iceberg_v2_table,
@@ -3215,7 +3160,6 @@ def delta_shallow_clone_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     resurrects the pre-delete state. All four counters come from
     jar-less reads of three distinct tables sharing ONE physical file
     set, so any cross-contamination breaks the hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         delete_where_delta,
         read_delta_py,
@@ -3274,7 +3218,6 @@ def datasource_delta_py_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercises. Batch DV/column-mapping tables refuse with a pointer to
     read_delta_py (the JVM-scan fast path); streaming is the real
     value and is pinned in tests/test_datasource.py."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.datasource import (
         register_lakehouse_datasources,
     )
@@ -3325,7 +3268,6 @@ def datasource_delta_py_mapped(spark: SparkSession, sf_dir: str) -> DataFrame:
     read_delta_py certifies. columnMapping is default-on on current
     Databricks runtimes, so this was the most likely real refusal left
     (r14 verdict, missing #1)."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.datasource import (
         register_lakehouse_datasources,
     )
@@ -3396,7 +3338,6 @@ def datasource_stream_sink_mapped(spark: SparkSession, sf_dir: str) -> DataFrame
     _DeltaStreamWriter.phys_of), one put-if-absent Delta version per
     micro-batch. End state read back through the certified functional
     reader, exact vs the DuckDB oracle."""
-    tune_for_session(spark)
     import json as _json
 
     from gcs2postgres_spark.sources.datasource import (
@@ -3490,7 +3431,6 @@ def merge_multi_clause_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     atomic DV + append commit. The oracle reproduces every clause
     relationally (CASE over the left join + filtered anti-join
     insert)."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import read_delta_py, write_delta
     from gcs2postgres_spark.sources.lakehouse_sql import lakehouse_sql
 
@@ -3566,7 +3506,6 @@ def merge_multi_clause_iceberg_roundtrip(
     INSERT, committed as one position-delete + append snapshot
     (merge_into_clauses). Pins that the shared clause planner drives
     BOTH formats' row-level protocols identically."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         append_iceberg_v2,
         create_iceberg_v2_table,
@@ -3643,7 +3582,6 @@ def merge_per_column_set_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     evaluate over the aliased t./s. pair, un-SET columns keep the
     TARGET's value, unmatched source rows insert whole rows, all in ONE
     atomic DV commit. The oracle reproduces the merge relationally."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import read_delta_py, write_delta
     from gcs2postgres_spark.sources.lakehouse_sql import lakehouse_sql
 
@@ -3713,7 +3651,6 @@ def delta_v2_checkpoint_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     declaratively, so a lost file, resurrected DV-deleted row, or
     dropped metaData breaks the hash. Reference tie: snapshot
     resolution the reference delegates to its engine (src/db/db.go:22-43)."""
-    tune_for_session(spark)
     import glob as _glob
 
     from gcs2postgres_spark.sources.delta_py import (
@@ -3792,7 +3729,6 @@ def iceberg_v3_dv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors declaratively, so a resurrected deleted row, a lost DV,
     or a mis-gated sequence number breaks the hash. Reference tie:
     scan planning the reference delegates (src/db/db.go:22-43)."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         append_iceberg_v2,
         delete_where,
@@ -3864,7 +3800,6 @@ def delta_stats_skip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     VALUES: the filter must be a pure optimization under the matching
     row predicate). At 100 TB this is the min/max scan-planning skip
     every warehouse performs from metadata alone."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import read_delta_py, write_delta
 
     cust = load_table(spark, sf_dir, "customer").select(
@@ -3901,7 +3836,6 @@ def iceberg_stats_skip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     MANIFEST walk, before any parquet footer is opened. Same oracle as
     the Delta twin: identical values prove the skip is pure
     optimization on both formats."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         read_iceberg_py,
         write_iceberg_v2_fixture,
@@ -3957,7 +3891,6 @@ def iceberg_v3_row_lineage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly that with row_number(); any drift in block carving,
     watermark arithmetic, or position mapping shifts a rid_sum.
     Pre-lineage rows read NULL ids (pytest-pinned) and are filtered."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         append_iceberg_v2,
         read_iceberg_with_row_ids,
@@ -4022,7 +3955,6 @@ def delta_ict_time_travel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     semantics would wrongly include them; that wrong result is exactly
     what breaks this oracle's 'asof' row). The 'head' row pins that the
     rows are otherwise present."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         read_delta_py,
         set_delta_property,
@@ -4088,7 +4020,6 @@ def variant_lakehouse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     variantType (reader+writer); the Iceberg manifests' record counts
     come from the Spark count fallback (pyarrow cannot parse variant
     footers). Both tables must agree with each other AND the oracle."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import read_delta_py, write_delta
     from gcs2postgres_spark.sources.iceberg_py import (
         read_iceberg_py,
@@ -4165,7 +4096,6 @@ def delta_mapping_dml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the same end state relationally, so a writer that stored
     logical names (or a reader that resolved them wrongly) breaks the
     hash, not just the row count."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         alter_delta_rename_column,
         compact_delta,
@@ -4235,7 +4165,6 @@ def delta_mapping_append_evolution_roundtrip(
     mergeSchema behavior. Pre-evolution rows read the new column as
     NULL; the oracle recomputes the end state relationally so a wrong
     physical name or dropped column breaks the hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         alter_delta_rename_column,
         read_delta_py,
@@ -4293,7 +4222,6 @@ def lakehouse_sql_restore_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     state = nation minus only the second predicate; a restore that
     missed a file or a retention that deleted live data breaks the
     hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import write_delta
     from gcs2postgres_spark.sources.lakehouse_sql import lakehouse_sql
 
@@ -4354,7 +4282,6 @@ def delta_remove_orphans_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     and reads the table back — orphans must affect neither HEAD nor
     time travel. One bulk listing + batched deletes
     (fsio.bulk_delete -> LogStore.delete_batch at scale)."""
-    tune_for_session(spark)
     import time as _time
 
     from gcs2postgres_spark.sources.delta_py import (
@@ -4412,7 +4339,6 @@ def iceberg_remove_orphans_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     poisoned staging directory and a dead manifest, removes them, and
     reads the table back — HEAD and the previous snapshot must be
     untouched."""
-    tune_for_session(spark)
     import time as _time
 
     from gcs2postgres_spark.sources.iceberg_py import (
@@ -4482,7 +4408,6 @@ def delta_uniform_iceberg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     reader. The query also cross-checks the Delta read returns the
     identical frame — one data copy, two engines, one answer — before
     the DuckDB oracle checks both."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import read_delta_py, write_delta
     from gcs2postgres_spark.sources.iceberg_py import (
         read_iceberg_py,
@@ -4553,7 +4478,6 @@ def delta_uniform_mapped_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     (Iceberg spec, Name Mapping). The Iceberg read resolves physical
     file columns back to logical names — exact vs the Delta reader and
     the DuckDB oracle."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         alter_delta_rename_column,
         read_delta_py,
@@ -4620,7 +4544,6 @@ def delta_uniform_dv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a delete manifest (format-version 3). The Iceberg scan
     anti-joins the decoded positions — deleted rows stay deleted with
     NO data rewrite, exact vs the oracle."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         delete_where_delta,
         write_delta,
@@ -4677,7 +4600,6 @@ def delta_uniform_many_partitions_roundtrip(
     table must never build 10^4 of them). The query pins the plan shape
     (zero Union nodes) AND the values: partition columns materialized
     through the join must be exact per row."""
-    tune_for_session(spark)
     from gcs2postgres_spark.plans.inspect import formatted_plan
     from gcs2postgres_spark.sources.delta_py import write_delta
     from gcs2postgres_spark.sources.iceberg_py import (
@@ -4736,7 +4658,6 @@ def iceberg_stream_catalog_sink_roundtrip(
     one micro-batch eats a forced 409 (simulated concurrent committer)
     and retries through the append rebase. Read back BY NAME through
     the facade, exact vs the whole nation table."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.rest_catalog import (
         IcebergRestCatalog,
         register_catalog,
@@ -4815,7 +4736,6 @@ def iceberg_rest_catalog_write_roundtrip(
     rest_catalog_server (OAuth2 client-credentials on). The reference's
     registration loop (src/db/db.go:22-43) is the same
     catalog-mediated create, delegated to BigQuery."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import append_iceberg_v2
     from gcs2postgres_spark.sources.lakehouse_sql import lakehouse_sql
     from gcs2postgres_spark.sources.rest_catalog import (
@@ -4911,7 +4831,6 @@ def iceberg_rest_catalog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     catalog response (no version-hint walk; the catalog IS the commit
     pointer), data scans straight off the files. Exact vs the DuckDB
     oracle."""
-    tune_for_session(spark)
     import json as _json
     import threading
     import urllib.parse
@@ -5020,7 +4939,6 @@ def delta_uniform_date_partition_roundtrip(
     cap, so the conversion runs through the file-index JOIN branch (a
     Column fill, not a literal) — both the cap and the temporal
     decode verified by the same oracle hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import read_delta_py, write_delta
     from gcs2postgres_spark.sources.iceberg_py import (
         read_iceberg_py,
@@ -5078,7 +4996,6 @@ def delta_uniform_decimal_partition_roundtrip(
     file-index JOIN branch (canonical-string casts), the harder of the
     two fill paths. The final projection casts the decimal key to
     DOUBLE purely for a scale-stable compare."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import read_delta_py, write_delta
     from gcs2postgres_spark.sources.iceberg_py import (
         read_iceberg_py,
@@ -5133,7 +5050,6 @@ def delta_fsck_repair_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     live set (never a per-file existence RPC) and commits the removes,
     and the repaired table reads exactly nation-minus-region-2. DRY RUN
     is pinned in tests/test_convert_addfiles.py."""
-    tune_for_session(spark)
     import glob as _glob
 
     from gcs2postgres_spark.sources.delta_py import read_delta_py, write_delta
@@ -5187,7 +5103,6 @@ def delta_convert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     against it, and the read resolves partitions + vectors exactly.
     This is the raw-corpus onboarding move a 100 TB training pipeline
     starts with."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import (
         delete_where_delta,
         read_delta_py,
@@ -5247,7 +5162,6 @@ def iceberg_rewrite_manifests_roundtrip(
     files it did before — the oracle recomputes the end state, so any
     sequence drift resurrects or over-deletes rows and breaks the hash.
     Plan-time metadata reads drop from O(appends) avro files to O(1)."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         append_iceberg_v2,
         create_iceberg_v2_table,
@@ -5310,7 +5224,6 @@ def iceberg_add_files_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     later rename) keeps working; per-file bounds come from footers so
     stats skipping covers the added files too. Oracle = the doubled
     aggregate (one appended copy + one added copy)."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.iceberg_py import (
         add_files,
         append_iceberg_v2,
@@ -5366,7 +5279,6 @@ def delta_liquid_clustering_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     scan answers a two-dimensional range predicate; the oracle
     recomputes it from the source, so a clustering rewrite that drops
     or duplicates rows breaks the exact revenue sum."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.delta_py import read_delta_py, write_delta
     from gcs2postgres_spark.sources.lakehouse_sql import lakehouse_sql
 
@@ -5422,7 +5334,6 @@ def lakehouse_sql_identity_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
     result against the nation table. An explicit-id INSERT must refuse
     (ALWAYS semantics) — asserted inline so the query fails loudly if
     the guard regresses."""
-    tune_for_session(spark)
     from gcs2postgres_spark.sources.lakehouse_sql import lakehouse_sql
 
     load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation")
@@ -5485,7 +5396,6 @@ def delta_remote_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional-put FakeObjectStore takes the commit point, so the
     whole flow runs on exactly the atomicity GCS/S3 provide. The oracle
     recomputes the post-delete aggregate relationally."""
-    tune_for_session(spark)
     from pyspark.sql import functions as _F
 
     from gcs2postgres_spark.sources.delta_py import (
@@ -5554,7 +5464,6 @@ def iceberg_nested_eq_delete_roundtrip(spark: SparkSession, sf_dir: str) -> Data
     file. The reader resolves the id via the schema's dotted path and
     anti-joins null-safely on the nested column; the oracle recomputes
     the post-delete aggregate from the flat table."""
-    tune_for_session(spark)
     from pyspark.sql import functions as _F
 
     from gcs2postgres_spark.sources.iceberg_py import (

@@ -34,12 +34,6 @@ from pyspark.sql import functions as F
 
 from gcs2postgres_spark.catalog import load_table
 from gcs2postgres_spark.queries.registry import register
-from gcs2postgres_spark.session import tune_for_session
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_for_session(spark)
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -66,8 +60,8 @@ def q13_order_count_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     a second aggregation over the first. count("o_orderkey") counts only
     matched rows — NULLs from the outer join are excluded, so customers
     with no qualifying orders land in the c_count=0 bucket."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     per_cust = (
         c.join(
             o,
@@ -110,8 +104,8 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     input and reduced to its own max. Caching the small aggregate (one
     row per supplier) avoids scanning lineitem twice; the one-row max
     cross-joins (broadcast) as the filter scalar."""
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
     revenue = (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -155,8 +149,8 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation is at most |part| rows → broadcast; lineitem itself never
     shuffles (one scan feeds both the avg and the probe via Spark's
     ReusedExchange when sizes allow)."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23")
     per_part_avg = li.groupBy(F.col("l_partkey").alias("avg_partkey")).agg(
         (F.avg("l_quantity") * 0.2).alias("qty_threshold")
     )
@@ -200,11 +194,11 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped by nation × order-year. part/supplier/nation broadcast; the
     orders join is the only fact-fact shuffle. The LIKE filter on part
     prunes before the join, shrinking the broadcast side."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders")
+    n = load_table(spark, sf_dir, "nation")
     amount = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.col(
         "p_retailprice"
     ) * 0.1 * F.col("l_quantity")
@@ -273,9 +267,9 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup re-shuffles only ~1 row per (order, supp) — two orders of
     magnitude lighter than the fact. Measured sf1: 1.91 s → 0.81 s,
     exact-match output."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    s = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    s = load_table(spark, sf_dir, "supplier")
     lo = li.join(o, F.col("o_orderkey") == F.col("l_orderkey")).withColumn(
         "is_late",
         F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"),
@@ -330,10 +324,10 @@ def q11_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate's own grand total. The grouped aggregate is computed once,
     cached, reduced to a one-row scalar, and broadcast back as the
     HAVING filter — the fact table is scanned exactly once."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
     by_type = (
         li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
         .join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
@@ -382,9 +376,9 @@ def q20_promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     against filtered part keys; outer IN → semi-join of supplier against
     the HAVING-filtered aggregate. Semi-joins stop at first match and
     never duplicate rows — the correct (and cheapest) IN translation."""
-    s = _t(spark, sf_dir, "supplier")
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("blue%"))
+    s = load_table(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("blue%"))
     qualifying = (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -435,11 +429,11 @@ def q16_supplier_cnt_by_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     → broadcast anti-join, then count(DISTINCT) per part attribute
     triple. The anti-join's excluded-keys side is tiny and broadcast;
     distinct-aggregation is Spark's two-phase partial_count(distinct)."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#45") & F.col("p_size").isin(1, 14, 23, 45)
     )
-    excluded = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0)
+    excluded = load_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0)
     return (
         li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
         .join(

@@ -19,7 +19,6 @@ from gcs2postgres_spark.operators.training import (
     shuffle_shard,
 )
 from gcs2postgres_spark.queries.registry import register
-from gcs2postgres_spark.session import tune_for_session
 
 _SPLIT_SEED = "split-v1"
 _WEIGHTS = {"train": 0.9, "val": 0.05, "test": 0.05}
@@ -46,7 +45,6 @@ def dataset_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket (operators/training.py) — zero shuffles to assign, one to
     aggregate the per-split profile. The oracle recomputes the identical
     bucket in DuckDB, so a single relocated document fails the hash."""
-    tune_for_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     assigned = docs.select(
         "doc_id",
@@ -93,7 +91,6 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Widened first (guide §2.5): the split + array_sort + run-length
     aggregate per doc is the heavy stage and otherwise runs at the
     compact corpus scan's width."""
-    tune_for_session(spark)
     from gcs2postgres_spark.operators.caching import widen_doc_scan
 
     docs = widen_doc_scan(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -138,7 +135,6 @@ def domain_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample is a pure projection, reproducible by any engine from the id
     alone, and re-running with a tweaked recipe reuses nothing but the
     hash. Output profiles kept/total per source."""
-    tune_for_session(spark)
     from gcs2postgres_spark.operators.dedup import portable_hash60
 
     docs = load_table(spark, sf_dir, "documents")
@@ -210,7 +206,6 @@ def decontaminate_against_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the eval side (small by construction) broadcasts at any corpus
     size. At 100 TB this is THE pass that keeps test benchmarks out of
     the training set."""
-    tune_for_session(spark)
     from gcs2postgres_spark.operators.dedup import shingle_docs
 
     docs = load_table(spark, sf_dir, "documents")
@@ -284,7 +279,6 @@ def decontaminate_ngram13_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical hash, so this certifies tokenization, the n-gram
     window arithmetic, the fallback branch, and the join — any drift
     fails the value hash."""
-    tune_for_session(spark)
     from gcs2postgres_spark.operators.training import ngram_decontaminate
 
     docs = load_table(spark, sf_dir, "documents")
@@ -368,7 +362,6 @@ def text_top_word_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     straightforward unnest/groupBy way, so the run-length arithmetic is
     certified value-for-value. Widened first (guide §2.5, same reason
     as text_repetition_filter)."""
-    tune_for_session(spark)
     from gcs2postgres_spark.operators.caching import widen_doc_scan
 
     docs = widen_doc_scan(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -388,7 +381,6 @@ def sequence_pack_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     One shuffle + linear Arrow-batched greedy; the oracle replays the
     exact recurrence as a per-shard recursive CTE, so a single
     off-by-one in the boundary condition fails the hash."""
-    tune_for_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return pack_sequences(
         docs, budget=_PACK_BUDGET, n_shards=_PACK_SHARDS
@@ -421,7 +413,6 @@ def dataset_shuffle_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reproducible on any engine with md5 (the oracle re-derives every
     (shard, pos) pair); a new epoch is a new seed, no stored permutation.
     One shuffle (the per-shard window), uniform by construction."""
-    tune_for_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return shuffle_shard(docs, n_shards=_SHUF_SHARDS, seed=_SHUF_SEED).orderBy("shard", "pos")
 
@@ -452,7 +443,6 @@ def sample_stratified_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     window per stratum over the hash order (WindowGroupLimit prunes to
     k per partition map-side); summarized as per-source (n, id_sum) so
     the driver certifies the exact membership."""
-    tune_for_session(spark)
     d = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(
         F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("#strat"))),
@@ -494,7 +484,6 @@ def sample_weighted_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     could flip a rank. Scale shape: the key is a projection (zero
     shuffle to compute), global bottom-k is TakeOrdered — per-partition
     k then a k-sized driver merge, never a full sort."""
-    tune_for_session(spark)
     from gcs2postgres_spark.operators.dedup import portable_hash60
 
     d = load_table(spark, sf_dir, "documents")
@@ -566,7 +555,6 @@ def dataset_train_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle), everything else map-side — split hash, gates, and token
     count are per-row codegen; the manifest streams out partitioned.
     """
-    tune_for_session(spark)
     d = load_table(spark, sf_dir, "documents")
     toks = F.filter(
         F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda x: x != ""

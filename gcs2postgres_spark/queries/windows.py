@@ -17,12 +17,6 @@ from pyspark.sql import functions as F
 from gcs2postgres_spark.catalog import load_table
 from gcs2postgres_spark.operators.joins import topk_per_group
 from gcs2postgres_spark.queries.registry import register
-from gcs2postgres_spark.session import tune_for_session
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_for_session(spark)
-    return load_table(spark, sf_dir, name)
 
 
 WINDOW_RANK_ORACLE = """
@@ -40,7 +34,7 @@ ORDER BY o_custkey, o_orderkey
 @register("window_rank", oracle=WINDOW_RANK_ORACLE)
 def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank/dense_rank/row_number over per-group orderings, ties included."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 200)
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 200)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return (
         o.select(
@@ -69,7 +63,7 @@ ORDER BY o_custkey, o_orderkey
 @register("window_lag_lead", oracle=WINDOW_LAG_LEAD_ORACLE)
 def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead offsets within per-customer order history (1-row frames)."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 200)
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 200)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     prev = F.lag("o_totalprice").over(w)
     return (
@@ -100,7 +94,7 @@ ORDER BY l_suppkey, l_orderkey, l_linenumber
 @register("window_running", oracle=WINDOW_RUNNING_ORACLE)
 def window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running sum/avg over an ordered unbounded-preceding frame per key."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_suppkey") < 20)
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_suppkey") < 20)
     base = Window.partitionBy("l_suppkey").orderBy("l_shipdate", "l_orderkey", "l_linenumber")
     return (
         li.select(
@@ -126,7 +120,7 @@ ORDER BY o_orderkey
 @register("window_ntile", oracle=WINDOW_NTILE_ORACLE)
 def window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ntile(4) quartile assignment per mktsegment partition."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 2000)
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 2000)
     w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
     return (
         o.select(
@@ -153,7 +147,7 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE frame over a numeric ordering column (value-based frame, not
     row-based). Unpartitioned window — acceptable only because the input is
     pre-filtered small; at scale, range-bucket first."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") < 300)
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") < 300)
     # rangeBetween() only takes integer offsets in the Python API; the SQL
     # window form supports fractional RANGE bounds
     frame = F.expr(
@@ -183,7 +177,7 @@ ORDER BY c_mktsegment, o_totalprice DESC, o_orderkey
 @register("topk_per_group", oracle=TOPK_PER_GROUP_ORACLE)
 def topk_per_group_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group top-k via window row_number <= k; WindowGroupLimit prunes map-side."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     joined = o.join(c, F.col("o_custkey") == F.col("c_custkey")).select(
         "c_mktsegment", "o_orderkey", "o_totalprice"
@@ -222,7 +216,7 @@ def window_dist_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-window footgun; identical semantics in Spark and DuckDB, so the
     oracle locks the correct frame in). Rounded to 6 dp so the oracle
     compare is float-order safe."""
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     w = Window.partitionBy("s_nationkey").orderBy("s_acctbal", "s_suppkey")
     w_full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return (

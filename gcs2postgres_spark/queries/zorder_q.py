@@ -23,14 +23,12 @@ from gcs2postgres_spark.catalog import load_table
 from gcs2postgres_spark.layout import write_zordered, zorder_key
 from gcs2postgres_spark.queries.registry import register
 from gcs2postgres_spark.queries.relational import Q6_ORACLE
-from gcs2postgres_spark.session import tune_for_session
 
 
 def zordered_lineitem_path(spark: SparkSession, sf_dir: str, n_files: int = 16) -> str:
     """Idempotently materialize lineitem z-ordered on
     (shipdate-days, discount-cents); the tag includes the source file's
     (mtime, size) so regenerated testdata always re-clusters."""
-    tune_for_session(spark)
     src = os.path.join(sf_dir, "lineitem.parquet")
     tag = hashlib.md5(
         f"{os.path.abspath(sf_dir)}|z|{n_files}|{os.path.getmtime(src)}:{os.path.getsize(src)}".encode()

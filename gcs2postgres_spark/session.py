@@ -157,11 +157,11 @@ def local_shuffle_to_shm() -> None:
 def tune_for_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable semantics to an externally-created session.
 
-    The driver's verify harness constructs its own SparkSession; the
-    query registry calls this defensively so pinned semantics
-    (timezone, ANSI mode) hold regardless of who built the session.
-    Static configs (AQE, memory) can't be changed post-start and are
-    left alone.
+    The driver's verify harness constructs its own SparkSession. The
+    query registry's ``register`` wrapper applies this once per query
+    call, so pinned semantics (timezone, ANSI mode) hold regardless of
+    who built the session; query code does not call it. Static configs
+    (AQE, memory) can't be changed post-start and are left alone.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     for k, v in [

@@ -30,6 +30,13 @@ from pyspark.sql.types import StructType
 SUPPORTED_FORMATS = {"parquet", "csv", "json", "orc", "avro", "iceberg", "delta", "bigquery"}
 
 
+def _jar_absent(e: Exception) -> bool:
+    """True when a native reader failed only because its data source
+    jar is not on the classpath."""
+    msg = str(e)
+    return "DATA_SOURCE_NOT_FOUND" in msg or "Failed to find" in msg
+
+
 def format_from_extension(path: str) -> str:
     """Reference behavior: format = file extension (src/db/db.go:27)."""
     ext = os.path.splitext(path)[1].lstrip(".").lower()
@@ -77,8 +84,7 @@ def read_source(
             # Fall back ONLY on the module-absent condition; a genuine
             # native-reader failure (corrupt file, bad option) must
             # surface, not be silently retried with the Python codec.
-            msg = str(e)
-            if not ("DATA_SOURCE_NOT_FOUND" in msg or "Failed to find" in msg):
+            if not _jar_absent(e):
                 raise
             # spark-avro module absent: fall back to the pure-Python
             # distributed container reader (sources/avro_py.py) — same
@@ -90,8 +96,7 @@ def read_source(
         try:
             df = reader.format("iceberg").options(**options).load(path)
         except Exception as e:
-            msg = str(e)
-            if not ("DATA_SOURCE_NOT_FOUND" in msg or "Failed to find" in msg):
+            if not _jar_absent(e):
                 raise
             # iceberg-spark-runtime absent: walk the table's metadata
             # chain in pure Python (metadata JSON → Avro manifests →
@@ -117,8 +122,7 @@ def read_source(
         try:
             df = reader.format("delta").options(**options).load(path)
         except Exception as e:
-            msg = str(e)
-            if not ("DATA_SOURCE_NOT_FOUND" in msg or "Failed to find" in msg):
+            if not _jar_absent(e):
                 raise
             # delta-spark absent: replay the public _delta_log protocol
             # in pure Python (JSON commits + optional parquet checkpoint)
@@ -143,8 +147,7 @@ def read_source(
         try:
             df = reader.format("bigquery").options(**options).load(path)
         except Exception as e:
-            msg = str(e)
-            if "DATA_SOURCE_NOT_FOUND" in msg or "Failed to find" in msg:
+            if _jar_absent(e):
                 raise RuntimeError(
                     "bigquery source needs the spark-bigquery-connector jar "
                     "(spark.jars.packages=com.google.cloud.spark:"

@@ -1,10 +1,10 @@
 #!/usr/bin/env python
 """Capture `.explain("formatted")` for every headline bench query into
-plans/r18/<query>_<tag>.txt (tag = before/after), under the SAME session
-profile bench.py uses (shuffle=8, tune_local_fast, shm scratch) so the
-committed plans are the plans the bench actually ran.
+plans/<round>/<query>_<tag>.txt (round e.g. r18, tag = before/after),
+under the SAME session profile bench.py uses (shuffle=8, tune_local_fast,
+shm scratch) so the committed plans are the plans the bench actually ran.
 
-Usage: python scripts/cap_plans_r18.py [before|after] [query ...]
+Usage: python scripts/cap_plans.py <round> [before|after] [query ...]
 """
 
 from __future__ import annotations
@@ -20,7 +20,10 @@ os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    rnd = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
     from bench import HEADLINE
     from gcs2postgres_spark.queries import REGISTRY
     from gcs2postgres_spark.session import (
@@ -29,12 +32,12 @@ def main() -> None:
         tune_local_fast,
     )
 
-    names = sys.argv[2:] or HEADLINE
+    names = sys.argv[3:] or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     local_shuffle_to_shm()
-    spark = get_spark("cap-plans-r18")
+    spark = get_spark(f"cap-plans-{rnd}")
     tune_local_fast(spark, sf_dir)
-    outdir = REPO / "plans" / "r18"
+    outdir = REPO / "plans" / rnd
     outdir.mkdir(parents=True, exist_ok=True)
     for name in names:
         df = REGISTRY[name].fn(spark, sf_dir)

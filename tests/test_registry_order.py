@@ -7,6 +7,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from gcs2postgres_spark.queries import REGISTRY, VERIFY_DEFERRED, VERIFY_FRONT
+from tests.conftest import SF_ORACLE
+from tests.oracle_utils import compare_query
 
 
 def test_front_window_is_exactly_50_known_names():
@@ -28,6 +30,45 @@ def test_registry_complete():
     # every registered query is accounted for exactly once
     assert len(REGISTRY) >= 109
     assert sorted(set(REGISTRY)) == sorted(REGISTRY)
+
+
+# A driver-built session: Spark 4's ANSI default, a local time zone and
+# parquet nanos read as timestamps. The registry must pin the engine's
+# semantics (lenient casts, naive UTC) before every query on it.
+_MIS_SET = {
+    "spark.sql.session.timeZone": "Asia/Kolkata",
+    "spark.sql.ansi.enabled": "true",
+    "spark.sql.legacy.parquet.nanosAsLong": "false",
+}
+_PINNED = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.ansi.enabled": "false",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
+def test_register_pins_session_semantics(spark):
+    from gcs2postgres_spark.queries import events_q
+
+    cases = [
+        # time zone: timestamps shift by 5:30 unpinned
+        ("stream_interval_join_leftouter", REGISTRY["stream_interval_join_leftouter"].fn),
+        # ANSI: divide by zero raises unpinned
+        ("ab_test_conversion", REGISTRY["ab_test_conversion"].fn),
+        # a direct call of the module function pins too
+        ("stream_interval_join_leftouter", events_q.stream_interval_join_leftouter),
+    ]
+    prior = {k: spark.conf.get(k) for k in _MIS_SET}
+    try:
+        for name, fn in cases:
+            for k, v in _MIS_SET.items():
+                spark.conf.set(k, v)
+            problems = compare_query(spark, SF_ORACLE, fn, REGISTRY[name].oracle)
+            assert not problems, f"{name}: {problems}"
+            assert {k: spark.conf.get(k) for k in _MIS_SET} == _PINNED
+    finally:
+        for k, v in prior.items():
+            spark.conf.set(k, v)
 
 
 def test_materialize_ctes_transformer():
