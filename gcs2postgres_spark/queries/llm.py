@@ -24,7 +24,7 @@ from gcs2postgres_spark.functions.text import (
     quality_score_cols,
     token_count,
 )
-from gcs2postgres_spark.functions.vectors import cosine_similarity, l2_norm
+from gcs2postgres_spark.functions.vectors import l2_norm
 from gcs2postgres_spark.operators.dedup import (
     jaccard_pairs,
     lsh_candidate_pairs,

@@ -10,13 +10,18 @@ directly:
 
 - ``read_avro_distributed``: Spark-first reader. File bodies move as
   ``binaryFile`` rows (never through the driver beyond the one header
-  read for schema inference); each executor decodes its files with the
-  pure-Python decoder inside ``mapInPandas`` (Arrow-batched output).
-  Parallelism is per-file — the standard many-part-file Avro layout
-  parallelizes naturally; a sync-marker block splitter is the documented
-  extension for giant single files.
+  read for schema inference); each executor decodes its files inside
+  ``mapInArrow``, one Arrow RecordBatch per Avro block. Parallelism is
+  per-file — the standard many-part-file Avro layout parallelizes
+  naturally; ``read_avro_split_distributed`` splits one giant file at
+  its sync markers.
 - ``write_avro_file`` / ``read_avro_file``: single-file codec used for
-  fixtures and by the distributed reader per file.
+  fixtures and Iceberg manifests (records as Python dicts).
+
+Every read path decodes through one compiled decoder: each writer schema
+compiles once into straight-line Python over the raw block bytes
+(_compile), which either yields records or fills one list per column for
+the Arrow path.
 
 Spec conformance is not self-certified: tests round-trip files through
 the *Java* Avro reference implementation bundled with Spark
@@ -25,7 +30,9 @@ directions (tests/test_sources_formats.py).
 
 Supported: null/boolean/int/long/float/double/bytes/string, record,
 array, map, union, enum, fixed; codecs null + deflate (raw zlib).
-Logical types decode as their base type (documented narrowing).
+Logical types date, timestamp-millis/-micros and decimal convert (see
+_from_logical; the Arrow path casts to date32, UTC timestamp[us] and
+decimal128); other logical types read as their base type.
 """
 
 from __future__ import annotations
@@ -87,13 +94,10 @@ def _write_bytes(buf: io.BytesIO, data: bytes) -> None:
     buf.write(data)
 
 
-# ------------------------------------------------------------ schema-driven
-
-
 # ------------------------------------------------------------ logical types
 #
-# Avro logicalType annotations (spec: Logical Types) decode to their
-# Spark-typed Python values instead of the base primitive: date(int) →
+# In records, Avro logicalType annotations (spec: Logical Types) decode to
+# their Spark-typed Python values instead of the base primitive: date(int) →
 # datetime.date, timestamp-millis/micros(long) → naive-UTC datetime,
 # decimal(bytes|fixed) → Decimal with the schema's scale (unscaled
 # big-endian two's-complement per the spec). Unknown logical types fall
@@ -150,61 +154,200 @@ def _to_logical(lt: str, v, schema):
     return v
 
 
-def _decode(schema, buf: io.BytesIO):
-    """Decode one value of `schema` (parsed JSON form) from buf."""
-    if isinstance(schema, list):  # union: long index then value
-        return _decode(schema[_read_long(buf)], buf)
-    if isinstance(schema, dict):
-        t = schema["type"]
-        if t == "record":
-            return {f["name"]: _decode(f["type"], buf) for f in schema["fields"]}
-        if t == "array":
-            out = []
-            while True:
-                n = _read_long(buf)
-                if n == 0:
-                    return out
-                if n < 0:
-                    _read_long(buf)  # block byte size, unused when parsing all
-                    n = -n
-                for _ in range(n):
-                    out.append(_decode(schema["items"], buf))
-        if t == "map":
-            out = {}
-            while True:
-                n = _read_long(buf)
-                if n == 0:
-                    return out
-                if n < 0:
-                    _read_long(buf)
-                    n = -n
-                for _ in range(n):
-                    k = _read_bytes(buf).decode("utf-8")
-                    out[k] = _decode(schema["values"], buf)
-        if t == "enum":
-            return schema["symbols"][_read_long(buf)]
-        lt = schema.get("logicalType")
-        if t == "fixed":
-            raw = buf.read(schema["size"])
-            return _from_logical(lt, raw, schema) if lt else raw
-        base = _decode(t, buf)  # {"type": "long", "logicalType": ...} etc.
-        return _from_logical(lt, base, schema) if lt else base
-    # plain string type name
-    if schema == "null":
-        return None
-    if schema == "boolean":
-        return buf.read(1) == b"\x01"
-    if schema in ("int", "long"):
-        return _read_long(buf)
-    if schema == "float":
-        return struct.unpack("<f", buf.read(4))[0]
-    if schema == "double":
-        return struct.unpack("<d", buf.read(8))[0]
-    if schema == "bytes":
-        return _read_bytes(buf)
-    if schema == "string":
-        return _read_bytes(buf).decode("utf-8")
-    raise ValueError(f"unsupported avro type {schema!r}")
+# ---------------------------------------------------------- compiled decoder
+#
+# A writer schema compiles once into one Python function: straight-line
+# code over the raw block bytes with an integer cursor, so no value
+# dispatches on the schema again. ``columns=False`` appends one decoded
+# value (a dict for a record) per object — the records API.
+# ``columns=True`` takes a record schema and appends each top-level
+# field to its own list, leaving flat fields' logical types and string
+# bytes for _to_arrow — the Arrow path.
+
+# top-level fields of these kinds build their Arrow arrays from buffers;
+# the stand-in fills a null row's slot
+_FLAT_KINDS = {
+    "boolean": "bool", "int": "int", "long": "int", "float": "float",
+    "double": "double", "bytes": "bytes", "string": "bytes",
+    "enum": "bytes", "fixed": "bytes",
+}
+_STAND_IN = {"bool": False, "int": 0, "float": 0.0, "double": 0.0, "bytes": b""}
+
+# zigzag varint: one byte in the common case, else a loop over the rest
+_LONG = """\
+b = buf[pos]
+pos += 1
+if b < 128:
+    {t} = (b >> 1) ^ -(b & 1)
+else:
+    acc = b & 127
+    shift = 7
+    while True:
+        b = buf[pos]
+        pos += 1
+        acc |= (b & 127) << shift
+        if b < 128:
+            break
+        shift += 7
+    {t} = (acc >> 1) ^ -(acc & 1)"""
+
+
+def _flat_kind(ftype) -> tuple[str | None, str | None]:
+    """(kind, logical type) of a top-level field that is a primitive,
+    enum or fixed, alone or in a union with null; (None, None) for any
+    other field."""
+    if isinstance(ftype, list):
+        if len(ftype) != 2 or "null" not in ftype:
+            return None, None
+        ftype = ftype[1 - ftype.index("null")]
+    lt = None
+    if isinstance(ftype, dict):
+        ftype, lt = ftype["type"], ftype.get("logicalType")
+    kind = _FLAT_KINDS.get(ftype) if isinstance(ftype, str) else None
+    return kind, lt if kind else None
+
+
+class _Codegen:
+    """Emits the decode statements of one schema."""
+
+    def __init__(self) -> None:
+        self.lines: list[str] = []
+        self.consts: dict[str, object] = {}
+        self.null_fill: str | None = None  # a flat column's null branch
+        self.n = 0
+
+    def tmp(self, stem: str) -> str:
+        self.n += 1
+        return f"{stem}_{self.n}"  # never a column's a{i} / z{i}
+
+    def const(self, value) -> str:
+        name = self.tmp("K")
+        self.consts[name] = value
+        return name
+
+    def put(self, ind: int, text: str) -> None:
+        self.lines.extend("    " * ind + line for line in text.splitlines())
+
+    def column(self, ftype, i: int) -> None:
+        """Top-level field ``i`` into column list ``a{i}``. A flat field
+        appends a stand-in for null and the row number to ``z{i}``, so
+        its column never holds None."""
+        kind = _flat_kind(ftype)[0]
+        self.null_fill = f"x = {_STAND_IN[kind]!r}\nz{i}(r)" if kind else None
+        self.value(ftype, "x", 2, raw=kind is not None)
+        self.put(2, f"a{i}(x)")
+
+    def value(self, schema, target: str, ind: int, raw: bool = False) -> None:
+        """Statements that decode one ``schema`` value into ``target``.
+        ``raw`` (top-level columns only, carried through unions) keeps
+        logical types as their base value and strings and enum symbols
+        as bytes."""
+        if isinstance(schema, list):
+            if not 0 < len(schema) <= 64:
+                raise ValueError(f"avro union of {len(schema)} branches is not supported")
+            # a branch index below 64 is one varint byte: zigzag(i) = 2i;
+            # null, the rarer value, is tested last
+            self.put(ind, "b = buf[pos]\npos += 1")
+            for k, i in enumerate(sorted(range(len(schema)), key=lambda i: schema[i] == "null")):
+                self.put(ind, f"{'elif' if k else 'if'} b == {2 * i}:")
+                self.value(schema[i], target, ind + 1, raw)
+            self.put(ind, "else:\n    raise ValueError('avro union index byte %d out of range' % b)")
+        elif schema == "null":
+            self.put(ind, self.null_fill if raw and self.null_fill else f"{target} = None")
+        elif schema == "boolean":
+            self.put(ind, f"{target} = buf[pos] == 1\npos += 1")
+        elif schema in ("int", "long"):
+            self.put(ind, _LONG.format(t=target))
+        elif schema in ("float", "double"):
+            unpack, width = ("_uf", 4) if schema == "float" else ("_ud", 8)
+            self.put(ind, f"{target} = {unpack}(buf, pos)[0]\npos += {width}")
+        elif schema in ("bytes", "string"):
+            size = self.tmp("n")
+            self.put(ind, _LONG.format(t=size))
+            self.put(ind, f"{target} = buf[pos:pos + {size}]\npos += {size}")
+            if schema == "string" and not raw:
+                self.put(ind, f"{target} = {target}.decode('utf-8')")
+        elif isinstance(schema, str):  # a named-type reference
+            raise ValueError(f"unsupported avro type {schema!r}")
+        elif schema["type"] == "record":
+            items = []
+            for f in schema["fields"]:
+                v = self.tmp("v")
+                self.value(f["type"], v, ind)
+                items.append(f"{f['name']!r}: {v}")
+            self.put(ind, f"{target} = {{{', '.join(items)}}}")
+        elif schema["type"] in ("array", "map"):
+            acc, count, v = self.tmp("a"), self.tmp("c"), self.tmp("v")
+            self.put(ind, f"{acc} = {'[]' if schema['type'] == 'array' else '{}'}\nwhile True:")
+            self.put(ind + 1, _LONG.format(t=count))
+            self.put(ind + 1, f"if not {count}:\n    break\nif {count} < 0:  # a byte size follows")
+            self.put(ind + 2, f"{count} = -{count}\n" + _LONG.format(t="_"))
+            self.put(ind + 1, f"for _ in range({count}):")
+            if schema["type"] == "array":
+                self.value(schema["items"], v, ind + 2)
+                self.put(ind + 2, f"{acc}.append({v})")
+            else:
+                k = self.tmp("k")
+                self.value("string", k, ind + 2)
+                self.value(schema["values"], v, ind + 2)
+                self.put(ind + 2, f"{acc}[{k}] = {v}")
+            self.put(ind, f"{target} = {acc}")
+        elif schema["type"] == "enum":
+            symbols = tuple(s.encode() if raw else s for s in schema["symbols"])
+            u = self.tmp("u")
+            self.put(ind, _LONG.format(t=u))
+            self.put(ind, f"{target} = {self.const(symbols)}[{u}]")
+        else:  # fixed, or a primitive carrying attributes such as a logicalType
+            if schema["type"] == "fixed":
+                size = int(schema["size"])
+                self.put(ind, f"{target} = buf[pos:pos + {size}]\npos += {size}")
+            else:
+                self.value(schema["type"], target, ind, raw)
+            lt = schema.get("logicalType")
+            if lt and not raw:
+                self.put(ind, f"{target} = _from_logical({lt!r}, {target}, {self.const(schema)})")
+
+
+def _compile(schema, columns: bool):
+    """``decode(block, n)`` for ``n`` objects of ``schema`` in one block's
+    bytes → ``[values]``, or with ``columns`` a record schema's
+    ``(one list per field, null row numbers per field)``."""
+    g = _Codegen()
+    if columns:
+        width = len(schema["fields"])
+        for i, f in enumerate(schema["fields"]):
+            g.column(f["type"], i)
+    else:
+        width = 1
+        g.value(schema, "x", 2)
+        g.put(2, "a0(x)")
+    src = "\n".join(
+        [
+            "def decode(buf, n):",
+            f"    cols = [[] for _ in range({width})]",
+            f"    nulls = [[] for _ in range({width})]",
+            *(f"    a{i} = cols[{i}].append" for i in range(width)),
+            *(f"    z{i} = nulls[{i}].append" for i in range(width) if columns),
+            "    _uf = _struct.Struct('<f').unpack_from",
+            "    _ud = _struct.Struct('<d').unpack_from",
+            "    pos = 0",
+            "    for r in range(n):",
+            *(g.lines or ["        pass"]),
+            "    if pos != len(buf):",
+            "        raise ValueError('avro block of %d bytes ends at byte %d' % (len(buf), pos))",
+            "    return cols, nulls" if columns else "    return cols[0]",
+        ]
+    )
+    ns = {"_from_logical": _from_logical, "_struct": struct, **g.consts}
+    exec(compile(src, "<avro decoder>", "exec"), ns)
+    return ns["decode"]
+
+
+def _run(decode, block: bytes, n: int):
+    try:
+        return decode(block, n)
+    except (IndexError, struct.error):
+        raise EOFError("truncated avro block") from None
 
 
 def _encode(schema, value, buf: io.BytesIO) -> None:
@@ -299,12 +442,12 @@ def _matches(schema, value) -> bool:
 # ------------------------------------------------------------ container file
 
 
-def _read_header_grow(f) -> tuple[dict, str, bytes, int]:
+def _read_header_grow(f) -> tuple[dict, str, bytes, dict, int]:
     """Parse the header from an open file, growing the read on truncation.
 
     Headers are small; start at 64 KiB and double on EOFError so an
     outsized schema JSON still parses. Returns (schema, codec, sync,
-    header_end_offset).
+    metadata, header_end_offset).
     """
     size = 65536
     while True:
@@ -312,8 +455,7 @@ def _read_header_grow(f) -> tuple[dict, str, bytes, int]:
         data = f.read(size)
         buf = io.BytesIO(data)
         try:
-            schema, codec, sync = _read_header(buf)
-            return schema, codec, sync, buf.tell()
+            return (*_read_header_meta(buf), buf.tell())
         except EOFError:
             if len(data) < size:  # whole file read and still truncated
                 raise
@@ -343,30 +485,51 @@ def _read_header_meta(buf: io.BytesIO) -> tuple[dict, str, bytes, dict]:
     if codec not in ("null", "deflate"):
         raise ValueError(f"unsupported avro codec {codec!r} (null/deflate only)")
     sync = buf.read(16)
+    if len(sync) != 16:
+        raise EOFError("truncated avro header")
     return schema, codec, sync, meta
 
 
-def _read_header(buf: io.BytesIO) -> tuple[dict, str, bytes]:
-    """Parse container header → (writer schema JSON, codec, sync marker)."""
-    schema, codec, sync, _meta = _read_header_meta(buf)
-    return schema, codec, sync
+def _blocks(f, codec: str, sync: bytes, end: int):
+    """Yield (record count, decompressed block bytes) for each block of
+    the container open as ``f`` that starts at or after its position and
+    before ``end``."""
+    while f.tell() < end:
+        n = _read_long(f)
+        block = _read_bytes(f)
+        if f.read(16) != sync:
+            raise ValueError("sync marker mismatch (corrupt block or marker collision)")
+        yield n, zlib.decompress(block, -15) if codec == "deflate" else block
+
+
+def _read_container(f, size: int):
+    """(writer schema, header metadata, its blocks) of the ``size``-byte
+    container open as ``f``."""
+    schema, codec, sync, meta, header_end = _read_header_grow(f)
+    f.seek(header_end)
+    return schema, meta, _blocks(f, codec, sync, size)
+
+
+# raw writer-schema JSON → compiled records decoder (driver-side manifest
+# reads parse the same few schemas over and over)
+_RECORD_DECODERS: dict[bytes, object] = {}
+
+
+def _read_records(data: bytes) -> tuple[dict, list, dict]:
+    schema, meta, blocks = _read_container(io.BytesIO(data), len(data))
+    key = meta["avro.schema"]
+    decode = _RECORD_DECODERS.get(key)
+    if decode is None:
+        decode = _RECORD_DECODERS[key] = _compile(schema, columns=False)
+    records: list = []
+    for n, block in blocks:
+        records += _run(decode, block, n)
+    return schema, records, meta
 
 
 def read_avro_bytes(data: bytes) -> tuple[dict, list[dict]]:
     """Decode a whole container file body → (writer schema, records)."""
-    buf = io.BytesIO(data)
-    schema, codec, sync = _read_header(buf)
-    records: list[dict] = []
-    while buf.tell() < len(data):
-        n_records = _read_long(buf)
-        block = _read_bytes(buf)
-        if codec == "deflate":
-            block = zlib.decompress(block, -15)  # raw deflate per spec
-        if buf.read(16) != sync:
-            raise ValueError("sync marker mismatch (corrupt block)")
-        bbuf = io.BytesIO(block)
-        for _ in range(n_records):
-            records.append(_decode(schema, bbuf))
+    schema, records, _meta = _read_records(data)
     return schema, records
 
 
@@ -382,21 +545,7 @@ def read_avro_file_meta(path: str) -> tuple[dict, list[dict], dict]:
     ("schema", "schema-id", ...)."""
     from gcs2postgres_spark.sources import fsio
 
-    data = fsio.read_bytes(path)
-    buf = io.BytesIO(data)
-    schema, codec, sync, meta = _read_header_meta(buf)
-    records: list[dict] = []
-    while buf.tell() < len(data):
-        n_records = _read_long(buf)
-        size = _read_long(buf)
-        body = buf.read(size)
-        if codec == "deflate":
-            body = zlib.decompress(body, wbits=-15)
-        bbuf = io.BytesIO(body)
-        for _ in range(n_records):
-            records.append(_decode(schema, bbuf))
-        if buf.read(16) != sync:
-            raise ValueError("avro block sync marker mismatch")
+    schema, records, meta = _read_records(fsio.read_bytes(path))
     out_meta = {
         k: v.decode("utf-8", "replace") for k, v in meta.items()
         if not k.startswith("avro.")
@@ -412,7 +561,7 @@ def avro_row_count(path: str) -> int:
     writers can stamp record_count without pulling row data onto the
     driver."""
     with open(path, "rb") as f:
-        _schema, _codec, sync, header_end = _read_header_grow(f)
+        _schema, _codec, sync, _meta, header_end = _read_header_grow(f)
         size = os.fstat(f.fileno()).st_size
         f.seek(header_end)
         total = 0
@@ -610,6 +759,116 @@ def write_avro_distributed(df: DataFrame, path: str, codec: str = "deflate") -> 
     df.foreachPartition(write_partition)
 
 
+# ------------------------------------------------------------ arrow batches
+#
+# Each block becomes one RecordBatch: the compiled decoder fills one list
+# per column, pyarrow builds the arrays, and logical types apply as Arrow
+# casts. Timestamps become tz-aware UTC instants, as the spec defines
+# them, so no session time zone shifts them.
+
+
+def _validity(n: int, nulls: list[int]):
+    import numpy as np
+    import pyarrow as pa
+
+    if not nulls:
+        return None
+    valid = np.ones(n, dtype=bool)
+    valid[nulls] = False
+    return pa.py_buffer(np.packbits(valid, bitorder="little"))
+
+
+def _to_arrow(col: list, nulls: list[int], kind: str | None, lt: str | None, typ):
+    """One top-level column → an Arrow array of ``typ``. Flat kinds build
+    from buffers (pa.array would import pandas into the worker); logical
+    types apply as casts."""
+    import numpy as np
+    import pyarrow as pa
+
+    if kind is None:  # record, array, map or general union: Python values
+        return pa.array(col, typ)
+    n = len(col)
+    valid = _validity(n, nulls)
+    if lt == "decimal":  # big-endian two's-complement unscaled bytes
+        data = b"".join(
+            int.from_bytes(v, "big", signed=True).to_bytes(16, "little", signed=True)
+            for v in col
+        )
+        return pa.Array.from_buffers(typ, n, [valid, pa.py_buffer(data)], len(nulls))
+    if kind == "bytes":
+        offsets = np.zeros(n + 1, dtype=np.int32)
+        np.cumsum(np.fromiter(map(len, col), np.int32, n), out=offsets[1:])
+        base = pa.string() if pa.types.is_string(typ) else pa.binary()
+        arr = pa.Array.from_buffers(
+            base, n, [valid, pa.py_buffer(offsets), pa.py_buffer(b"".join(col))], len(nulls)
+        )
+        arr.validate(full=True)  # UTF-8, and offsets that did not wrap
+    elif kind == "bool":
+        bits = np.packbits(np.array(col, dtype=bool), bitorder="little")
+        arr = pa.Array.from_buffers(pa.bool_(), n, [valid, pa.py_buffer(bits)], len(nulls))
+    else:
+        base, dtype = {
+            "int": (pa.int64(), np.int64),
+            "float": (pa.float32(), np.float32),
+            "double": (pa.float64(), np.float64),
+        }[kind]
+        values = np.array(col, dtype=dtype)
+        arr = pa.Array.from_buffers(base, n, [valid, pa.py_buffer(values)], len(nulls))
+        if lt == "date":
+            arr = arr.cast(pa.int32())
+        elif lt in ("timestamp-micros", "timestamp-millis"):
+            arr = arr.cast(pa.timestamp("us" if lt == "timestamp-micros" else "ms", tz="UTC"))
+    return arr if arr.type == typ else arr.cast(typ)
+
+
+def _batch_builder(schema: dict, arrow_schema):
+    """``build(block, n) -> RecordBatch`` with ``arrow_schema``'s columns,
+    matched by name to the writer ``schema``'s fields (absent → nulls)."""
+    import pyarrow as pa
+
+    decode = _compile(schema, columns=True)
+    fields = {f["name"]: (i, *_flat_kind(f["type"])) for i, f in enumerate(schema["fields"])}
+    plan = [(fields.get(f.name), f.type) for f in arrow_schema]
+
+    def build(block: bytes, n: int):
+        cols, nulls = _run(decode, block, n)
+        arrays = [
+            pa.nulls(n, typ) if src is None
+            else _to_arrow(cols[src[0]], nulls[src[0]], src[1], src[2], typ)
+            for src, typ in plan
+        ]
+        return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
+    return build
+
+
+def _arrow_batches(f, size: int, arrow_schema=None, builders: dict | None = None):
+    """Yield one RecordBatch per block of the ``size``-byte container open
+    as ``f``. ``arrow_schema`` defaults to the writer schema's; pass
+    ``builders`` to share compiled decoders between files of one task."""
+    schema, meta, blocks = _read_container(f, size)
+    builders = {} if builders is None else builders
+    key = meta["avro.schema"]
+    build = builders.get(key)
+    if build is None:
+        if arrow_schema is None:
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            arrow_schema = to_arrow_schema(avro_to_spark_type(schema))
+        build = builders[key] = _batch_builder(schema, arrow_schema)
+    for n, block in blocks:
+        yield build(block, n)
+
+
+def read_avro_arrow(path: str):
+    """Yield one RecordBatch per block of the Avro file at ``path``,
+    typed by its writer schema."""
+    from gcs2postgres_spark.sources import fsio
+
+    data = fsio.read_bytes(path)
+    yield from _arrow_batches(io.BytesIO(data), len(data))
+
+
 # ----------------------------------------------------------- spark reader
 
 
@@ -618,33 +877,37 @@ def read_avro_distributed(spark: SparkSession, path: str) -> DataFrame:
 
     One driver-side header read infers the schema (metadata block only —
     no data rows transit the driver); then ``binaryFile`` ships each
-    file's bytes to an executor and ``mapInPandas`` decodes them with the
-    pure-Python codec. The decoder closure is built inside this function
-    so cloudpickle serializes it BY VALUE — executor workers don't have
-    this package on sys.path (same reasoning as multimodal._make_decoder).
+    file's bytes to an executor and ``mapInArrow`` decodes them with the
+    compiled decoder, one RecordBatch per Avro block. The decoder closure
+    is built inside this function so cloudpickle serializes it BY VALUE —
+    executor workers don't have this package on sys.path (same reasoning
+    as multimodal._make_decoder).
 
     Scale shape: per-file parallelism (the standard many-part-file Avro
-    layout); a giant single file would need a sync-marker splitter, which
-    is the documented extension point. Python-side decode is the price of
-    the missing jar — in a deployment with spark-avro available,
-    read_source uses the native JVM reader and never reaches this path.
+    layout); a single file over SPLIT_THRESHOLD_BYTES reads through the
+    sync-marker splitter. A worker holds one file's bytes and one block's
+    values at a time. Python-side decode is the price of the missing jar
+    — in a deployment with spark-avro available, read_source uses the
+    native JVM reader and never reaches this path.
     """
     import glob as _glob
     import os
+
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     first = sorted(_glob.glob(os.path.join(path, "*.avro"))) if os.path.isdir(path) else [path]
     if not first:
         raise ValueError(f"no .avro files under {path!r}")
     with open(first[0], "rb") as f:
-        avro_schema, _, _, _ = _read_header_grow(f)
+        avro_schema = _read_header_grow(f)[0]
     spark_schema = avro_to_spark_type(avro_schema)
     if not isinstance(spark_schema, T.StructType):
         raise ValueError("top-level avro schema must be a record")
-    field_names = [f.name for f in spark_schema.fields]
+    arrow_schema = to_arrow_schema(spark_schema)
 
     # executor Python workers don't have this package on sys.path: register
     # the module for BY-VALUE cloudpickle so the whole decode call graph
-    # (read_avro_bytes → _decode → _read_long …) ships inside the closure
+    # (_arrow_batches → _compile → _from_logical …) ships inside the closure
     # instead of as an import reference
     import sys as _sys
 
@@ -652,16 +915,16 @@ def read_avro_distributed(spark: SparkSession, path: str) -> DataFrame:
 
     _cp.register_pickle_by_value(_sys.modules[__name__])
 
-    read_bytes_fn = read_avro_bytes
+    batches_fn = _arrow_batches
 
     def decode_files(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            for blob in pdf["content"]:
-                _, records = read_bytes_fn(bytes(blob))
-                if records:
-                    yield pd.DataFrame.from_records(records, columns=field_names)
+        builders: dict = {}
+        for batch in batches:
+            for blob in batch.column(0):
+                buf = blob.as_buffer()
+                yield from batches_fn(pa.BufferReader(buf), buf.size, arrow_schema, builders)
 
     if os.path.isdir(path):
         # directory: every *.avro part-file, one task per file
@@ -678,7 +941,7 @@ def read_avro_distributed(spark: SparkSession, path: str) -> DataFrame:
         if os.path.getsize(path) > SPLIT_THRESHOLD_BYTES:
             return read_avro_split_distributed(spark, path)
         binary = spark.read.format("binaryFile").load(path)
-    return binary.select("content").mapInPandas(decode_files, schema=spark_schema)
+    return binary.select("content").mapInArrow(decode_files, schema=spark_schema)
 
 
 # Single files above this size read via byte-range splits instead of one
@@ -702,6 +965,7 @@ def read_avro_split_distributed(
     inside the range belongs to the previous task) — so every block is
     decoded exactly once with no coordination. A range wholly inside
     one giant block finds no boundary and yields nothing, also correct.
+    Each block streams out of ``mapInArrow`` as one RecordBatch.
 
     Marker collisions: the writer's sync defaults to md5(schema JSON) —
     16 bytes the data has no reason to contain (an all-zero marker
@@ -718,16 +982,17 @@ def read_avro_split_distributed(
     import sys as _sys
 
     from pyspark import cloudpickle as _cp
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     _cp.register_pickle_by_value(_sys.modules[__name__])
 
     with open(path, "rb") as f:
-        schema, codec, sync, header_end = _read_header_grow(f)
+        schema, codec, sync, _meta, header_end = _read_header_grow(f)
     size = os.path.getsize(path)
     spark_schema = avro_to_spark_type(schema)
     if not isinstance(spark_schema, T.StructType):
         raise ValueError("top-level avro schema must be a record")
-    field_names = [f.name for f in spark_schema.fields]
+    arrow_schema = to_arrow_schema(spark_schema)
 
     starts = list(range(header_end, size, split_bytes))
     ranges = [
@@ -736,11 +1001,9 @@ def read_avro_split_distributed(
     rng_df = spark.createDataFrame(ranges, "start long, end long").repartition(
         max(1, len(ranges))
     )
-    read_long_fn, read_bytes_fn, decode_fn = _read_long, _read_bytes, _decode
+    blocks_fn, builder_fn = _blocks, _batch_builder
 
     def decode_ranges(batches):
-        import pandas as pd
-
         def first_block_start(f, start, end):
             # blocks begin immediately after a sync; the header's own
             # trailing sync puts the first block exactly at header_end
@@ -762,27 +1025,15 @@ def read_avro_split_distributed(
                 idx = hit + 1
             # unreachable
 
-        for pdf in batches:
-            for start, end in zip(pdf["start"], pdf["end"]):
-                out: list[dict] = []
+        build = builder_fn(schema, arrow_schema)
+        for batch in batches:
+            for start, end in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
                 with open(path, "rb") as f:
-                    pos = first_block_start(f, int(start), int(end))
-                    while pos is not None and pos < int(end) and pos < size:
-                        f.seek(pos)
-                        n_records = read_long_fn(f)
-                        block = read_bytes_fn(f)
-                        if f.read(16) != sync:
-                            raise ValueError(
-                                "sync marker mismatch (corrupt block or "
-                                "marker collision)"
-                            )
-                        if codec == "deflate":
-                            block = zlib.decompress(block, -15)
-                        bbuf = io.BytesIO(block)
-                        for _ in range(n_records):
-                            out.append(decode_fn(schema, bbuf))
-                        pos = f.tell()
-                if out:
-                    yield pd.DataFrame.from_records(out, columns=field_names)
+                    pos = first_block_start(f, start, end)
+                    if pos is None:
+                        continue
+                    f.seek(pos)
+                    for n, block in blocks_fn(f, codec, sync, min(end, size)):
+                        yield build(block, n)
 
-    return rng_df.mapInPandas(decode_ranges, schema=spark_schema)
+    return rng_df.mapInArrow(decode_ranges, schema=spark_schema)

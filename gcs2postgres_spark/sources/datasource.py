@@ -869,44 +869,28 @@ def make_iceberg_py_datasource():
             self.col_names = col_names  # table column order (by name)
 
     def _read_ice_table_file(path, col_names):
-        """One data file → arrow table projected to the table columns,
+        """One data file → arrow batches projected to the table columns,
         dispatched on the file's format (parquet/ORC natively via
-        pyarrow; AVRO via the pure-Python avro_py codec — same formats
-        the jar-less batch reader accepts)."""
+        pyarrow; AVRO via the pure-Python avro_py codec, one batch per
+        Avro block — same formats the jar-less batch reader accepts)."""
         import pyarrow as pa
 
         if path.endswith(".orc"):
             import pyarrow.orc as _orc
 
-            tbl = _orc.ORCFile(path).read()
+            batches = _orc.ORCFile(path).read().to_batches()
         elif path.endswith(".avro"):
             _ensure_pkg()
-            import pandas as pd
+            from gcs2postgres_spark.sources.avro_py import read_avro_arrow
 
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            from gcs2postgres_spark.sources.avro_py import (
-                avro_to_spark_type,
-                read_avro_file,
-            )
-
-            schema, records = read_avro_file(path)
-            st = avro_to_spark_type(schema)
-            pdf = pd.DataFrame.from_records(
-                records, columns=[f.name for f in st.fields]
-            )
-            tbl = pa.Table.from_pandas(
-                pdf, schema=to_arrow_schema(st), preserve_index=False
-            )
+            batches = read_avro_arrow(path)
         else:
             import pyarrow.parquet as pq
 
-            tbl = pq.read_table(path)
-        cols = [
-            tbl.column(n).combine_chunks() for n in col_names if n in tbl.column_names
-        ]
-        names = [n for n in col_names if n in tbl.column_names]
-        return pa.table(cols, names=names)
+            batches = pq.read_table(path).to_batches()
+        for b in batches:
+            names = [n for n in col_names if n in b.schema.names]
+            yield pa.RecordBatch.from_arrays([b.column(n) for n in names], names=names)
 
     class _IceStreamReader(DataSourceStreamReader):
         def __init__(self, options):
@@ -991,9 +975,7 @@ def make_iceberg_py_datasource():
             return parts
 
         def read(self, partition):
-            yield from _read_ice_table_file(
-                partition.path, partition.col_names
-            ).to_batches()
+            yield from _read_ice_table_file(partition.path, partition.col_names)
 
         def commit(self, end):
             pass
@@ -1006,9 +988,7 @@ def make_iceberg_py_datasource():
             return self._parts
 
         def read(self, partition):
-            yield from _read_ice_table_file(
-                partition.path, partition.col_names
-            ).to_batches()
+            yield from _read_ice_table_file(partition.path, partition.col_names)
 
     class IcebergPyDataSource(DataSource):
         """format("iceberg_py"): batch over the current snapshot's data

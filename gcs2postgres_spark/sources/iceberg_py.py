@@ -1370,25 +1370,27 @@ def _scan_avro_groups(
     (metadata-bounded, the same O(files) class as the manifest walk)
     groups files by their (name, field-id, type) schema signature —
     mirroring _group_by_field_ids for parquet — then each group decodes
-    executor-side via binaryFile + mapInPandas. Iceberg avro schemas
-    carry the spec's "field-id" attribute per field, so the returned
-    idmap gives the reader id-based resolution (post-rename reads stay
-    correct — better than the ORC fallback, whose native scan is
-    name-only).
+    executor-side via binaryFile + mapInArrow, one RecordBatch per Avro
+    block. Iceberg avro schemas carry the spec's "field-id" attribute
+    per field, so the returned idmap gives the reader id-based
+    resolution (post-rename reads stay correct — better than the ORC
+    fallback, whose native scan is name-only).
 
     ``need_tag`` adds ``__ice_fp``/``__ice_pos``: the decoder emits
-    each record's ordinal within its container file, which is exactly
-    the spec's row position, so position deletes apply to avro data
-    files with the same fidelity parquet gets from _metadata.row_index.
+    each record's ordinal within its container file, counted across its
+    blocks, which is exactly the spec's row position, so position
+    deletes apply to avro data files with the same fidelity parquet
+    gets from _metadata.row_index.
 
     Scale shape: per-file tasks (the standard many-part-file layout);
-    decode is Python (the price of the missing jar) but Arrow-batched
-    out, and only this table's avro-era files pay it — parquet/ORC
-    groups in the same table keep their native scans.
+    decode is Python (the price of the missing jar) into Arrow batches,
+    and only this table's avro-era files pay it — parquet/ORC groups in
+    the same table keep their native scans.
     """
     import sys as _sys
 
     from pyspark import cloudpickle as _cp
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from gcs2postgres_spark.sources import avro_py as _avro
 
@@ -1404,12 +1406,10 @@ def _scan_avro_groups(
             # BOUNDED probe: the grow-loop reads the 64 KiB header
             # block (doubling only for outsized schema JSON) through
             # ranged reads — never the whole object to the driver
-            schema, _codec, _sync, _end = _avro._read_header_grow(
-                fsio.RangeReader(p)
-            )
+            schema = _avro._read_header_grow(fsio.RangeReader(p))[0]
         else:
             with open(p, "rb") as f:
-                schema, _codec, _sync, _end = _avro._read_header_grow(f)
+                schema = _avro._read_header_grow(f)[0]
         sig = tuple(
             (fld["name"], fld.get("field-id"), json.dumps(fld["type"], sort_keys=True))
             for fld in (schema.get("fields") or [])
@@ -1424,31 +1424,42 @@ def _scan_avro_groups(
         spark_t = _avro.avro_to_spark_type(schema)
         if not isinstance(spark_t, T.StructType):
             raise ValueError("iceberg avro data file schema must be a record")
-        field_names = [f.name for f in spark_t.fields]
         out_schema = T.StructType(list(spark_t.fields))
         if need_tag:
             out_schema = out_schema.add("__ice_fp", T.StringType()).add(
                 "__ice_pos", T.LongType()
             )
-        read_bytes_fn = _avro.read_avro_bytes
-
-        def decode(batches, _names=tuple(field_names), _tag=need_tag, _read=read_bytes_fn):
+        def decode(
+            batches,
+            _tag=need_tag,
+            _data=to_arrow_schema(spark_t),
+            _out=to_arrow_schema(out_schema),
+            _batches=_avro._arrow_batches,
+            _to_arrow=_avro._to_arrow,
+        ):
             import re as _re
 
-            import pandas as pd
+            import pyarrow as pa
 
-            for pdf in batches:
-                for pth, blob in zip(pdf["path"], pdf["content"]):
-                    _schema, records = _read(bytes(blob))
-                    g = pd.DataFrame.from_records(records, columns=list(_names))
-                    if _tag:
-                        g["__ice_fp"] = _re.sub(r"^file:(//)?", "", pth)
-                        g["__ice_pos"] = range(len(g))
-                    if len(g):
-                        yield g
+            builders: dict = {}
+            for batch in batches:
+                for pth, blob in zip(batch.column(0).to_pylist(), batch.column(1)):
+                    buf = blob.as_buffer()
+                    fp = _re.sub(r"^file:(//)?", "", pth).encode()
+                    pos = 0
+                    for rb in _batches(pa.BufferReader(buf), buf.size, _data, builders):
+                        if _tag:
+                            n = rb.num_rows
+                            tags = [
+                                _to_arrow([fp] * n, [], "bytes", None, pa.string()),
+                                _to_arrow(range(pos, pos + n), [], "int", None, pa.int64()),
+                            ]
+                            rb = pa.RecordBatch.from_arrays(rb.columns + tags, schema=_out)
+                            pos += n
+                        yield rb
 
         binary = spark.read.format("binaryFile").load(gpaths).select("path", "content")
-        adf = binary.mapInPandas(decode, schema=out_schema)
+        adf = binary.mapInArrow(decode, schema=out_schema)
         idmap = {
             fld["field-id"]: fld["name"]
             for fld in (schema.get("fields") or [])

@@ -88,7 +88,8 @@ def read_source(
                 raise
             # spark-avro module absent: fall back to the pure-Python
             # distributed container reader (sources/avro_py.py) — same
-            # rows, per-file parallelism, no driver materialization
+            # rows, per-file parallelism, one Arrow batch per Avro block
+            # out of mapInArrow, no driver materialization
             from gcs2postgres_spark.sources.avro_py import read_avro_distributed
 
             df = read_avro_distributed(spark, path)
