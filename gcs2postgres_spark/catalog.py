@@ -8,6 +8,13 @@ temp view under the bare table name.
 At 100 TB these would be partitioned/bucketed catalog tables — the
 loader is the single seam where that swap happens (read path only;
 every operator downstream sees a DataFrame either way).
+
+Schemas resolve through ``sources.readers.read_inferred``, the one
+seam the parity layer's ``read_source`` uses too: a table's parquet
+footer is read once per file version per session (a bench of ~3 tables
+per query over 10 distinct files otherwise pays a driver-side footer
+job per call, ~0.1 s each at sf1), and every call still builds a
+fresh relation.
 """
 
 from __future__ import annotations
@@ -15,6 +22,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from gcs2postgres_spark.sources.readers import read_inferred
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -34,27 +43,6 @@ TABLES = [
 # Small dimension tables that should always be broadcast in joins.
 BROADCAST_TABLES = {"region", "nation", "supplier"}
 
-# Parquet schema cache: spark.read.parquet() runs a driver-side footer
-# read per CALL for schema inference; a 26-query bench touching ~3
-# tables each pays it ~80 times for 10 distinct files (measured ~0.1 s
-# per inference at sf1 — seconds of pure per-query latency). Keyed by
-# (path, mtime, size, nanosAsLong): file identity plus the one session
-# conf that changes an inferred parquet type (TIMESTAMP(NANOS) reads as
-# bigint with the flag, errors without).
-_SCHEMA_CACHE: dict[tuple, object] = {}
-
-
-def _parquet_schema(spark: SparkSession, path: str):
-    st = os.stat(path)
-    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    key = (path, st.st_mtime_ns, st.st_size, nanos)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[key] = schema
-    return schema
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table as a DataFrame (columnar parquet scan).
 
@@ -71,7 +59,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       cast to TIMESTAMP (UTC session tz, value-identical).
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.schema(_parquet_schema(spark, path)).parquet(path)
+    df = read_inferred(spark, path, "parquet")
     if name == "events":
         from pyspark.sql import functions as F
 

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from gcs2postgres_spark.functions.vectors import cosine_similarity, dot
+from gcs2postgres_spark.operators.caching import scan_rows_upper_bound
 from gcs2postgres_spark.operators.joins import topk_per_group
 
 
@@ -827,8 +828,10 @@ def blocked_cosine_pairs(
     if nblocks is None:
         import math
 
-        # One bounded scalar probe (a column-pruned count), not a
-        # node-sized collect. Parallelism floor: enough block pairs to
+        # The parquet footers' row count (an upper bound under
+        # filters), else one column-pruned count job; block count only
+        # sizes the work, so an over-estimate keeps every pair exact.
+        # Parallelism floor: enough block pairs to
         # cover the cores (nblocks·(nblocks+1)/2 ≥ cores). Memory
         # ceiling: the DOMINANT per-task allocation is the cosine
         # matrix C = (N/nblocks)² float64 (plus its boolean threshold
@@ -836,7 +839,9 @@ def blocked_cosine_pairs(
         # ~32 MB, which an r18 A/B confirmed matters: 8 blocks at
         # N=60k (450 MB C per task × 32 concurrent tasks) ran 1.7×
         # SLOWER than 30, despite 4× less replication shuffle.
-        n = vectors.count()
+        n = scan_rows_upper_bound(vectors)
+        if n is None:
+            n = vectors.count()
         cores = vectors.sparkSession.sparkContext.defaultParallelism
         nb_par = math.ceil((math.sqrt(8.0 * cores + 1) - 1) / 2)
         nb_gemm = math.ceil(max(n, 1) / 2048)

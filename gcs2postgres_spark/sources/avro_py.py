@@ -29,7 +29,9 @@ the *Java* Avro reference implementation bundled with Spark
 directions (tests/test_sources_formats.py).
 
 Supported: null/boolean/int/long/float/double/bytes/string, record,
-array, map, union, enum, fixed; codecs null + deflate (raw zlib).
+array, map, union, enum, fixed, and references to named types defined
+earlier in the schema (not recursive ones); codecs null + deflate (raw
+zlib).
 Logical types date, timestamp-millis/-micros and decimal convert (see
 _from_logical; the Arrow path casts to date32, UTC timestamp[us] and
 decimal128); other logical types read as their base type.
@@ -154,6 +156,60 @@ def _to_logical(lt: str, v, schema):
     return v
 
 
+# ------------------------------------------------------------- named types
+
+_PRIMITIVES = {"null", "boolean", "int", "long", "float", "double", "bytes", "string"}
+
+
+def _resolve_names(schema):
+    """``schema`` with each reference to a named type (a record, enum or
+    fixed defined earlier in it) replaced by that definition, so the
+    decoder, the encoder and the Spark type need no name table. Spec
+    rules: a dotted name is a full name; otherwise the type's
+    ``namespace``, else the enclosing definition's, qualifies it; an
+    unqualified reference also finds a definition in the null namespace,
+    as the Java implementation does. A recursive type has no flat form
+    and is refused, as spark-avro refuses it. The input is not
+    modified."""
+    named: dict[str, dict] = {}
+    defining: set[str] = set()
+
+    def walk(s, ns):
+        if isinstance(s, list):
+            return [walk(b, ns) for b in s]
+        if isinstance(s, str):
+            if s in _PRIMITIVES:
+                return s
+            for name in ((f"{ns}.{s}" if ns and "." not in s else s), s):
+                if name in defining:
+                    raise ValueError(f"recursive avro type {name!r} is not supported")
+                if name in named:
+                    return named[name]
+            raise ValueError(f"unsupported avro type {s!r}")
+        t = s["type"]
+        if t in ("record", "enum", "fixed"):
+            name = s["name"]
+            if "." not in name:
+                space = s.get("namespace", ns)
+                name = f"{space}.{name}" if space else name
+            if t == "record":
+                defining.add(name)
+                inner = name.rpartition(".")[0]
+                s = {**s, "fields": [{**f, "type": walk(f["type"], inner)} for f in s["fields"]]}
+                defining.discard(name)
+            named[name] = s
+            return s
+        if t == "array":
+            return {**s, "items": walk(s["items"], ns)}
+        if t == "map":
+            return {**s, "values": walk(s["values"], ns)}
+        if isinstance(t, str) and t not in _PRIMITIVES:  # {"type": "<named type>"}
+            return walk(t, ns)
+        return s
+
+    return walk(schema, None)
+
+
 # ---------------------------------------------------------- compiled decoder
 #
 # A writer schema compiles once into one Python function: straight-line
@@ -267,7 +323,7 @@ class _Codegen:
             self.put(ind, f"{target} = buf[pos:pos + {size}]\npos += {size}")
             if schema == "string" and not raw:
                 self.put(ind, f"{target} = {target}.decode('utf-8')")
-        elif isinstance(schema, str):  # a named-type reference
+        elif isinstance(schema, str):  # names are resolved before codegen
             raise ValueError(f"unsupported avro type {schema!r}")
         elif schema["type"] == "record":
             items = []
@@ -311,7 +367,8 @@ class _Codegen:
 def _compile(schema, columns: bool):
     """``decode(block, n)`` for ``n`` objects of ``schema`` in one block's
     bytes → ``[values]``, or with ``columns`` a record schema's
-    ``(one list per field, null row numbers per field)``."""
+    ``(one list per field, null row numbers per field)``. Named-type
+    references must already be resolved (_resolve_names)."""
     g = _Codegen()
     if columns:
         width = len(schema["fields"])
@@ -520,7 +577,7 @@ def _read_records(data: bytes) -> tuple[dict, list, dict]:
     key = meta["avro.schema"]
     decode = _RECORD_DECODERS.get(key)
     if decode is None:
-        decode = _RECORD_DECODERS[key] = _compile(schema, columns=False)
+        decode = _RECORD_DECODERS[key] = _compile(_resolve_names(schema), columns=False)
     records: list = []
     for n, block in blocks:
         records += _run(decode, block, n)
@@ -604,11 +661,12 @@ def write_avro_file(
         _write_bytes(out, v)
     _write_long(out, 0)
     out.write(sync)
+    body_schema = _resolve_names(schema)
     for i in range(0, len(records), block_records):
         chunk = records[i : i + block_records]
         bbuf = io.BytesIO()
         for r in chunk:
-            _encode(schema, r, bbuf)
+            _encode(body_schema, r, bbuf)
         body = bbuf.getvalue()
         if codec == "deflate":
             c = zlib.compressobj(wbits=-15)
@@ -637,26 +695,30 @@ def write_avro_file(
 
 
 def avro_to_spark_type(schema) -> T.DataType:
+    return _spark_type(_resolve_names(schema))
+
+
+def _spark_type(schema) -> T.DataType:
     if isinstance(schema, list):
         non_null = [s for s in schema if s != "null"]
         if len(non_null) != 1:
             raise ValueError(f"only unions of null + one type supported: {schema!r}")
-        return avro_to_spark_type(non_null[0])
+        return _spark_type(non_null[0])
     if isinstance(schema, dict):
         t = schema["type"]
         if t == "record":
             return T.StructType(
                 [
                     T.StructField(
-                        f["name"], avro_to_spark_type(f["type"]), _nullable(f["type"])
+                        f["name"], _spark_type(f["type"]), _nullable(f["type"])
                     )
                     for f in schema["fields"]
                 ]
             )
         if t == "array":
-            return T.ArrayType(avro_to_spark_type(schema["items"]), _nullable(schema["items"]))
+            return T.ArrayType(_spark_type(schema["items"]), _nullable(schema["items"]))
         if t == "map":
-            return T.MapType(T.StringType(), avro_to_spark_type(schema["values"]), _nullable(schema["values"]))
+            return T.MapType(T.StringType(), _spark_type(schema["values"]), _nullable(schema["values"]))
         if t == "enum":
             return T.StringType()
         lt = schema.get("logicalType")
@@ -668,7 +730,7 @@ def avro_to_spark_type(schema) -> T.DataType:
             return T.DecimalType(int(schema["precision"]), int(schema.get("scale", 0)))
         if t == "fixed":
             return T.BinaryType()
-        return avro_to_spark_type(t)
+        return _spark_type(t)
     return {
         "null": T.NullType(),
         "boolean": T.BooleanType(),
@@ -826,6 +888,7 @@ def _batch_builder(schema: dict, arrow_schema):
     matched by name to the writer ``schema``'s fields (absent → nulls)."""
     import pyarrow as pa
 
+    schema = _resolve_names(schema)
     decode = _compile(schema, columns=True)
     fields = {f["name"]: (i, *_flat_kind(f["type"])) for i, f in enumerate(schema["fields"])}
     plan = [(fields.get(f.name), f.type) for f in arrow_schema]

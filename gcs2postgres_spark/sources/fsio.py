@@ -393,18 +393,26 @@ def bulk_delete(paths: list[str]) -> int:
     return removed
 
 
+def _posix_walk(path: str):
+    """(full path, stat) of every file under a posix ``path``; a file
+    yields itself (``os.walk`` of a file yields nothing)."""
+    if os.path.isfile(path):
+        yield path, os.stat(path)
+        return
+    for root, _dirs, files in os.walk(path):
+        for name in files:
+            full = os.path.join(root, name)
+            yield full, os.stat(full)
+
+
 def list_files(path: str) -> list[tuple[str, int]]:
     """EVERY file under ``path`` recursively as (full path, size) —
     one bulk listing (Hadoop listFiles(recursive=true) pages the
     object-store LIST API; posix walks). Paths come back in the same
-    scheme family as the input."""
+    scheme family as the input. A plain file lists as itself, as
+    Hadoop's listFiles lists it."""
     if not has_scheme(path):
-        out = []
-        for root, _dirs, files in os.walk(path):
-            for name in files:
-                full = os.path.join(root, name)
-                out.append((full, os.path.getsize(full)))
-        return out
+        return [(full, st.st_size) for full, st in _posix_walk(path)]
     fs, p, _jvm = _fs(path)
     out = []
     it = fs.listFiles(p, True)
@@ -420,13 +428,7 @@ def list_files_mtime(path: str) -> list[tuple[str, int, int]]:
     mtime powers orphan-cleanup age guards (delete only files older
     than a horizon, so in-flight writers' staged files survive)."""
     if not has_scheme(path):
-        out = []
-        for root, _dirs, files in os.walk(path):
-            for name in files:
-                full = os.path.join(root, name)
-                st = os.stat(full)
-                out.append((full, st.st_size, int(st.st_mtime * 1000)))
-        return out
+        return [(full, st.st_size, int(st.st_mtime * 1000)) for full, st in _posix_walk(path)]
     fs, p, _jvm = _fs(path)
     out = []
     it = fs.listFiles(p, True)

@@ -784,6 +784,37 @@ def test_blocked_cosine_pairs_match_allpairs_crossjoin(spark, sf_dir):
         assert abs(got[k] - want[k]) < 1e-9
 
 
+def test_blocked_cosine_pairs_sizes_blocks_without_a_job(spark, sf_dir):
+    # over a parquet scan the block count comes from the footers' row
+    # count, so building the pairs runs no Spark job (a count ran one);
+    # the pairs still equal a fixed-block run's, and a source with no
+    # footer still counts
+    from gcs2postgres_spark.catalog import load_table
+    from gcs2postgres_spark.operators.similarity import blocked_cosine_pairs
+
+    sc = spark.sparkContext
+
+    def jobs(fn, group):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def pairs(df):
+        return {(r.id_a, r.id_b): round(r.cos_sim, 9) for r in df.collect()}
+
+    e = load_table(spark, sf_dir, "embeddings")
+    auto, n = jobs(lambda: blocked_cosine_pairs(e, threshold=0.45), "bcp_footer")
+    assert n == 0
+    want = pairs(blocked_cosine_pairs(e, threshold=0.45, nblocks=7))
+    assert pairs(auto) == want and len(want) > 0
+    mem = spark.createDataFrame(e.limit(64).collect(), e.schema)
+    _, n = jobs(lambda: blocked_cosine_pairs(mem, threshold=0.45), "bcp_count")
+    assert n >= 1
+
+
 def test_blocked_cosine_pairs_zero_norm_excluded(spark):
     # zero-norm vectors have no defined cosine: they must never pair
     # (with anything, including each other) and must not surface NaN
