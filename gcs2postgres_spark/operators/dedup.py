@@ -1,23 +1,23 @@
 """Deduplication operators (SURVEY.md §2.8): exact, MinHash+LSH,
 SimHash, n-gram Jaccard.
 
-All pure-DataFrame plans — shingling, hashing, banding, and candidate
-joins are Catalyst expressions (xxhash64, higher-order array funcs),
-no Python UDFs. That keeps the whole pipeline JVM-side and
-shuffle-bounded: the only wide ops are the groupBy per doc and the
-band-bucket self-join, both of which scale with partitions. At 100 TB
-the band join is the dominant shuffle; band tables are pre-bucketed by
-(band_id, band_hash) so LSH bucket joins co-locate.
+Hashing, banding and candidate joins are Catalyst expressions
+(xxhash64, higher-order array funcs). Two string kernels run in Python
+per Arrow batch, where interpreted higher-order lambdas were the wall:
+the word shingler (arrow_udf) and the portable winnower (mapInArrow).
+They build their outputs from flat buffers (operators/arrowbuf.py), so
+no worker imports pandas. The only wide ops are the groupBy per doc and
+the band-bucket self-join, both of which scale with partitions. At
+100 TB the band join is the dominant shuffle; band tables are
+pre-bucketed by (band_id, band_hash) so LSH bucket joins co-locate.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
+from gcs2postgres_spark.operators.arrowbuf import arrow_array, arrow_lists, arrow_strings
 from gcs2postgres_spark.operators.caching import maybe_persist, widen_doc_scan
 
 
@@ -90,24 +90,29 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     )
 
 
-def _shingles_pandas_udf(n: int):
+def _shingles_arrow_udf(n: int):
     """Arrow-batched shingler matching word_shingles semantics exactly
     (lower, whitespace-split, distinct word n-grams, whole-text fallback
     for short docs). Measured ~3-4× faster than the higher-order-function
     version: string-heavy HOF lambdas run interpreted (no codegen), while
     this moves one Arrow batch per partition and shingles in tight Python.
-    Output sorted for determinism."""
+    Output sorted for determinism; the list column is built from one flat
+    string buffer plus offsets."""
+    from pyspark.sql.functions import arrow_udf
+    from pyspark.sql.types import ArrayType, StringType
 
-    @pandas_udf("array<string>")
-    def shingles(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
+    @arrow_udf(ArrayType(StringType()))
+    def shingles(texts):
+        out: list[str] = []
+        offs = [0]
+        for t in texts.to_pylist():
             toks = (t or "").strip().lower().split()
             if len(toks) >= n:
-                out.append(sorted({" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}))
+                out.extend(sorted({" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}))
             else:
-                out.append([" ".join(toks)])
-        return pd.Series(out)
+                out.append(" ".join(toks))
+            offs.append(len(out))
+        return arrow_lists(offs, arrow_strings(out))
 
     return shingles
 
@@ -142,7 +147,7 @@ def shingle_docs(docs: DataFrame, id_col: str, text_col: str, shingle_n: int = 3
     # failure (remote scheme, non-parquet) degrades to full width.
     docs = widen_doc_scan(docs, id_col)
     return docs.select(
-        F.col(id_col), F.explode(_shingles_pandas_udf(shingle_n)(F.col(text_col))).alias("shingle")
+        F.col(id_col), F.explode(_shingles_arrow_udf(shingle_n)(F.col(text_col))).alias("shingle")
     )
 
 
@@ -524,7 +529,7 @@ def simhash_near_pairs(
 # ([ \t\n\x0b\f\r]), but Python's unicode \s also eats   etc., and
 # unicode lowercasing diverges across engines (dotted-I, ß). An explicit
 # ASCII class + translate-based A-Z lowercase is a no-op for ASCII
-# corpora and gives identical fingerprints on Spark-JVM / pandas-UDF /
+# corpora and gives identical fingerprints on Spark-JVM / Arrow kernel /
 # DuckDB for any input.
 _ASCII_WS = "[ \t\n\x0b\f\r]+"
 _AZ_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
@@ -569,14 +574,29 @@ def _window_minima(grams: Column, w: int) -> Column:
 
 
 def _winnow_fps_batches(k: int, w: int):
-    """mapInArrow winnower kernel: same hash/minima/distinct semantics
-    as _winnow_fps_pandas_udf, but the output list column is built from
-    ONE flat int64 buffer + offsets (pa.ListArray.from_arrays) instead
-    of a pandas Series of per-row Python lists. The pandas path spends
+    """mapInArrow fused winnower for the PORTABLE hash: k-gram
+    md5-hash60 + sliding-window minima + first-occurrence distinct in
+    one tight Python pass (hashlib.md5 is C). Mirrors the JVM
+    expression pipeline (_window_minima over _kgram_hashes) exactly —
+    substr semantics (short-text whole-string fallback),
+    least-over-window, array_distinct order — except that a NULL text
+    fingerprints like "" here, where the JVM pipeline gives [NULL].
+    Measured 21.2 s → ~2 s for the 5k-doc sf0.1 fingerprint stage: the
+    per-position md5→hex→conv expression chain runs INTERPRETED on the
+    JVM inside the HOF lambda (~4 ms/doc), the same trap the Arrow
+    shingler fixed for MinHash. Normalization is the pinned ASCII
+    semantics (_ASCII_WS class + A-Z translate) — NOT Python's unicode
+    \\s/lower(), which diverge from the JVM/DuckDB paths on \u00a0,
+    dotted-I casing etc., so parity holds for non-ASCII input too.
+    The xxhash64 production path stays a JVM expression (no Python
+    xxhash here) — it is ~2× cheaper than the md5 chain and not used
+    by any oracle-checked query.
+
+    The output list column is built from ONE flat int64 buffer +
+    offsets, not per-row Python lists: a pandas Series of lists spent
     ~3 s hashing and ~14 s BOXING 5.9M list elements through
     object-dtype Arrow conversion (measured at sf1: 17.4 s vs 3.0 s
-    end-to-end for this kernel) — the hash work was never the
-    fingerprint stage's ceiling, the serialization was."""
+    end-to-end for this kernel)."""
     import hashlib
     import re as _re
 
@@ -600,7 +620,12 @@ def _winnow_fps_batches(k: int, w: int):
                 s = ws.sub(" ", (t or "").translate(lower_tbl))
                 n = len(s)
                 m = max(n - (k - 1), 1)
-                # portable_hash60: top 60 bits of md5 (see pandas twin)
+                # portable_hash60 = int(md5_hex[:15], 16) = top 60 bits
+                # of the digest; digest[:8] big-endian >> 4 is the same
+                # value without the hex round-trip. ASCII docs slice the
+                # pre-encoded bytes (1 byte per char); non-ASCII docs
+                # must slice CHARACTERS and encode per gram, or
+                # multi-byte chars shift every index.
                 if s.isascii():
                     b = s.encode()
                     h = [fb(md5(b[i : i + k]).digest()[:8], "big") >> 4 for i in range(m)]
@@ -610,10 +635,13 @@ def _winnow_fps_batches(k: int, w: int):
                         for i in range(m)
                     ]
                 if m >= w:
+                    # sliding-window minima as w-1 vectorized element-wise
+                    # mins over shifted views (~8x a Python slice-min loop)
                     a = np.array(h, dtype=np.int64)
                     mins = a[: m - w + 1].copy()
                     for off in range(1, w):
                         np.minimum(mins, a[off : off + m - w + 1], out=mins)
+                    # first-occurrence distinct, matching array_distinct order
                     _, idx = np.unique(mins, return_index=True)
                     v = mins[np.sort(idx)]
                 else:
@@ -621,77 +649,13 @@ def _winnow_fps_batches(k: int, w: int):
                 chunks.append(v)
                 total += len(v)
                 offs[j + 1] = total
-            child = pa.array(
-                np.concatenate(chunks) if chunks else np.array([], dtype=np.int64),
-                type=pa.int64(),
+            fps = arrow_lists(
+                offs,
+                arrow_array(np.concatenate(chunks) if chunks else np.empty(0, dtype=np.int64)),
             )
-            fps = pa.ListArray.from_arrays(pa.array(offs, type=pa.int32()), child)
             yield pa.RecordBatch.from_arrays([ids, fps], names=["_id", "fps"])
 
     return fps_batches
-
-
-def _winnow_fps_pandas_udf(k: int, w: int):
-    """Arrow-batched fused winnower for the PORTABLE hash: k-gram
-    md5-hash60 + sliding-window minima + first-occurrence distinct in
-    one tight Python pass (hashlib.md5 is C). Mirrors the JVM
-    expression pipeline exactly — substr semantics (short-text
-    whole-string fallback), least-over-window, array_distinct order.
-    Measured 21.2 s → ~2 s for the 5k-doc sf0.1 fingerprint stage: the
-    per-position md5→hex→conv expression chain runs INTERPRETED on the
-    JVM inside the HOF lambda (~4 ms/doc), the same trap the Arrow
-    shingler fixed for MinHash. Normalization is the pinned ASCII
-    semantics (_ASCII_WS class + A-Z translate) — NOT Python's unicode
-    \\s/lower(), which diverge from the JVM/DuckDB paths on \u00a0,
-    dotted-I casing etc., so parity holds for non-ASCII input too.
-    The xxhash64 production path stays a JVM expression (no Python
-    xxhash here) — it is ~2× cheaper than the md5 chain and not used
-    by any oracle-checked query."""
-    import hashlib
-    import re as _re
-
-    import numpy as np
-
-    ws = _re.compile(_ASCII_WS)
-    lower_tbl = str.maketrans(_AZ_UPPER, _AZ_LOWER)
-    md5 = hashlib.md5
-    fb = int.from_bytes
-
-    @pandas_udf("array<long>")
-    def fps(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            s = ws.sub(" ", (t or "").translate(lower_tbl))
-            n = len(s)
-            m = max(n - (k - 1), 1)
-            # portable_hash60 = int(md5_hex[:15], 16) = top 60 bits of the
-            # digest; digest[:8] big-endian >> 4 is the same value without
-            # the hex round-trip. ASCII docs slice the pre-encoded bytes
-            # (1 byte per char); non-ASCII docs must slice CHARACTERS and
-            # encode per gram, or multi-byte chars shift every index.
-            if s.isascii():
-                b = s.encode()
-                h = [fb(md5(b[i : i + k]).digest()[:8], "big") >> 4 for i in range(m)]
-            else:
-                h = [
-                    fb(md5(s[i : i + k].encode("utf-8")).digest()[:8], "big") >> 4
-                    for i in range(m)
-                ]
-            if m >= w:
-                # sliding-window minima as w-1 vectorized element-wise mins
-                # over shifted views (~8x the Python slice-min loop)
-                a = np.array(h, dtype=np.int64)
-                mins = a[: m - w + 1].copy()
-                for off in range(1, w):
-                    np.minimum(mins, a[off : off + m - w + 1], out=mins)
-                # first-occurrence distinct, matching array_distinct order
-                _, idx = np.unique(mins, return_index=True)
-                out.append(mins[np.sort(idx)].tolist())
-            else:
-                out.append([min(h)])
-        return pd.Series(out)
-
-    return fps
 
 
 def winnow_docs(

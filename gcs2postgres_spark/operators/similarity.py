@@ -2,8 +2,13 @@
 brute-force cosine top-k (exact baseline) and an SRP-LSH bucketed
 approximate variant (the scale path).
 
-Both are pure-DataFrame plans; cosine is computed with Catalyst
-higher-order functions (functions/vectors.py), never per-row Python.
+Exact cosine over a candidate set is a Catalyst higher-order
+function (functions/vectors.py), never per-row Python. The matmul
+kernels (brute-force and IVF scoring, SRP bucket keys, IVF cell
+assignment, the blocked and clustered pair GEMMs) run per Arrow batch
+through mapInArrow, applyInArrow or arrow_udf, over zero-copy numpy
+views of the Arrow buffers (operators/arrowbuf.py). No worker of these
+kernels imports pandas.
 
 Scale design: brute force is O(|Q|·|C|) — fine when the query set is
 small and broadcast (the common "search" shape: few queries against a
@@ -22,6 +27,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from gcs2postgres_spark.functions.vectors import cosine_similarity, dot
+from gcs2postgres_spark.operators.arrowbuf import (
+    arrow_array,
+    arrow_lists,
+    np_column,
+    np_matrix,
+)
 from gcs2postgres_spark.operators.caching import scan_rows_upper_bound
 from gcs2postgres_spark.operators.joins import topk_per_group
 
@@ -40,7 +51,7 @@ def brute_force_cosine_topk(
     Scale design (the standard distributed brute-force ANN shape): the
     query set is small by contract — it is collected once, L2-normalized
     into a numpy matrix, and broadcast to executors; the corpus streams
-    through mapInPandas in Arrow batches, each batch scored against ALL
+    through mapInArrow in Arrow batches, each batch scored against ALL
     queries with one float64 BLAS matmul and pruned to k rows per query
     *inside the batch* before anything is emitted. The corpus is read
     once, never shuffled, never duplicated per query; the final global
@@ -52,7 +63,6 @@ def brute_force_cosine_topk(
     total order (cos desc, neighbor_id asc), and top-k of a union equals
     top-k of per-part top-k's under the same total order."""
     import numpy as np
-    import pandas as pd
 
     q_rows = queries.select(F.col(id_col), F.col(vec_col).cast("array<double>")).collect()
     if not q_rows:
@@ -66,41 +76,70 @@ def brute_force_cosine_topk(
     sc = queries.sparkSession.sparkContext
     bc = sc.broadcast((q_ids, q_mat))
 
-    def score_batches(batches):
-        ids, mat = bc.value
-        for pdf in batches:
-            c_ids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            c_mat = np.array(list(pdf["c_vec"]), dtype=np.float64)
-            c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-            sims = c_mat @ mat.T  # (batch × n_queries)
-            out_q, out_n, out_s = [], [], []
-            for j in range(len(ids)):
-                col = sims[:, j]
-                mask = c_ids != ids[j]  # exclude self-match
-                cand_idx = np.nonzero(mask)[0]
-                if len(cand_idx) == 0:
-                    continue
-                kk = min(k, len(cand_idx))
-                # top-k under (cos desc, id asc): partial-select then sort
-                part = cand_idx[np.argpartition(-col[cand_idx], kk - 1)[:kk]]
-                order = np.lexsort((c_ids[part], -col[part]))
-                sel = part[order]
-                out_q.extend([ids[j]] * len(sel))
-                out_n.extend(c_ids[sel])
-                out_s.extend(col[sel])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "cos_sim": out_s}
-            )
-
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("c_vec")
+        F.col(id_col).cast("long").alias("neighbor_id"),
+        F.col(vec_col).cast("array<double>").alias("c_vec"),
     )
-    scored = c.mapInPandas(
-        score_batches, schema="query_id long, neighbor_id long, cos_sim double"
+    scored = c.mapInArrow(
+        _make_topk_scorer(bc, k), schema="query_id long, neighbor_id long, cos_sim double"
     )
     return topk_per_group(
         scored, ["query_id"], [F.col("cos_sim").desc(), F.col("neighbor_id").asc()], k
     )
+
+
+def _make_topk_scorer(bc, k: int):
+    """mapInArrow scorer shared by brute_force_cosine_topk and
+    score_ivf_cells: each batch is scored against ALL queries with one
+    float64 BLAS matmul and pruned to its k best rows per query under
+    (cos desc, neighbor id asc), self-matches excluded.
+
+    ``bc.value`` is (query ids, L2-normalized query matrix) or, for an
+    IVF probe, (ids, matrix, probes) with each query's probed cells;
+    batch columns are (corpus id, vector) or (id, vector, cell) in that
+    order. A ``<locals>`` closure, so it ships to executors by value."""
+
+    def score_batches(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        ids, mat, *rest = bc.value
+        probes = rest[0] if rest else None
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            c_ids = np_column(rb.column(0))
+            c_mat = np_matrix(rb.column(1))
+            cells = np_column(rb.column(2)) if probes is not None else None
+            c_mat = c_mat / np.linalg.norm(c_mat, axis=1, keepdims=True)
+            sims = c_mat @ mat.T  # (batch × n_queries)
+            out_q, out_n, out_s = [], [], []
+            for j in range(len(ids)):
+                mask = c_ids != ids[j]  # exclude self-match
+                if probes is not None:
+                    mask &= np.isin(cells, probes[j])
+                cand_idx = np.nonzero(mask)[0]
+                if len(cand_idx) == 0:
+                    continue
+                kk = min(k, len(cand_idx))
+                col = sims[:, j]
+                # top-k under (cos desc, id asc): partial-select then sort
+                part = cand_idx[np.argpartition(-col[cand_idx], kk - 1)[:kk]]
+                sel = part[np.lexsort((c_ids[part], -col[part]))]
+                out_q.append(np.full(len(sel), ids[j], dtype=np.int64))
+                out_n.append(c_ids[sel])
+                out_s.append(col[sel])
+            if out_q:
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        arrow_array(np.concatenate(out_q)),
+                        arrow_array(np.concatenate(out_n)),
+                        arrow_array(np.concatenate(out_s)),
+                    ],
+                    names=["query_id", "neighbor_id", "cos_sim"],
+                )
+
+    return score_batches
 
 
 def brute_force_cosine_topk_hof(
@@ -180,9 +219,8 @@ def _srp_table_keys_arrow(tables: list[list[list[float]]]):
     zero on continuous embeddings, and recall contracts are insensitive
     to single-bit bucket jitter by construction."""
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    import pandas as pd  # noqa: F401
+    from pyspark.sql.functions import arrow_udf
+    from pyspark.sql.types import ArrayType, LongType
 
     nbits = len(tables[0])
     ntables = len(tables)
@@ -192,18 +230,20 @@ def _srp_table_keys_arrow(tables: list[list[list[float]]]):
     weights = (1 << np.arange(nbits, dtype=np.int64))
     namespaces = np.arange(ntables, dtype=np.int64) << 32
 
-    @pandas_udf("array<long>")
+    @arrow_udf(ArrayType(LongType()))
     def keys(vecs):
         import numpy as _np
-        import pandas as _pd
 
-        if not len(vecs):
-            return _pd.Series([], dtype=object)
-        M = _np.array(vecs.tolist(), dtype=_np.float64)
+        M = np_matrix(vecs)
+        n = len(M)
+        if n == 0:
+            return arrow_lists([0], arrow_array(_np.empty(0, dtype=_np.int64)))
         bits = (M @ H.T) >= 0.0  # (B, ntables·nbits)
-        buckets = bits.reshape(len(M), ntables, nbits) @ weights  # (B, ntables)
+        buckets = bits.reshape(n, ntables, nbits) @ weights  # (B, ntables)
         out = namespaces[None, :] | buckets
-        return _pd.Series(list(out))
+        return arrow_lists(
+            _np.arange(0, n * ntables + 1, ntables), arrow_array(out.ravel())
+        )
 
     return keys
 
@@ -350,24 +390,29 @@ def train_ivf_quantizer(
 
 def assign_ivf_cells(base: DataFrame, cent) -> DataFrame:
     """Assign every corpus vector to its nearest coarse cell: ONE Arrow
-    pass over the corpus (mapInPandas matmul against the broadcast
+    pass over the corpus (mapInArrow matmul against the broadcast
     centroids), no shuffle. Returns (cid, vec, cell) — the frame a
     production index writes back partitioned by ``cell`` so probes
     prune at the scan (see ``queries/llm.similarity_ivf_pruned_topk``)."""
-    import numpy as np
-    import pandas as pd
-
     bc_cent = base.sparkSession.sparkContext.broadcast(cent)
 
     def assign_batches(batches):
-        C = bc_cent.value
-        for pdf in batches:
-            mat = np.array(list(pdf["vec"]), dtype=np.float64)
-            mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-            cell = np.argmax(mat @ C.T, axis=1)
-            yield pd.DataFrame({"cid": pdf["cid"], "vec": pdf["vec"], "cell": cell})
+        import numpy as np
+        import pyarrow as pa
 
-    return base.mapInPandas(
+        C = bc_cent.value
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            mat = np_matrix(rb.column("vec"))
+            mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+            cell = np.argmax(mat @ C.T, axis=1).astype(np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column("cid"), rb.column("vec"), arrow_array(cell)],
+                names=["cid", "vec", "cell"],
+            )
+
+    return base.select(F.col("cid").cast("long"), "vec").mapInArrow(
         assign_batches, schema="cid long, vec array<double>, cell int"
     )
 
@@ -409,42 +454,15 @@ def score_ivf_cells(
     the caller pre-filters the scan to the probed cells and the filter
     becomes PartitionFilters (planning-time pruning, zero I/O for
     unprobed cells)."""
-    import numpy as np
-    import pandas as pd
-
     spark = assigned.sparkSession
     triple = ivf_query_probes(queries, cent, id_col, vec_col, n_probe)
     if triple is None:
         return spark.createDataFrame([], "query_id long, neighbor_id long, cos_sim double")
     bc_q = spark.sparkContext.broadcast(triple)
-
-    def score_batches(batches):
-        ids, mat, prb = bc_q.value
-        probe_sets = [set(p.tolist()) for p in prb]
-        for pdf in batches:
-            c_ids = pdf["cid"].to_numpy(dtype=np.int64)
-            cells = pdf["cell"].to_numpy()
-            c_mat = np.array(list(pdf["vec"]), dtype=np.float64)
-            c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-            sims = c_mat @ mat.T
-            out_q, out_n, out_s = [], [], []
-            for j in range(len(ids)):
-                mask = np.array([c in probe_sets[j] for c in cells]) & (c_ids != ids[j])
-                cand = np.nonzero(mask)[0]
-                if not len(cand):
-                    continue
-                kk = min(k, len(cand))
-                col = sims[:, j]
-                part = cand[np.argpartition(-col[cand], kk - 1)[:kk]]
-                order = np.lexsort((c_ids[part], -col[part]))
-                sel = part[order]
-                out_q.extend([ids[j]] * len(sel))
-                out_n.extend(c_ids[sel])
-                out_s.extend(col[sel])
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "cos_sim": out_s})
-
-    scored = assigned.select("cid", "vec", "cell").mapInPandas(
-        score_batches, schema="query_id long, neighbor_id long, cos_sim double"
+    scored = assigned.select(
+        F.col("cid").cast("long"), "vec", F.col("cell").cast("int")
+    ).mapInArrow(
+        _make_topk_scorer(bc_q, k), schema="query_id long, neighbor_id long, cos_sim double"
     )
     return topk_per_group(
         scored, ["query_id"], [F.col("cos_sim").desc(), F.col("neighbor_id").asc()], k
@@ -785,7 +803,7 @@ def blocked_cosine_pairs(
     Plan shape: block build is one keyed collect_list aggregation;
     the block-pair spine is spark.range(nblocks²) with two EQUI-joins
     (no cartesian node anywhere — the no-cartesian plan pin holds);
-    the GEMM stage is one Arrow-batched mapInPandas. ``nblocks`` is
+    the GEMM stage is one Arrow-batched applyInArrow. ``nblocks`` is
     the scale knob (tasks = nblocks·(nblocks+1)/2, block bytes =
     N/nblocks · dim · 8): size it so a block pair fits executor
     memory, exactly like shuffle partitions. ``nblocks=None``
@@ -809,7 +827,7 @@ def blocked_cosine_pairs(
     Representation (round 6): block members stay ORDINARY ROWS all the
     way to the GEMM task. Each vector is replicated once per block-pair
     it participates in (nblocks rows per vector, tagged with the pair
-    key), and ``groupBy(ba, bb).applyInPandas`` assembles each pair's
+    key), and ``groupBy(ba, bb).applyInArrow`` assembles each pair's
     sub-matrices from Arrow record batches worker-side. The earlier
     design packed a whole block into ONE ``collect_list`` row, so a
     100× corpus pushed single rows toward Spark's 2 GB record limit;
@@ -865,58 +883,43 @@ def blocked_cosine_pairs(
         "vec",
     )
     gemm = _make_pair_gemm(float(threshold))
-    return rep.groupBy("ba", "bb").applyInPandas(
+    return rep.groupBy("ba", "bb").applyInArrow(
         gemm, schema="id_a long, id_b long, cos_sim double"
     )
 
 
 def _make_pair_gemm(thr: float):
-    """Per-block-pair GEMM for applyInPandas, shared by
-    blocked_cosine_pairs (hash blocks) and clustered_cosine_pairs
+    """Per-block-pair GEMM for ``groupBy(ba, bb).applyInArrow``, shared
+    by blocked_cosine_pairs (hash blocks) and clustered_cosine_pairs
     (kmeans blocks). Built as a ``<locals>`` closure so cloudpickle
     ships it by value to executors. The group's rows carry (ba, bb,
     blk, id, vec); side A = rows with blk==ba, side B = blk==bb (same
-    rows on the diagonal). Zero-norm vectors are excluded
+    rows on the diagonal). A pair group can hold rows of only ONE of
+    its blocks (the other hashed no vectors), which leaves a side
+    empty and emits no pairs. Zero-norm vectors are excluded
     deterministically; emitted pairs are (min_id, max_id, cos)."""
 
-    def gemm(pdf):
+    def gemm(key, table):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
-        empty = pd.DataFrame(
-            {
-                "id_a": pd.Series([], dtype="int64"),
-                "id_b": pd.Series([], dtype="int64"),
-                "cos_sim": pd.Series([], dtype="float64"),
-            }
-        )
-        ba = int(pdf["ba"].iat[0])
-        bb = int(pdf["bb"].iat[0])
-        a_side = pdf[pdf["blk"] == ba]
-        # a pair group can hold rows from only ONE of its blocks (the
-        # other hashed no vectors — fewer vectors than blocks); an empty
-        # side means no cross pairs, and np.array([]) would be 1-D
-        if len(a_side) == 0:
-            return empty
-        ia = a_side["id"].to_numpy(dtype=np.int64)
-        A = np.array(a_side["vec"].tolist(), dtype=np.float64)
-        na = np.linalg.norm(A, axis=1)
-        ok_a = na > 0.0
-        ia, A, na = ia[ok_a], A[ok_a], na[ok_a]
-        if ba == bb:
-            ib, B, nb = ia, A, na
-        else:
-            b_side = pdf[pdf["blk"] == bb]
-            if len(b_side) == 0:
-                return empty
-            ib = b_side["id"].to_numpy(dtype=np.int64)
-            B = np.array(b_side["vec"].tolist(), dtype=np.float64)
-            nb = np.linalg.norm(B, axis=1)
-            ok_b = nb > 0.0
-            ib, B, nb = ib[ok_b], B[ok_b], nb[ok_b]
-        if len(ia) == 0 or len(ib) == 0:
-            return empty
-        C = (A / na[:, None]) @ (B / nb[:, None]).T
+        ba, bb = (int(k.as_py()) for k in key)
+        # a group's rows may arrive in several batches: join them once
+        [batch] = table.combine_chunks().to_batches()
+        blk = np_column(batch.column("blk"))
+        ids = np_column(batch.column("id"))
+        vecs = np_matrix(batch.column("vec"))
+
+        def side(b):
+            rows = blk == b
+            X = vecs[rows]
+            norm = np.linalg.norm(X, axis=1)
+            ok = norm > 0.0
+            return ids[rows][ok], X[ok] / norm[ok, None]
+
+        ia, A = side(ba)
+        ib, B = (ia, A) if ba == bb else side(bb)
+        C = A @ B.T
         if ba == bb:
             ii, jj = np.nonzero(np.triu(C > thr, k=1))
         else:
@@ -925,12 +928,13 @@ def _make_pair_gemm(thr: float):
         lo = np.minimum(a_ids, b_ids)
         hi = np.maximum(a_ids, b_ids)
         keep = lo != hi
-        return pd.DataFrame(
-            {
-                "id_a": lo[keep],
-                "id_b": hi[keep],
-                "cos_sim": C[ii, jj][keep],
-            }
+        return pa.Table.from_arrays(
+            [
+                arrow_array(lo[keep]),
+                arrow_array(hi[keep]),
+                arrow_array(C[ii, jj][keep]),
+            ],
+            names=["id_a", "id_b", "cos_sim"],
         )
 
     return gemm
@@ -970,7 +974,7 @@ def clustered_cosine_pairs(
     (bounded); assignment + radius is ONE Arrow pass (no shuffle); the
     k×k bound matrix is driver-side numpy on k centroids (k is a knob,
     ≤ thousands); retained pairs broadcast to two equi-joins (no
-    cartesian/BNLJ); then the identical groupBy(pair).applyInPandas
+    cartesian/BNLJ); then the identical groupBy(pair).applyInArrow
     GEMM as blocked_cosine_pairs — ordinary rows, no corpus-scaled
     record. Zero-norm vectors are excluded up front (no cosine).
     """
@@ -991,26 +995,27 @@ def clustered_cosine_pairs(
 
     def assign_with_cos(batches):
         import numpy as _np
-        import pandas as _pd
+        import pyarrow as _pa
 
         C = bc_cent.value
-        for pdf in batches:
-            if not len(pdf):
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            mat = _np.array(list(pdf["vec"]), dtype=_np.float64)
+            mat = np_matrix(rb.column("vec"))
             mat = mat / _np.linalg.norm(mat, axis=1, keepdims=True)
             sims = mat @ C.T
             cell = _np.argmax(sims, axis=1)
-            yield _pd.DataFrame(
-                {
-                    "id": pdf["cid"],
-                    "vec": pdf["vec"],
-                    "blk": cell.astype("int32"),
-                    "cos_c": sims[_np.arange(len(cell)), cell],
-                }
+            yield _pa.RecordBatch.from_arrays(
+                [
+                    rb.column("cid"),
+                    rb.column("vec"),
+                    arrow_array(cell.astype(_np.int32)),
+                    arrow_array(sims[_np.arange(len(cell)), cell]),
+                ],
+                names=["id", "vec", "blk", "cos_c"],
             )
 
-    assigned = base.mapInPandas(
+    assigned = base.mapInArrow(
         assign_with_cos,
         schema="id long, vec array<double>, blk int, cos_c double",
     ).localCheckpoint(eager=True)
@@ -1044,6 +1049,6 @@ def clustered_cosine_pairs(
     rep = rep_a.unionByName(rep_b).select("ba", "bb", "blk", "id", "vec")
 
     gemm = _make_pair_gemm(float(threshold))
-    return rep.groupBy("ba", "bb").applyInPandas(
+    return rep.groupBy("ba", "bb").applyInArrow(
         gemm, schema="id_a long, id_b long, cos_sim double"
     )

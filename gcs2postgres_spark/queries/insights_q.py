@@ -917,7 +917,7 @@ def corpus_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Arrow-batched shingler, NOT the higher-order-function form:
     # string-heavy HOF lambdas run interpreted and measured 14x slower
     # than the oracle at sf1 (70.5 s -> see BASELINE round-5b tier);
-    # the pandas shingler is the same one the MinHash pipeline uses.
+    # the Arrow shingler is the same one the MinHash pipeline uses.
     # persist the (doc, ngram) relation: it feeds BOTH the first-seen
     # aggregate and the join back — unpersisted, the Arrow shingler and
     # explode run twice (guide §2.4; size-conditional)

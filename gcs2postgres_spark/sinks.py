@@ -177,7 +177,12 @@ def write_jdbc_copy(
     and streams rows with COPY ... FROM STDIN (~10× plain JDBC inserts).
     Requires psycopg on executors (or an injected connect_factory) —
     psycopg is absent in this harness, so the default raises with a clear
-    message; the plumbing is fully exercised by tests via the factory."""
+    message; the plumbing is fully exercised by tests via the factory.
+
+    ``TIMESTAMP`` columns are formatted as strings in the JVM, in the
+    session zone, before the rows reach Python: PySpark builds their
+    ``datetime`` cells with ``fromtimestamp``, i.e. in the Python
+    worker's local zone, which need not be the session's."""
     if connect_factory is None:
         try:
             import psycopg  # noqa: F401
@@ -185,4 +190,24 @@ def write_jdbc_copy(
             raise NotImplementedError(
                 "write_jdbc_copy needs psycopg on executors; use write_jdbc here"
             ) from e
+    df = _session_zone_timestamps(df)
     df.foreachPartition(make_copy_partition(dsn, table, columns, connect_factory))
+
+
+def _session_zone_timestamps(df: DataFrame) -> DataFrame:
+    """``df`` with each top-level TIMESTAMP column cast to its session-zone
+    string (``cast(ts as string)``: ``2024-01-01 00:00:00``, fractional
+    seconds without trailing zeros), the form COPY reads for
+    ``timestamp``. A frame without such a column is returned as is, with
+    no extra projection."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import TimestampType
+
+    fields = df.schema.fields
+    if not any(isinstance(f.dataType, TimestampType) for f in fields):
+        return df
+    cols = []
+    for f in fields:
+        c = F.col("`" + f.name.replace("`", "``") + "`")
+        cols.append(c.cast("string").alias(f.name) if isinstance(f.dataType, TimestampType) else c)
+    return df.select(*cols)

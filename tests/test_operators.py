@@ -936,7 +936,7 @@ def test_clustered_cosine_pairs_prunes_cell_pairs(spark):
 
 def test_blocked_cosine_pairs_no_corpus_scaled_rows(spark, sf_dir):
     # the round-6 representation contract: block members stay ordinary
-    # rows into the applyInPandas GEMM — no collect_list aggregation
+    # rows into the applyInArrow GEMM — no collect_list aggregation
     # whose single row grows with corpus size (the old design's 2 GB
     # record-limit wall at 100x scale)
     from gcs2postgres_spark.catalog import load_table
@@ -946,17 +946,21 @@ def test_blocked_cosine_pairs_no_corpus_scaled_rows(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     plan = formatted_plan(blocked_cosine_pairs(e, threshold=0.45))
     assert "collect_list" not in plan, plan
-    assert "FlatMapGroupsInPandas" in plan, plan
+    assert "FlatMapGroupsInArrow" in plan, plan
 
 
-def test_winnow_arrow_kernel_matches_pandas_twin(spark):
+def test_winnow_arrow_kernel_matches_jvm_pipeline(spark):
+    import hashlib
+
     # _winnow_fps_batches (mapInArrow, flat-buffer lists) must produce
-    # exactly the fingerprints of the documented pandas twin — same
+    # exactly the fingerprints of the JVM expression pipeline it fuses
+    # (_window_minima over _kgram_hashes with portable_hash60) — same
     # hash, window minima, and first-occurrence distinct order
     from pyspark.sql import functions as F
 
     from gcs2postgres_spark.operators.dedup import (
-        _winnow_fps_pandas_udf,
+        _kgram_hashes,
+        _window_minima,
         winnow_docs,
     )
 
@@ -971,16 +975,26 @@ def test_winnow_arrow_kernel_matches_pandas_twin(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
-        r.doc_id: list(r.fps)
+        r.doc_id: r.fps
         for r in winnow_docs(df, "doc_id", "text", portable=True).collect()
     }
     want = {
-        r.doc_id: list(r.fps)
+        r.doc_id: r.fps
         for r in df.select(
-            "doc_id", _winnow_fps_pandas_udf(8, 4)(F.col("text")).alias("fps")
+            "doc_id",
+            _window_minima(_kgram_hashes(F.col("text"), 8, portable=True), 4).alias("fps"),
         ).collect()
     }
-    assert got == want
+    assert set(got) == set(want) == {1, 2, 3, 4, 5, 6, 7}
+    assert got[1] == got[2] and len(got[1]) > 1
+    # NULL and "" are where the two paths part: the kernel reads NULL as
+    # "" and fingerprints the empty string's single (empty) gram; the
+    # JVM pipeline hashes the NULL gram to one NULL fingerprint
+    empty_fp = int(hashlib.md5(b"").hexdigest()[:15], 16)
+    assert got[6] == got[7] == want[7] == [empty_fp]
+    assert want[6] == [None]
+    for doc_id in range(1, 6):
+        assert got[doc_id] == want[doc_id], doc_id
 
 
 def test_ngram_decontaminate_semantics(spark):

@@ -285,3 +285,39 @@ def test_copy_wire_client_chunks_split_mid_cell():
             conn.commit()
     parsed = list(csv.reader(io.StringIO(srv.copy_payload.decode())))
     assert parsed == [["1", 'x,"y'], ["2", ""]]
+
+
+def test_copy_sink_writes_timestamps_in_session_zone(spark):
+    """TIMESTAMP cells reach COPY in the SESSION zone, whatever the
+    Python worker's local zone is: PySpark builds worker-side datetimes
+    with fromtimestamp (local time), so the sink formats them in the
+    JVM first. A TZ entry in sc.environment starts a worker pool with
+    that zone; the session zone stays UTC."""
+    from gcs2postgres_spark.sinks import _session_zone_timestamps, write_jdbc_copy
+    from tests.pg_wire import MiniPGServer, wire_connect_factory
+
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    df = spark.sql(
+        "SELECT 1 AS id, timestamp'2024-01-01 00:00:00' AS ts,"
+        " timestamp'2024-06-30 23:59:58.25' AS ts_frac,"
+        " timestamp_ntz'2024-01-01 00:00:00' AS ntz, date'2024-01-01' AS d"
+    ).coalesce(1)
+    sc = spark.sparkContext
+    sc.environment["TZ"] = "America/New_York"
+    try:
+        with MiniPGServer(ncols=5) as srv:
+            write_jdbc_copy(
+                df,
+                f"host=127.0.0.1 port={srv.port}",
+                "public.tgt",
+                df.columns,
+                connect_factory=wire_connect_factory,
+            )
+    finally:
+        del sc.environment["TZ"]
+    assert srv.copy_payload.decode() == (
+        "1,2024-01-01 00:00:00,2024-06-30 23:59:58.25,2024-01-01 00:00:00,2024-01-01\n"
+    )
+    # a frame without a TIMESTAMP column gets no extra projection
+    no_ts = df.drop("ts", "ts_frac")
+    assert _session_zone_timestamps(no_ts) is no_ts

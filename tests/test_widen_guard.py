@@ -16,7 +16,7 @@ silently re-introduce the class:
 - for every registered query whose source reads ``documents``, build
   its physical plan against the fixture and walk each documents-scan's
   ancestor chain: if a per-doc heavy node (Generate, ArrowEvalPython,
-  BatchEvalPython, FlatMapGroupsInPandas) is reached before any
+  BatchEvalPython, FlatMapGroupsInPandas/Arrow) is reached before any
   repartitioning (Exchange / ShuffleQueryStage / AQEShuffleRead), the
   query runs per-doc work at raw scan width — red.
 
@@ -43,6 +43,7 @@ HEAVY_NODES = {
     "ArrowEvalPython",
     "BatchEvalPython",
     "FlatMapGroupsInPandas",
+    "FlatMapGroupsInArrow",
     "MapInPandas",
     "PythonMapInArrow",
     "MapInArrow",
