@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from gcs2postgres_spark.sources import file_stats, fsio, logstore
+from gcs2postgres_spark.sources import file_stats, fsio, logstore, row_level
 
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 _CHECKPOINT_RE = re.compile(r"^(\d{20})\.checkpoint\.parquet$")
@@ -3467,50 +3467,14 @@ def update_where_delta(
     rows are deleted but not yet rewritten. The change feed reports an
     update commit as delete+insert pairs (bitmap diff + fresh files) —
     the honest jar-less reading of a DV-update commit, which carries no
-    _change_data files. Iceberg twin: iceberg_py.update_where."""
-    tagged = read_delta_py(spark, table_path, partition_filter=partition_filter)
-    # validate SET targets BEFORE the no-match early return: a typo'd
-    # column must raise even when the predicate matches nothing
-    bad = sorted(set(set_exprs) - set(tagged.columns))
-    if bad:
-        raise ValueError(f"UPDATE SET targets unknown columns: {bad}")
-    matched = tagged.filter(predicate)
-    if not matched.take(1):
-        return None
-    new_rows = matched.select(
-        *[
-            F.expr(set_exprs[c]).cast(tagged.schema[c].dataType).alias(c)
-            if c in set_exprs
-            else F.col(c)
-            for c in tagged.columns
-        ]
+    _change_data files. Planned by sources/row_level.update."""
+    return row_level.update(
+        _dml_target(
+            spark, table_path, timestamp_ms, operation="UPDATE",
+            partition_filter=partition_filter,
+        ),
+        predicate, set_exprs,
     )
-    return _dv_row_level_commit(
-        spark, table_path, predicate, new_rows, timestamp_ms,
-        operation="UPDATE", partition_filter=partition_filter,
-    )
-
-
-def _raise_on_duplicate_merge_keys(source: DataFrame, on: list[str]) -> None:
-    """One bounded aggregate probe over the MERGE source: if any key
-    tuple appears more than once, raise (matching Spark/Delta MERGE's
-    "multiple source rows matched and attempted to modify the same
-    target row" error) instead of silently committing N rewritten
-    copies per matched target row."""
-    dup = (
-        source.groupBy(*on)
-        .count()
-        .filter(F.col("count") > 1)
-        .select(*on)
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        raise ValueError(
-            "MERGE source has duplicate key rows (e.g. "
-            f"{dup[0].asDict()}): multiple source rows would modify the "
-            "same target row — deduplicate the source first"
-        )
 
 
 def merge_delta(
@@ -3529,169 +3493,27 @@ def merge_delta(
     one atomic commit that DV-deletes every target row whose ``on`` key
     appears in ``source`` and appends the replacement rows the clauses
     call for. Returns the new version, or None when the merge is a
-    no-op. Clause semantics, key-uniqueness expectations, and the
-    semi/anti-join scale shape are identical to the Iceberg twin
-    (iceberg_py.merge_into); the physical encoding is Delta's bitmaps
-    instead of position-delete parquet.
+    no-op. Clause semantics, key-uniqueness rules and the semi/anti-join
+    scale shape are planned by sources/row_level.merge, shared with
+    iceberg_py.merge_into; the physical encoding is Delta's bitmaps.
 
     ``latest_wins_on`` (update-mode only) makes the matched clause
     CONDITIONAL — ``WHEN MATCHED AND source.seq > target.seq`` with
-    lexicographic struct comparison over the named columns: a matched
-    target row is replaced only by a strictly NEWER source row, and
-    stale/equal source rows are dropped entirely. Replaying the same
-    batch then matches nothing and commits nothing — the idempotence
-    an at-least-once foreachBatch sink needs (streaming/cdc_apply
-    builds on exactly this).
+    lexicographic struct comparison over the named columns, after the
+    source is reduced to its newest row per key: a matched target row
+    is replaced only by a strictly NEWER source row, and stale/equal
+    source rows are dropped entirely. Replaying the same batch then
+    matches nothing and commits nothing — the idempotence an
+    at-least-once foreachBatch sink needs (streaming/cdc_apply builds
+    on exactly this).
 
     ``when_matched="ignore"`` is the INSERT-ONLY merge (a MERGE
     statement with no WHEN MATCHED clause): matched target rows are
     left untouched and only the unmatched source rows are appended —
     no deletion vectors, a plain append commit."""
-    if when_matched not in ("update", "delete", "ignore"):
-        raise ValueError(
-            f"when_matched must be update|delete|ignore, got {when_matched!r}"
-        )
-    if when_not_matched not in ("insert", "ignore"):
-        raise ValueError(
-            f"when_not_matched must be insert|ignore, got {when_not_matched!r}"
-        )
-    if latest_wins_on and when_matched != "update":
-        raise ValueError("latest_wins_on requires when_matched='update'")
-    if when_matched == "ignore" and when_not_matched != "insert":
-        raise ValueError(
-            "when_matched='ignore' with when_not_matched='ignore' is a "
-            "whole-statement no-op; a MERGE needs at least one acting clause"
-        )
-    if set_exprs is not None and (when_matched != "update" or latest_wins_on):
-        raise ValueError(
-            "set_exprs (per-column WHEN MATCHED THEN UPDATE SET) requires "
-            "when_matched='update' and no latest_wins_on"
-        )
-    live = read_delta_py(spark, table_path)
-    missing = sorted(set(on) - set(source.columns))
-    if missing:
-        raise ValueError(f"MERGE key columns missing from source: {missing}")
-    if when_matched == "update" and not latest_wins_on:
-        # real MERGE semantics: a target row modified by MULTIPLE source
-        # rows is an error, never N silent rewritten copies (delta-spark
-        # raises "multiple source rows matched..."); latest_wins resolves
-        # duplicates by the sequence comparison, so it is exempt
-        _raise_on_duplicate_merge_keys(source, on)
-
-    if set_exprs is not None:
-        # PER-COLUMN matched clause: rewritten rows are the LIVE matched
-        # rows joined to their source row, with each SET expression
-        # evaluated over the aliased pair (t.col / s.col — the standard
-        # MERGE expression environment); un-SET columns keep the
-        # target's value. Unmatched source rows insert whole rows.
-        bad = sorted(set(set_exprs) - set(live.columns))
-        if bad:
-            raise ValueError(f"MERGE SET targets unknown columns: {bad}")
-        src_keys = source.select(*on).distinct()
-
-        def matcher(tagged: DataFrame) -> DataFrame:
-            return tagged.join(src_keys, on=on, how="left_semi")
-
-        joined = live.alias("t").join(source.alias("s"), on=on, how="inner")
-        rewritten = joined.select(
-            *[
-                F.expr(set_exprs[c]).cast(live.schema[c].dataType).alias(c)
-                if c in set_exprs
-                else F.col(f"t.{c}").alias(c)
-                for c in live.columns
-            ]
-        )
-        if when_not_matched == "insert":
-            missing_cols = sorted(set(live.columns) - set(source.columns))
-            if missing_cols:
-                raise ValueError(
-                    f"MERGE source lacks table columns needed for INSERT: "
-                    f"{missing_cols}"
-                )
-            inserts = source.join(
-                live.select(*on).distinct(), on=on, how="left_anti"
-            ).select(
-                *[F.col(c).cast(live.schema[c].dataType).alias(c)
-                  for c in live.columns]
-            )
-            replacement = rewritten.unionByName(inserts)
-        else:
-            replacement = rewritten
-        if replacement.isEmpty():
-            replacement = None
-        return _dv_row_level_commit(
-            spark, table_path, matcher, replacement, timestamp_ms,
-            operation="MERGE", txn=txn,
-        )
-
-    if when_matched == "ignore":
-        # insert-only merge: touches no existing file — route to the
-        # plain append committer instead of the DV matching scan
-        new_rows = source.join(live.select(*on).distinct(), on=on, how="left_anti")
-        missing_cols = sorted(set(live.columns) - set(new_rows.columns))
-        if missing_cols:
-            raise ValueError(f"MERGE source lacks table columns: {missing_cols}")
-        new_rows = new_rows.select(
-            *[F.col(c).cast(live.schema[c].dataType).alias(c) for c in live.columns]
-        )
-        if new_rows.isEmpty():
-            return None
-        return write_delta(
-            new_rows, table_path, mode="append", timestamp_ms=timestamp_ms,
-            txn=txn,
-        )
-
-    if latest_wins_on:
-        src_cmp = source.select(*on, F.struct(*latest_wins_on).alias("__src_seq"))
-
-        def matcher(tagged: DataFrame) -> DataFrame:
-            return (
-                tagged.join(src_cmp, on=on, how="inner")
-                .filter(F.struct(*latest_wins_on) < F.col("__src_seq"))
-                .drop("__src_seq")
-            )
-
-        tgt_cmp = live.select(*on, F.struct(*latest_wins_on).alias("__tgt_seq"))
-        beats = F.col("__tgt_seq").isNull() | (
-            F.struct(*latest_wins_on) > F.col("__tgt_seq")
-        )
-        if when_not_matched == "ignore":
-            beats = F.col("__tgt_seq").isNotNull() & (
-                F.struct(*latest_wins_on) > F.col("__tgt_seq")
-            )
-        replacement = (
-            source.join(tgt_cmp, on=on, how="left").filter(beats).drop("__tgt_seq")
-        )
-    else:
-        src_keys = source.select(*on).distinct()
-
-        def matcher(tagged: DataFrame) -> DataFrame:
-            return tagged.join(src_keys, on=on, how="left_semi")
-
-        if when_matched == "update":
-            replacement = (
-                source
-                if when_not_matched == "insert"
-                else source.join(live.select(*on).distinct(), on=on, how="left_semi")
-            )
-        else:
-            replacement = (
-                source.join(live.select(*on).distinct(), on=on, how="left_anti")
-                if when_not_matched == "insert"
-                else None
-            )
-    if replacement is not None:
-        missing_cols = sorted(set(live.columns) - set(replacement.columns))
-        if missing_cols:
-            raise ValueError(f"MERGE source lacks table columns: {missing_cols}")
-        replacement = replacement.select(
-            *[F.col(c).cast(live.schema[c].dataType).alias(c) for c in live.columns]
-        )
-        if replacement.isEmpty():
-            replacement = None
-    return _dv_row_level_commit(
-        spark, table_path, matcher, replacement, timestamp_ms, operation="MERGE",
-        txn=txn,
+    return row_level.merge(
+        _dml_target(spark, table_path, timestamp_ms, txn=txn),
+        source, on, when_matched, when_not_matched, latest_wins_on, set_exprs,
     )
 
 
@@ -3711,37 +3533,38 @@ def merge_delta_clauses(
     NOT MATCHED [AND cond] THEN INSERT *, WHEN NOT MATCHED BY SOURCE
     [AND cond] THEN UPDATE/DELETE), committed as one atomic deletion-
     vector + append version. Clause semantics, ordering rules, and the
-    single-join scale shape live in sources/merge_multi.py; the
+    single-join scale shape live in sources/row_level.py; the
     single-clause ``merge_delta`` remains the CDC fast path (latest-
     wins, insert-only append route). Returns the new version or None
-    for a whole-statement no-op. Iceberg twin: merge_into_clauses."""
-    from gcs2postgres_spark.sources.merge_multi import build_merge_plan
-
-    matched = list(matched or [])
-    not_matched = list(not_matched or [])
-    not_matched_by_source = list(not_matched_by_source or [])
-    live = read_delta_py(spark, table_path)
-    missing = sorted(set(on) - set(source.columns))
-    if missing:
-        raise ValueError(f"MERGE key columns missing from source: {missing}")
-    if matched:
-        _raise_on_duplicate_merge_keys(source, on)
-    matcher, replacement = build_merge_plan(
-        live, source, on, matched, not_matched, not_matched_by_source
+    for a whole-statement no-op."""
+    return row_level.merge_clauses(
+        _dml_target(spark, table_path, timestamp_ms, txn=txn),
+        source, on, matched, not_matched, not_matched_by_source,
     )
-    if replacement is not None and replacement.isEmpty():
-        replacement = None
-    if matcher is None:
-        # insert-only statement: touches no existing file — plain append
-        if replacement is None:
-            return None
-        return write_delta(
-            replacement, table_path, mode="append", timestamp_ms=timestamp_ms,
+
+
+def _dml_target(
+    spark: SparkSession,
+    table_path: str,
+    timestamp_ms: int | None,
+    operation: str = "MERGE",
+    txn: dict | None = None,
+    partition_filter: dict[str, set] | None = None,
+) -> row_level.Target:
+    """The DV-applying reader, the DV committer and write_delta's append,
+    bound for one row-level statement (see sources/row_level.py)."""
+    return row_level.Target(
+        read_live=lambda: read_delta_py(
+            spark, table_path, partition_filter=partition_filter
+        ),
+        commit=lambda matcher, new_rows: _dv_row_level_commit(
+            spark, table_path, matcher, new_rows, timestamp_ms,
+            operation=operation, partition_filter=partition_filter, txn=txn,
+        ),
+        append=lambda rows: write_delta(
+            rows, table_path, mode="append", timestamp_ms=timestamp_ms,
             txn=txn,
-        )
-    return _dv_row_level_commit(
-        spark, table_path, matcher, replacement, timestamp_ms,
-        operation="MERGE", txn=txn,
+        ),
     )
 
 

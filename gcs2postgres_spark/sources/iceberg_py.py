@@ -66,7 +66,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gcs2postgres_spark.sources import file_stats, fsio, logstore
+from gcs2postgres_spark.sources import file_stats, fsio, logstore, row_level
 from gcs2postgres_spark.sources.avro_py import (
     read_avro_file,
     read_avro_file_meta,
@@ -3714,10 +3714,9 @@ def overwrite_where(
     sequence number; the position deletes reference only pre-existing
     file paths, so the replacement rows are never self-deleted (and the
     spec's ``delete_seq >= data_seq`` rule would be vacuous for them
-    anyway). This is the UPDATE/MERGE building block: callers compute
-    ``replacement`` however they like (typically the matched rows with
-    columns rewritten) and the commit is atomic — one snapshot, one
-    metadata version."""
+    anyway). Callers compute ``replacement`` however they like
+    (typically the matched rows with columns rewritten) and the commit
+    is atomic — one snapshot, one metadata version."""
     sid = _v2_row_level_commit(
         spark, table_path, predicate, replacement, snapshot_ts_ms,
         partition_filter=partition_filter,
@@ -3748,40 +3747,23 @@ def update_where(
     Scale shape: the replacement rows are the LIVE matched rows (read
     through read_iceberg_py, so existing deletes and renamed-column
     resolution apply) with the SET expressions applied — computed and
-    written entirely on executors. The commit itself reuses
-    overwrite_where, so delete files and new data files land in ONE
-    snapshot (no window where a reader sees rows deleted but not yet
-    rewritten). The extra existence probe is a take(1) over the
+    written entirely on executors. Delete files and new data files land
+    in ONE snapshot (no window where a reader sees rows deleted but not
+    yet rewritten). The extra existence probe is a take(1) over the
     predicate-pushed scan — Spark early-terminates it, so a no-match
-    UPDATE costs one pruned scan, not a commit.
+    UPDATE costs one pruned scan, not a commit. Planned by
+    sources/row_level.update.
 
     Parity: the reference delegates UPDATE to its warehouse (query
     passthrough, reference src/db/db.go:59); this is the lakehouse-side
     equivalent jar-ful runtimes expose as SQL UPDATE."""
-    live = read_iceberg_py(
-        spark, table_path, partition_filter=partition_filter,
-        _preloaded_meta=_preloaded_meta,
-    )
-    # validate SET targets BEFORE the no-match early return: a typo'd
-    # column must raise even when the predicate matches nothing
-    bad = sorted(set(set_exprs) - set(live.columns))
-    if bad:
-        raise ValueError(f"UPDATE SET targets unknown columns: {bad}")
-    matched = live.filter(predicate)
-    if not matched.take(1):
-        return None
-    replacement = matched.select(
-        *[
-            F.expr(set_exprs[c]).cast(live.schema[c].dataType).alias(c)
-            if c in set_exprs
-            else F.col(c)
-            for c in live.columns
-        ]
-    )
-    return overwrite_where(
-        spark, table_path, predicate, replacement, snapshot_ts_ms,
-        partition_filter=partition_filter,
-        _ctx=_ctx, _catalog_ctx=_catalog_ctx,
+    return row_level.update(
+        _dml_target(
+            spark, table_path, snapshot_ts_ms, partition_filter=partition_filter,
+            _ctx=_ctx, _catalog_ctx=_catalog_ctx,
+            _preloaded_meta=_preloaded_meta,
+        ),
+        predicate, set_exprs,
     )
 
 
@@ -3810,193 +3792,65 @@ def merge_into(
       their source rows (full-row upsert — the source must carry the
       table's columns and be unique on ``on``; a duplicate source key
       raises, matching Spark/Delta MERGE's multiple-source-rows error).
+      ``set_exprs`` makes it a per-column update over the ``t``/``s``
+      pair instead.
     - ``when_matched="delete"``: matched target rows are removed.
+    - ``when_matched="ignore"``: the INSERT-ONLY merge — no delete
+      files, a plain fast-append snapshot.
     - ``when_not_matched="insert"``: source rows with no target match
       are appended; ``"ignore"`` drops them.
+    - ``latest_wins_on`` (update-mode only): the source is reduced to
+      its newest row per key, and a matched target row is replaced
+      only by a strictly NEWER source row (lexicographic struct over
+      the named columns) — replaying the same batch commits nothing.
 
-    Scale shape: the match set is a LEFT SEMI join from the tagged live
-    scan onto ``source``'s distinct keys — a shuffle-or-broadcast join
-    Catalyst/AQE sizes (never a collected IN-list), and the only thing
-    it carries back is the (file, pos) identity the delete files
-    encode. Replacement rows are selected from ``source`` with
-    anti/semi joins against the live key set — all executor-side. The
-    commit is the same single-snapshot position-delete + append
-    overwrite_where uses.
+    Planned by sources/row_level.merge, shared with
+    delta_py.merge_delta: the match set is a LEFT SEMI join from the
+    tagged live scan onto ``source``'s distinct keys — a
+    shuffle-or-broadcast join Catalyst/AQE sizes (never a collected
+    IN-list), carrying back only the (file, pos) identity the delete
+    files encode — and the replacement rows come from ``source`` by
+    anti/semi joins against the live key set, all executor-side.
 
     Parity: the reference applies CDC through its warehouse MERGE
     (query passthrough, src/db/db.go:59); streaming/cdc_apply.py is the
-    foreachBatch twin of this batch committer.
+    foreachBatch twin of this batch committer."""
+    return row_level.merge(
+        _dml_target(
+            spark, table_path, snapshot_ts_ms, txn=txn, _ctx=_ctx,
+            _catalog_ctx=_catalog_ctx, _preloaded_meta=_preloaded_meta,
+        ),
+        source, on, when_matched, when_not_matched, latest_wins_on, set_exprs,
+    )
 
-    ``latest_wins_on`` (update-mode only) makes the matched clause
-    CONDITIONAL — ``WHEN MATCHED AND source.seq > target.seq`` with
-    lexicographic struct comparison over the named columns: a matched
-    target row is replaced only by a strictly NEWER source row, stale
-    or equal source rows are dropped, and replaying the same batch
-    commits nothing (idempotent at-least-once CDC apply; Delta twin:
-    delta_py.merge_delta).
 
-    ``when_matched="ignore"`` is the INSERT-ONLY merge (a MERGE
-    statement with no WHEN MATCHED clause): matched target rows are
-    left untouched and only the unmatched source rows are appended —
-    no delete files, a plain fast-append snapshot."""
-    if when_matched not in ("update", "delete", "ignore"):
-        raise ValueError(
-            f"when_matched must be update|delete|ignore, got {when_matched!r}"
-        )
-    if when_not_matched not in ("insert", "ignore"):
-        raise ValueError(
-            f"when_not_matched must be insert|ignore, got {when_not_matched!r}"
-        )
-    if latest_wins_on and when_matched != "update":
-        raise ValueError("latest_wins_on requires when_matched='update'")
-    if when_matched == "ignore" and when_not_matched != "insert":
-        raise ValueError(
-            "when_matched='ignore' with when_not_matched='ignore' is a "
-            "whole-statement no-op; a MERGE needs at least one acting clause"
-        )
-    if set_exprs is not None and (when_matched != "update" or latest_wins_on):
-        raise ValueError(
-            "set_exprs (per-column WHEN MATCHED THEN UPDATE SET) requires "
-            "when_matched='update' and no latest_wins_on"
-        )
-    live = read_iceberg_py(spark, table_path, _preloaded_meta=_preloaded_meta)
-    missing = sorted(set(on) - set(source.columns))
-    if missing:
-        raise ValueError(f"MERGE key columns missing from source: {missing}")
-    if when_matched == "update" and not latest_wins_on:
-        # real MERGE semantics: a target row modified by MULTIPLE source
-        # rows must raise, never commit N silent rewritten copies;
-        # latest_wins resolves duplicates by the sequence comparison
-        from gcs2postgres_spark.sources.delta_py import (
-            _raise_on_duplicate_merge_keys,
-        )
-
-        _raise_on_duplicate_merge_keys(source, on)
-
-    if set_exprs is not None:
-        # PER-COLUMN matched clause: rewritten rows = live matched rows
-        # joined to their source row, SET expressions evaluated over the
-        # aliased pair (t.col / s.col); un-SET columns keep the target's
-        # value. Unmatched source rows insert whole rows. Delta twin:
-        # delta_py.merge_delta(set_exprs=...).
-        bad = sorted(set(set_exprs) - set(live.columns))
-        if bad:
-            raise ValueError(f"MERGE SET targets unknown columns: {bad}")
-        src_keys = source.select(*on).distinct()
-
-        def matcher(tagged: DataFrame) -> DataFrame:
-            return tagged.join(src_keys, on=on, how="left_semi")
-
-        joined = live.alias("t").join(source.alias("s"), on=on, how="inner")
-        rewritten = joined.select(
-            *[
-                F.expr(set_exprs[c]).cast(live.schema[c].dataType).alias(c)
-                if c in set_exprs
-                else F.col(f"t.{c}").alias(c)
-                for c in live.columns
-            ]
-        )
-        if when_not_matched == "insert":
-            missing_cols = sorted(set(live.columns) - set(source.columns))
-            if missing_cols:
-                raise ValueError(
-                    f"MERGE source lacks table columns needed for INSERT: "
-                    f"{missing_cols}"
-                )
-            inserts = source.join(
-                live.select(*on).distinct(), on=on, how="left_anti"
-            ).select(
-                *[F.col(c).cast(live.schema[c].dataType).alias(c)
-                  for c in live.columns]
-            )
-            replacement = rewritten.unionByName(inserts)
-        else:
-            replacement = rewritten
-        if replacement.isEmpty():
-            replacement = None
-        return _v2_row_level_commit(
-            spark, table_path, matcher, replacement, snapshot_ts_ms, txn=txn,
+def _dml_target(
+    spark: SparkSession,
+    table_path: str,
+    snapshot_ts_ms: int | None,
+    txn: tuple[str, int] | None = None,
+    partition_filter: dict[str, set] | None = None,
+    _ctx: dict | None = None,
+    _catalog_ctx: tuple | None = None,
+    _preloaded_meta: dict | None = None,
+) -> row_level.Target:
+    """The delete-applying reader, the position-delete committer and the
+    fast-append committer, bound for one row-level statement (see
+    sources/row_level.py)."""
+    return row_level.Target(
+        read_live=lambda: read_iceberg_py(
+            spark, table_path, partition_filter=partition_filter,
+            _preloaded_meta=_preloaded_meta,
+        ),
+        commit=lambda matcher, replacement: _v2_row_level_commit(
+            spark, table_path, matcher, replacement, snapshot_ts_ms,
+            partition_filter=partition_filter, txn=txn,
             _ctx=_ctx, _catalog_ctx=_catalog_ctx,
-        )
-
-    if when_matched == "ignore":
-        # insert-only merge: touches no existing file or delete — route
-        # to the fast-append committer instead of the matching scan
-        new_rows = source.join(live.select(*on).distinct(), on=on, how="left_anti")
-        missing_cols = sorted(set(live.columns) - set(new_rows.columns))
-        if missing_cols:
-            raise ValueError(f"MERGE source lacks table columns: {missing_cols}")
-        new_rows = new_rows.select(
-            *[F.col(c).cast(live.schema[c].dataType).alias(c) for c in live.columns]
-        )
-        if new_rows.isEmpty():
-            return None
-        return append_iceberg_v2(
-            spark, table_path, new_rows, snapshot_ts_ms=snapshot_ts_ms, txn=txn,
+        ),
+        append=lambda rows: append_iceberg_v2(
+            spark, table_path, rows, snapshot_ts_ms=snapshot_ts_ms, txn=txn,
             _ctx=_ctx, _catalog_ctx=_catalog_ctx,
-        )
-
-    if latest_wins_on:
-        src_cmp = source.select(*on, F.struct(*latest_wins_on).alias("__src_seq"))
-
-        def matcher(tagged: DataFrame) -> DataFrame:
-            return (
-                tagged.join(src_cmp, on=on, how="inner")
-                .filter(F.struct(*latest_wins_on) < F.col("__src_seq"))
-                .drop("__src_seq")
-            )
-
-        tgt_cmp = live.select(*on, F.struct(*latest_wins_on).alias("__tgt_seq"))
-        beats = F.col("__tgt_seq").isNull() | (
-            F.struct(*latest_wins_on) > F.col("__tgt_seq")
-        )
-        if when_not_matched == "ignore":
-            beats = F.col("__tgt_seq").isNotNull() & (
-                F.struct(*latest_wins_on) > F.col("__tgt_seq")
-            )
-        replacement = (
-            source.join(tgt_cmp, on=on, how="left").filter(beats).drop("__tgt_seq")
-        )
-    else:
-        src_keys = source.select(*on).distinct()
-
-        def matcher(tagged: DataFrame) -> DataFrame:  # noqa: F811
-            return tagged.join(src_keys, on=on, how="left_semi")
-
-        if when_matched == "update":
-            if when_not_matched == "insert":
-                replacement = source
-            else:  # update only: keep just the source rows that hit a target key
-                replacement = source.join(
-                    live.select(*on).distinct(), on=on, how="left_semi"
-                )
-        else:  # when_matched == "delete"
-            if when_not_matched == "insert":
-                replacement = source.join(
-                    live.select(*on).distinct(), on=on, how="left_anti"
-                )
-            else:
-                replacement = None
-    if replacement is not None:
-        missing_cols = sorted(set(live.columns) - set(replacement.columns))
-        if missing_cols:
-            raise ValueError(f"MERGE source lacks table columns: {missing_cols}")
-        replacement = replacement.select(
-            *[F.col(c).cast(live.schema[c].dataType).alias(c) for c in live.columns]
-        )
-        if replacement.isEmpty():
-            replacement = None
-    if replacement is None:
-        # pure delete of matched keys (or an all-matched upsert with
-        # nothing to insert): fall through to the delete-only commit,
-        # which returns None when nothing matched at all.
-        return _v2_row_level_commit(
-            spark, table_path, matcher, None, snapshot_ts_ms, txn=txn,
-            _ctx=_ctx, _catalog_ctx=_catalog_ctx,
-        )
-    return _v2_row_level_commit(
-        spark, table_path, matcher, replacement, snapshot_ts_ms, txn=txn,
-        _ctx=_ctx, _catalog_ctx=_catalog_ctx,
+        ),
     )
 
 
@@ -5072,37 +4926,14 @@ def merge_into_clauses(
     MATCHED [AND cond] THEN INSERT *, WHEN NOT MATCHED BY SOURCE
     [AND cond] THEN UPDATE/DELETE) — one atomic position-delete +
     append snapshot. Clause semantics and the single-join scale shape
-    live in sources/merge_multi.py; single-clause ``merge_into``
-    remains the CDC fast path. Delta twin: merge_delta_clauses."""
-    from gcs2postgres_spark.sources.delta_py import (
-        _raise_on_duplicate_merge_keys,
-    )
-    from gcs2postgres_spark.sources.merge_multi import build_merge_plan
-
-    matched = list(matched or [])
-    not_matched = list(not_matched or [])
-    not_matched_by_source = list(not_matched_by_source or [])
-    live = read_iceberg_py(spark, table_path, _preloaded_meta=_preloaded_meta)
-    missing = sorted(set(on) - set(source.columns))
-    if missing:
-        raise ValueError(f"MERGE key columns missing from source: {missing}")
-    if matched:
-        _raise_on_duplicate_merge_keys(source, on)
-    matcher, replacement = build_merge_plan(
-        live, source, on, matched, not_matched, not_matched_by_source
-    )
-    if replacement is not None and replacement.isEmpty():
-        replacement = None
-    if matcher is None:
-        if replacement is None:
-            return None
-        return append_iceberg_v2(
-            spark, table_path, replacement, snapshot_ts_ms=snapshot_ts_ms,
-            txn=txn, _ctx=_ctx, _catalog_ctx=_catalog_ctx,
-        )
-    return _v2_row_level_commit(
-        spark, table_path, matcher, replacement, snapshot_ts_ms, txn=txn,
-        _ctx=_ctx, _catalog_ctx=_catalog_ctx,
+    live in sources/row_level.py; single-clause ``merge_into``
+    remains the CDC fast path."""
+    return row_level.merge_clauses(
+        _dml_target(
+            spark, table_path, snapshot_ts_ms, txn=txn, _ctx=_ctx,
+            _catalog_ctx=_catalog_ctx, _preloaded_meta=_preloaded_meta,
+        ),
+        source, on, matched, not_matched, not_matched_by_source,
     )
 
 

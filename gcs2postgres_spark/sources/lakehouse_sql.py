@@ -33,7 +33,7 @@ MERGE supports the full Spark SQL clause matrix — multiple WHEN
 MATCHED ``AND <cond>`` clauses (first match wins; an unconditioned
 clause must be last), per-column or full-row UPDATE, DELETE,
 conditional INSERT, and WHEN NOT MATCHED BY SOURCE — via
-sources/merge_multi.py. Anything outside the grammar raises ValueError
+sources/row_level.py. Anything outside the grammar raises ValueError
 naming what was expected, never a silent misparse. WHERE predicates and SET expressions pass through verbatim to
 Spark SQL — the parser only brackets them, so the full expression
 language works. Statements parse with anchored regexes over ONE

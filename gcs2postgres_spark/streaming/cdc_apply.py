@@ -24,8 +24,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from gcs2postgres_spark.sources.row_level import latest_wins
 
 
 def _app_id(checkpoint_dir: str, app_id: str | None) -> str:
@@ -34,19 +35,6 @@ def _app_id(checkpoint_dir: str, app_id: str | None) -> str:
     from the same checkpoint are the same logical writer; a new
     checkpoint dir is a new stream with its own batch-id sequence)."""
     return app_id or f"spark-graft-cdc:{os.path.abspath(checkpoint_dir)}"
-
-
-def latest_wins(
-    df: DataFrame, key_cols: list[str], seq_cols: list[str]
-) -> DataFrame:
-    """One row per key: the row with the greatest (seq_cols) tuple —
-    deterministic when the tuple is unique per key (pass tie-breakers)."""
-    w = Window.partitionBy(*key_cols).orderBy(*[F.desc(c) for c in seq_cols])
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 def stream_upsert_delta(

@@ -8,7 +8,6 @@
 4. bucket[n] partition routing is session-timezone-proof for
    timestamp columns (executor expr == driver apply_transform under a
    non-UTC session timezone).
-5. MERGE with duplicate source keys raises (never N silent copies).
 """
 
 from __future__ import annotations
@@ -155,31 +154,6 @@ def test_bucket_timestamp_is_session_timezone_proof(spark, tmp_path):
         spark.conf.set("spark.sql.session.timeZone", tz_before)
 
 
-def test_merge_duplicate_source_keys_raise(spark, tmp_path):
-    d = str(tmp_path / "dl")
-    it = str(tmp_path / "ice")
-    tgt = spark.createDataFrame([(1, "a"), (2, "b")], "k long, name string")
-    delta_py.write_delta(tgt, d)
-    iceberg_py.create_iceberg_v2_table(tgt.schema, it)
-    iceberg_py.append_iceberg_v2(spark, it, tgt)
-    dup_src = spark.createDataFrame(
-        [(1, "x"), (1, "y"), (3, "c")], "k long, name string"
-    )
-    with pytest.raises(ValueError, match="duplicate key"):
-        delta_py.merge_delta(spark, d, dup_src, ["k"])
-    with pytest.raises(ValueError, match="duplicate key"):
-        iceberg_py.merge_into(spark, it, dup_src, ["k"])
-    with pytest.raises(ValueError, match="duplicate key"):
-        delta_py.merge_delta(
-            spark, d, dup_src, ["k"], set_exprs={"name": "s.name"}
-        )
-    # insert-only merge tolerates duplicates (no target row modified)
-    v = delta_py.merge_delta(
-        spark, d, dup_src.filter(F.col("k") == 3), ["k"], when_matched="ignore"
-    )
-    assert v is not None
-
-
 def test_partitioned_scan_bounded_plan_high_cardinality(spark, tmp_path):
     """A table with 1,000 distinct partition tuples must plan as ONE
     file-index scan + broadcast map join, never 1,000 union arms
@@ -243,112 +217,6 @@ def test_file_index_scan_with_deletion_vectors(spark, tmp_path):
     assert out.filter(F.col("k") % 10 == 3).count() == 0
     # partition values still correct after the DV anti-join
     assert out.filter(F.col("pt") != F.col("k") % 40).count() == 0
-
-
-def _merge_fixture(spark, tmp_path, fmt):
-    tgt = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", 30), (4, "d", 40)],
-        "k long, name string, v long",
-    )
-    p = str(tmp_path / fmt)
-    if fmt == "delta":
-        delta_py.write_delta(tgt, p)
-    else:
-        iceberg_py.create_iceberg_v2_table(tgt.schema, p)
-        iceberg_py.append_iceberg_v2(spark, p, tgt)
-    return p
-
-
-def test_merge_multi_clause_matrix(spark, tmp_path):
-    """The full clause matrix on both formats through the SQL facade:
-    conditional DELETE, conditional per-column UPDATE, fallthrough
-    UPDATE SET *, conditional INSERT, and NOT MATCHED BY SOURCE DELETE —
-    first-match-wins within each group."""
-    from gcs2postgres_spark.sources.lakehouse_sql import lakehouse_sql
-
-    src = spark.createDataFrame(
-        [
-            (1, "A", 11, "del"),   # matched, op=del   -> DELETE
-            (2, "B", 22, "upd"),   # matched, op=upd   -> UPDATE SET name only
-            (3, "C", 33, "other"), # matched, no cond  -> UPDATE SET * (v from s)
-            (5, "E", 55, "del"),   # not matched, del  -> filtered out of INSERT
-            (6, "F", 66, "new"),   # not matched       -> INSERT
-        ],
-        "k long, name string, v long, op string",
-    )
-    # k=4 is matched by no source row -> NOT MATCHED BY SOURCE DELETE
-    for fmt in ("delta", "iceberg"):
-        p = _merge_fixture(spark, tmp_path, fmt)
-        src.select("k", "name", "v", "op").createOrReplaceTempView("mm_src")
-        # note: INSERT * takes the table's columns from the source; the
-        # source's extra op column is dropped by the cast projection
-        lakehouse_sql(
-            spark,
-            f"MERGE INTO {fmt}.`{p}` t USING mm_src s ON t.k = s.k "
-            "WHEN MATCHED AND s.op = 'del' THEN DELETE "
-            "WHEN MATCHED AND s.op = 'upd' THEN UPDATE SET name = s.name "
-            "WHEN MATCHED THEN UPDATE SET * "
-            "WHEN NOT MATCHED AND s.op <> 'del' THEN INSERT * "
-            "WHEN NOT MATCHED BY SOURCE THEN DELETE",
-        )
-        if fmt == "delta":
-            out = delta_py.read_delta_py(spark, p)
-        else:
-            out = iceberg_py.read_iceberg_py(spark, p)
-        rows = {r["k"]: (r["name"], r["v"]) for r in out.collect()}
-        assert rows == {
-            2: ("B", 20),   # per-column SET: v kept
-            3: ("C", 33),   # SET *: v replaced
-            6: ("F", 66),   # inserted
-        }, (fmt, rows)
-
-
-def test_merge_not_matched_by_source_update(spark, tmp_path):
-    """NOT MATCHED BY SOURCE with a conditional UPDATE over t-only
-    expressions (the stale-row sweep shape)."""
-    from gcs2postgres_spark.sources.lakehouse_sql import lakehouse_sql
-
-    p = _merge_fixture(spark, tmp_path, "delta")
-    spark.createDataFrame([(1, "A", 11)], "k long, name string, v long") \
-        .createOrReplaceTempView("mm_src2")
-    lakehouse_sql(
-        spark,
-        f"MERGE INTO delta.`{p}` t USING mm_src2 s ON t.k = s.k "
-        "WHEN MATCHED THEN UPDATE SET * "
-        "WHEN NOT MATCHED BY SOURCE AND t.v >= 30 THEN UPDATE SET name = concat(t.name, '_stale')",
-    )
-    rows = {r["k"]: r["name"] for r in delta_py.read_delta_py(spark, p).collect()}
-    assert rows == {1: "A", 2: "b", 3: "c_stale", 4: "d_stale"}
-
-
-def test_merge_clause_validation(spark, tmp_path):
-    from gcs2postgres_spark.sources.lakehouse_sql import lakehouse_sql
-
-    p = _merge_fixture(spark, tmp_path, "delta")
-    spark.createDataFrame([(9, "z", 0)], "k long, name string, v long") \
-        .createOrReplaceTempView("mm_src3")
-    # unconditioned clause shadowing a later one: dead clause, raise
-    with pytest.raises(ValueError, match="must be LAST"):
-        lakehouse_sql(
-            spark,
-            f"MERGE INTO delta.`{p}` t USING mm_src3 s ON t.k = s.k "
-            "WHEN MATCHED THEN UPDATE SET * "
-            "WHEN MATCHED AND s.v > 0 THEN DELETE",
-        )
-    # BY SOURCE cannot SET * (no source row)
-    with pytest.raises(ValueError, match="no source row"):
-        lakehouse_sql(
-            spark,
-            f"MERGE INTO delta.`{p}` t USING mm_src3 s ON t.k = s.k "
-            "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET *",
-        )
-    # SET targeting an unknown column
-    with pytest.raises(ValueError, match="unknown columns"):
-        lakehouse_sql(
-            spark,
-            f"MERGE INTO delta.`{p}` t USING mm_src3 s ON t.k = s.k "
-            "WHEN MATCHED THEN UPDATE SET nope = 1",
-        )
 
 
 def test_iceberg_mixed_parquet_orc_manifest(spark, tmp_path):
@@ -700,37 +568,3 @@ def test_v2_checkpoint_table_falls_back_to_json_replay(spark, tmp_path):
     os.remove(os.path.join(log, f"{0:020d}.json"))
     with pytest.raises(FileNotFoundError, match="no checkpoint files"):
         read_delta_py(spark, p)
-
-
-def test_merge_multi_plan_no_cartesian(spark, tmp_path):
-    """100 TB contract for the clause planner: the matcher and every
-    replacement branch plan as equi-joins (hash/broadcast), never a
-    cartesian or broadcast-nested-loop — conditions are FILTERS over
-    the key join, not join conditions."""
-    from gcs2postgres_spark.plans.inspect import formatted_plan
-    from gcs2postgres_spark.sources.merge_multi import build_merge_plan
-
-    live = spark.createDataFrame(
-        [(i, f"n{i}", i * 10) for i in range(100)], "k long, name string, v long"
-    )
-    source = spark.createDataFrame(
-        [(i, f"s{i}", i, "upd" if i % 2 else "del") for i in range(0, 200, 3)],
-        "k long, name string, v long, op string",
-    )
-    matcher, replacement = build_merge_plan(
-        live, source, ["k"],
-        matched=[
-            {"cond": "s.op = 'del'", "action": "delete", "set": None},
-            {"cond": None, "action": "update",
-             "set": {"name": "concat(t.name, s.name)"}},
-        ],
-        not_matched=[{"cond": "s.op <> 'del'", "action": "insert", "set": None}],
-        not_matched_by_source=[
-            {"cond": "t.v > 500", "action": "update",
-             "set": {"name": "concat(t.name, '_stale')"}},
-        ],
-    )
-    for label, df in (("matcher", matcher(live)), ("replacement", replacement)):
-        plan = formatted_plan(df)
-        assert "CartesianProduct" not in plan, (label, plan[:1500])
-        assert "BroadcastNestedLoopJoin" not in plan, (label, plan[:1500])

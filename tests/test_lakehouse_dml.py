@@ -13,6 +13,9 @@ import json
 import os
 
 import pytest
+from pyspark.sql import functions as F
+
+from gcs2postgres_spark.sources import delta_py, iceberg_py
 
 # ---------------------------------------------------------------- iceberg
 
@@ -492,10 +495,8 @@ def test_conditional_merge_latest_wins_both_formats(spark, tmp_path):
     got = {r["k"]: (r["seq"], r["name"]) for r in read_iceberg_py(spark, it).collect()}
     assert got == expect
     assert merge_into(spark, it, batch, ["k"], latest_wins_on=["seq"]) is None
-    # guard: conditional clause only makes sense for update mode
-    with pytest.raises(ValueError, match="latest_wins_on"):
-        merge_into(spark, it, batch, ["k"], when_matched="delete",
-                   latest_wins_on=["seq"])
+    # latest_wins_on outside update mode raises on both formats:
+    # test_invalid_merge_modes_raise_before_read
 
 
 def test_delta_restore_to_version(spark, tmp_path):
@@ -1160,14 +1161,8 @@ def test_merge_insert_only_both_formats(spark, tmp_path):
     i = {r["k"]: r["name"] for r in read_iceberg_py(spark, it).collect()}
     assert i[3] == "N_3" and i[900] == "SRC_NEW"
     assert merge_into(spark, it, src, ["k"], when_matched="ignore") is None
-
-    # ignore+ignore is a whole-statement no-op: loud, not silent
-    with pytest.raises(ValueError, match="no-op"):
-        merge_delta(spark, dt, src, ["k"],
-                    when_matched="ignore", when_not_matched="ignore")
-    with pytest.raises(ValueError, match="no-op"):
-        merge_into(spark, it, src, ["k"],
-                   when_matched="ignore", when_not_matched="ignore")
+    # ignore+ignore (a whole-statement no-op) raises on both formats:
+    # test_invalid_merge_modes_raise_before_read
 
 
 def test_lakehouse_sql_quoted_whitespace_and_dup_clauses(spark, tmp_path):
@@ -1778,12 +1773,10 @@ def test_merge_per_column_set_both_formats(spark, tmp_path):
     assert i[3] == ("SRC_3", 3)  # name SET from source; region KEPT from target
     assert i[900] == ("SRC_NEW", 7)
 
-    # guards: unknown SET column; set_exprs + delete/latest_wins refuse
+    # guard: unknown SET column (set_exprs outside plain update mode
+    # raises on both formats: test_invalid_merge_modes_raise_before_read)
     with pytest.raises(ValueError, match="unknown columns"):
         merge_delta(spark, dt, src, ["k"], set_exprs={"nope": "1"})
-    with pytest.raises(ValueError, match="requires when_matched='update'"):
-        merge_into(spark, it, src, ["k"], when_matched="delete",
-                   set_exprs={"name": "'x'"})
 
 
 def test_lakehouse_sql_r13_surface(spark, tmp_path):
@@ -1962,3 +1955,406 @@ def test_liquid_clustering_contract(spark, tmp_path):
         set_delta_clustering(spark, t, ["ghost"])
     with pytest.raises(ValueError, match="liquid"):
         lakehouse_sql(spark, f"ALTER TABLE iceberg.`{t}` CLUSTER BY (a)")
+
+
+# ------------------------- shared row-level planner (sources/row_level.py)
+
+
+def _merge_fixture(spark, tmp_path, fmt):
+    tgt = spark.createDataFrame(
+        [(1, "a", 10), (2, "b", 20), (3, "c", 30), (4, "d", 40)],
+        "k long, name string, v long",
+    )
+    p = str(tmp_path / fmt)
+    if fmt == "delta":
+        delta_py.write_delta(tgt, p)
+    else:
+        iceberg_py.create_iceberg_v2_table(tgt.schema, p)
+        iceberg_py.append_iceberg_v2(spark, p, tgt)
+    return p
+
+
+def test_merge_duplicate_source_keys_raise(spark, tmp_path):
+    d = str(tmp_path / "dl")
+    it = str(tmp_path / "ice")
+    tgt = spark.createDataFrame([(1, "a"), (2, "b")], "k long, name string")
+    delta_py.write_delta(tgt, d)
+    iceberg_py.create_iceberg_v2_table(tgt.schema, it)
+    iceberg_py.append_iceberg_v2(spark, it, tgt)
+    dup_src = spark.createDataFrame(
+        [(1, "x"), (1, "y"), (3, "c")], "k long, name string"
+    )
+    with pytest.raises(ValueError, match="duplicate key"):
+        delta_py.merge_delta(spark, d, dup_src, ["k"])
+    with pytest.raises(ValueError, match="duplicate key"):
+        iceberg_py.merge_into(spark, it, dup_src, ["k"])
+    with pytest.raises(ValueError, match="duplicate key"):
+        delta_py.merge_delta(
+            spark, d, dup_src, ["k"], set_exprs={"name": "s.name"}
+        )
+    # insert-only merge tolerates duplicates (no target row modified)
+    v = delta_py.merge_delta(
+        spark, d, dup_src.filter(F.col("k") == 3), ["k"], when_matched="ignore"
+    )
+    assert v is not None
+
+
+def test_merge_multi_clause_matrix(spark, tmp_path):
+    """The full clause matrix on both formats through the SQL facade:
+    conditional DELETE, conditional per-column UPDATE, fallthrough
+    UPDATE SET *, conditional INSERT, and NOT MATCHED BY SOURCE DELETE —
+    first-match-wins within each group."""
+    from gcs2postgres_spark.sources.lakehouse_sql import lakehouse_sql
+
+    src = spark.createDataFrame(
+        [
+            (1, "A", 11, "del"),   # matched, op=del   -> DELETE
+            (2, "B", 22, "upd"),   # matched, op=upd   -> UPDATE SET name only
+            (3, "C", 33, "other"), # matched, no cond  -> UPDATE SET * (v from s)
+            (5, "E", 55, "del"),   # not matched, del  -> filtered out of INSERT
+            (6, "F", 66, "new"),   # not matched       -> INSERT
+        ],
+        "k long, name string, v long, op string",
+    )
+    # k=4 is matched by no source row -> NOT MATCHED BY SOURCE DELETE
+    for fmt in ("delta", "iceberg"):
+        p = _merge_fixture(spark, tmp_path, fmt)
+        src.select("k", "name", "v", "op").createOrReplaceTempView("mm_src")
+        # note: INSERT * takes the table's columns from the source; the
+        # source's extra op column is dropped by the cast projection
+        lakehouse_sql(
+            spark,
+            f"MERGE INTO {fmt}.`{p}` t USING mm_src s ON t.k = s.k "
+            "WHEN MATCHED AND s.op = 'del' THEN DELETE "
+            "WHEN MATCHED AND s.op = 'upd' THEN UPDATE SET name = s.name "
+            "WHEN MATCHED THEN UPDATE SET * "
+            "WHEN NOT MATCHED AND s.op <> 'del' THEN INSERT * "
+            "WHEN NOT MATCHED BY SOURCE THEN DELETE",
+        )
+        if fmt == "delta":
+            out = delta_py.read_delta_py(spark, p)
+        else:
+            out = iceberg_py.read_iceberg_py(spark, p)
+        rows = {r["k"]: (r["name"], r["v"]) for r in out.collect()}
+        assert rows == {
+            2: ("B", 20),   # per-column SET: v kept
+            3: ("C", 33),   # SET *: v replaced
+            6: ("F", 66),   # inserted
+        }, (fmt, rows)
+
+
+def test_merge_not_matched_by_source_update(spark, tmp_path):
+    """NOT MATCHED BY SOURCE with a conditional UPDATE over t-only
+    expressions (the stale-row sweep shape)."""
+    from gcs2postgres_spark.sources.lakehouse_sql import lakehouse_sql
+
+    p = _merge_fixture(spark, tmp_path, "delta")
+    spark.createDataFrame([(1, "A", 11)], "k long, name string, v long") \
+        .createOrReplaceTempView("mm_src2")
+    lakehouse_sql(
+        spark,
+        f"MERGE INTO delta.`{p}` t USING mm_src2 s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET * "
+        "WHEN NOT MATCHED BY SOURCE AND t.v >= 30 THEN UPDATE SET name = concat(t.name, '_stale')",
+    )
+    rows = {r["k"]: r["name"] for r in delta_py.read_delta_py(spark, p).collect()}
+    assert rows == {1: "A", 2: "b", 3: "c_stale", 4: "d_stale"}
+
+
+def test_merge_clause_validation(spark, tmp_path):
+    from gcs2postgres_spark.sources.lakehouse_sql import lakehouse_sql
+
+    p = _merge_fixture(spark, tmp_path, "delta")
+    spark.createDataFrame([(9, "z", 0)], "k long, name string, v long") \
+        .createOrReplaceTempView("mm_src3")
+    # unconditioned clause shadowing a later one: dead clause, raise
+    with pytest.raises(ValueError, match="must be LAST"):
+        lakehouse_sql(
+            spark,
+            f"MERGE INTO delta.`{p}` t USING mm_src3 s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET * "
+            "WHEN MATCHED AND s.v > 0 THEN DELETE",
+        )
+    # BY SOURCE cannot SET * (no source row)
+    with pytest.raises(ValueError, match="no source row"):
+        lakehouse_sql(
+            spark,
+            f"MERGE INTO delta.`{p}` t USING mm_src3 s ON t.k = s.k "
+            "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET *",
+        )
+    # SET targeting an unknown column
+    with pytest.raises(ValueError, match="unknown columns"):
+        lakehouse_sql(
+            spark,
+            f"MERGE INTO delta.`{p}` t USING mm_src3 s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET nope = 1",
+        )
+
+
+def test_merge_multi_plan_no_cartesian(spark, tmp_path):
+    """100 TB contract for the clause planner: the matcher and every
+    replacement branch plan as equi-joins (hash/broadcast), never a
+    cartesian or broadcast-nested-loop — conditions are FILTERS over
+    the key join, not join conditions."""
+    from gcs2postgres_spark.plans.inspect import formatted_plan
+    from gcs2postgres_spark.sources.row_level import build_merge_plan
+
+    live = spark.createDataFrame(
+        [(i, f"n{i}", i * 10) for i in range(100)], "k long, name string, v long"
+    )
+    source = spark.createDataFrame(
+        [(i, f"s{i}", i, "upd" if i % 2 else "del") for i in range(0, 200, 3)],
+        "k long, name string, v long, op string",
+    )
+    matcher, replacement = build_merge_plan(
+        live, source, ["k"],
+        matched=[
+            {"cond": "s.op = 'del'", "action": "delete", "set": None},
+            {"cond": None, "action": "update",
+             "set": {"name": "concat(t.name, s.name)"}},
+        ],
+        not_matched=[{"cond": "s.op <> 'del'", "action": "insert", "set": None}],
+        not_matched_by_source=[
+            {"cond": "t.v > 500", "action": "update",
+             "set": {"name": "concat(t.name, '_stale')"}},
+        ],
+    )
+    for label, df in (("matcher", matcher(live)), ("replacement", replacement)):
+        plan = formatted_plan(df)
+        assert "CartesianProduct" not in plan, (label, plan[:1500])
+        assert "BroadcastNestedLoopJoin" not in plan, (label, plan[:1500])
+
+
+_FORMATS = ("delta", "iceberg")
+
+
+def _kseq_target(spark, tmp_path, fmt, rows, name="t"):
+    """A fresh one-file ``(k, seq, name)`` table on ``fmt``."""
+    df = spark.createDataFrame(rows, "k long, seq long, name string")
+    p = str(tmp_path / f"{name}_{fmt}")
+    if fmt == "delta":
+        delta_py.write_delta(df.coalesce(1), p, "overwrite",
+                             timestamp_ms=1_700_000_000_000)
+    else:
+        iceberg_py.write_iceberg_v2_fixture(df, p, sort_col="k")
+    return p
+
+
+def _rows(spark, fmt, p):
+    read = delta_py.read_delta_py if fmt == "delta" else iceberg_py.read_iceberg_py
+    return sorted(tuple(r) for r in read(spark, p).select("k", "seq", "name").collect())
+
+
+def _merge(fmt):
+    return delta_py.merge_delta if fmt == "delta" else iceberg_py.merge_into
+
+
+_KSEQ_TARGET = [(1, 1, "a"), (2, 1, "b"), (3, 1, "c")]
+# k=1 newer than its target row, k=2 older, k=4 unmatched
+_KSEQ_SOURCE = [(1, 2, "x"), (2, 0, "y"), (4, 1, "d")]
+_SET = {"name": "concat(t.name, s.name)"}
+
+# mode -> (merge kwargs, rows after one merge, replay returns None)
+_SINGLE_CLAUSE_MODES = {
+    "update/insert": (
+        {}, [(1, 2, "x"), (2, 0, "y"), (3, 1, "c"), (4, 1, "d")], False),
+    "update/ignore": (
+        {"when_not_matched": "ignore"},
+        [(1, 2, "x"), (2, 0, "y"), (3, 1, "c")], False),
+    "delete/insert": (
+        {"when_matched": "delete"}, [(3, 1, "c"), (4, 1, "d")], False),
+    "delete/ignore": (
+        {"when_matched": "delete", "when_not_matched": "ignore"},
+        [(3, 1, "c")], True),
+    "ignore/insert": (
+        {"when_matched": "ignore"},
+        [(1, 1, "a"), (2, 1, "b"), (3, 1, "c"), (4, 1, "d")], True),
+    "latest_wins/insert": (
+        {"latest_wins_on": ["seq"]},
+        [(1, 2, "x"), (2, 1, "b"), (3, 1, "c"), (4, 1, "d")], True),
+    "latest_wins/ignore": (
+        {"latest_wins_on": ["seq"], "when_not_matched": "ignore"},
+        [(1, 2, "x"), (2, 1, "b"), (3, 1, "c")], True),
+    "set_exprs/insert": (
+        {"set_exprs": _SET},
+        [(1, 1, "ax"), (2, 1, "by"), (3, 1, "c"), (4, 1, "d")], False),
+    "set_exprs/ignore": (
+        {"set_exprs": _SET, "when_not_matched": "ignore"},
+        [(1, 1, "ax"), (2, 1, "by"), (3, 1, "c")], False),
+}
+
+
+@pytest.mark.parametrize("mode", sorted(_SINGLE_CLAUSE_MODES))
+def test_single_clause_merge_modes_agree_across_formats(spark, tmp_path, mode):
+    """Every valid single-clause mode commits the same rows on Delta
+    and Iceberg, and a replay of the same batch is a no-op (None) on
+    both or on neither."""
+    kwargs, expect, replay_none = _SINGLE_CLAUSE_MODES[mode]
+    src = spark.createDataFrame(_KSEQ_SOURCE, "k long, seq long, name string")
+    for fmt in _FORMATS:
+        p = _kseq_target(spark, tmp_path, fmt, _KSEQ_TARGET)
+        assert _merge(fmt)(spark, p, src, ["k"], **kwargs) is not None, fmt
+        assert _rows(spark, fmt, p) == expect, fmt
+        replay = _merge(fmt)(spark, p, src, ["k"], **kwargs)
+        assert (replay is None) == replay_none, (fmt, replay)
+
+
+_INVALID_MODES = {
+    "when_matched": ({"when_matched": "upsert"}, "when_matched must be"),
+    "when_not_matched": (
+        {"when_not_matched": "delete"}, "when_not_matched must be"),
+    "latest_wins/delete": (
+        {"when_matched": "delete", "latest_wins_on": ["seq"]},
+        "latest_wins_on requires"),
+    "latest_wins/ignore": (
+        {"when_matched": "ignore", "latest_wins_on": ["seq"]},
+        "latest_wins_on requires"),
+    "ignore/ignore": (
+        {"when_matched": "ignore", "when_not_matched": "ignore"}, "no-op"),
+    "set_exprs/delete": (
+        {"when_matched": "delete", "set_exprs": _SET},
+        "set_exprs .* requires when_matched='update'"),
+    "set_exprs/ignore": (
+        {"when_matched": "ignore", "set_exprs": _SET},
+        "set_exprs .* requires when_matched='update'"),
+    "set_exprs/latest_wins": (
+        {"latest_wins_on": ["seq"], "set_exprs": _SET},
+        "set_exprs .* requires when_matched='update'"),
+}
+
+
+@pytest.mark.parametrize("mode", sorted(_INVALID_MODES))
+def test_invalid_merge_modes_raise_before_read(spark, tmp_path, mode):
+    """An invalid clause combination raises the same ValueError on both
+    formats, and raises it before the table is read: the path below
+    does not exist, so a read would fail differently."""
+    kwargs, match = _INVALID_MODES[mode]
+    src = spark.createDataFrame(_KSEQ_SOURCE, "k long, seq long, name string")
+    errors = []
+    for fmt in _FORMATS:
+        with pytest.raises(ValueError, match=match) as e:
+            _merge(fmt)(spark, str(tmp_path / "absent"), src, ["k"], **kwargs)
+        errors.append(str(e.value))
+    assert errors[0] == errors[1]
+
+
+@pytest.mark.parametrize("fmt", _FORMATS)
+def test_latest_wins_merge_keeps_one_row_per_key(spark, tmp_path, fmt):
+    """A latest-wins batch holding several rows per key commits only
+    each key's greatest-sequence row, matched or not; the replay then
+    commits nothing."""
+    src = spark.createDataFrame(
+        [(1, 2, "x"), (1, 3, "y"), (3, 1, "c"), (3, 2, "c2")],
+        "k long, seq long, name string",
+    )
+    p = _kseq_target(spark, tmp_path, fmt, [(1, 1, "a"), (2, 1, "b")])
+    assert _merge(fmt)(spark, p, src, ["k"], latest_wins_on=["seq"]) is not None
+    assert _rows(spark, fmt, p) == [(1, 3, "y"), (2, 1, "b"), (3, 2, "c2")]
+    assert _merge(fmt)(spark, p, src, ["k"], latest_wins_on=["seq"]) is None
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"dml-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# statement -> Spark jobs it runs on a fresh one-file table; the merge
+# modes use _SINGLE_CLAUSE_MODES' kwargs and _KSEQ_SOURCE
+_DML_JOBS = {
+    "delta": {
+        "clauses": 17, "delete": 3, "update": 5,
+        "update/insert": 10, "update/ignore": 14,
+        "delete/insert": 12, "delete/ignore": 6, "ignore/insert": 6,
+        "latest_wins/insert": 8, "latest_wins/ignore": 8,
+        "latest_wins/clustered": 11,
+        "set_exprs/insert": 16, "set_exprs/ignore": 12,
+    },
+    "iceberg": {
+        "clauses": 19, "delete": 4, "update": 8,
+        "update/insert": 12, "update/ignore": 16,
+        "delete/insert": 14, "delete/ignore": 8, "ignore/insert": 7,
+        "latest_wins/insert": 10, "latest_wins/ignore": 10,
+        "latest_wins/clustered": 13,
+        "set_exprs/insert": 18, "set_exprs/ignore": 14,
+    },
+}
+# Keeping one source row per key (a row_number window over the key) is
+# one shuffle, and adaptive execution runs each shuffle map stage as a
+# job of its own: one more job in each of the three plans that read the
+# source — the emptiness probe, the matching scan and the write. A
+# source already reduced and clustered by key, as the streaming apply
+# passes it ("latest_wins/clustered"), needs no new shuffle.
+_LATEST_WINS_REDUCTION_JOBS = 3
+for _counts in _DML_JOBS.values():
+    for _mode in ("latest_wins/insert", "latest_wins/ignore"):
+        _counts[_mode] += _LATEST_WINS_REDUCTION_JOBS
+
+
+@pytest.mark.parametrize("fmt", _FORMATS)
+def test_dml_statement_job_counts(spark, tmp_path, fmt):
+    """The Spark jobs each row-level statement runs are pinned per
+    format: planning a statement once for both formats must not add a
+    probe, a scan or a shuffle stage to either."""
+    from gcs2postgres_spark.streaming.cdc_apply import latest_wins
+
+    if fmt == "delta":
+        delete, update = delta_py.delete_where_delta, delta_py.update_where_delta
+        clauses = delta_py.merge_delta_clauses
+    else:
+        delete, update = iceberg_py.delete_where, iceberg_py.update_where
+        clauses = iceberg_py.merge_into_clauses
+    src = spark.createDataFrame(_KSEQ_SOURCE, "k long, seq long, name string")
+    statements = {
+        "delete": lambda p: delete(spark, p, "k = 2"),
+        "update": lambda p: update(spark, p, "k = 2", {"name": "upper(name)"}),
+        "clauses": lambda p: clauses(
+            spark, p, src, ["k"],
+            matched=[{"cond": "s.seq > t.seq", "action": "update", "set": None}],
+            not_matched=[{"cond": None, "action": "insert", "set": None}],
+            not_matched_by_source=[
+                {"cond": None, "action": "delete", "set": None}],
+        ),
+    }
+    for mode, (kwargs, _expect, _replay) in _SINGLE_CLAUSE_MODES.items():
+        statements[mode] = (
+            lambda p, kw=kwargs: _merge(fmt)(spark, p, src, ["k"], **kw))
+    winners = latest_wins(src, ["k"], ["seq"])
+    statements["latest_wins/clustered"] = lambda p: _merge(fmt)(
+        spark, p, winners, ["k"], latest_wins_on=["seq"])
+    counts = {}
+    for i, (name, run) in enumerate(sorted(statements.items())):
+        p = _kseq_target(spark, tmp_path, fmt, _KSEQ_TARGET, name=f"t{i}")
+        counts[name] = _jobs(spark, lambda: run(p))
+    assert counts == _DML_JOBS[fmt]
+
+
+def test_format_modules_plan_no_dml():
+    """Row-level statements are planned once, in sources/row_level.py:
+    the format modules keep only their readers and committers, so none
+    of the planner's checks or helpers may reappear in them."""
+    from pathlib import Path
+
+    src = Path(__file__).resolve().parent.parent / "gcs2postgres_spark/sources"
+    forbidden = (
+        "when_matched must be",
+        "MERGE source lacks table columns",
+        "UPDATE SET targets unknown columns",
+        "_raise_on_duplicate_merge_keys",
+        "build_merge_plan",
+    )
+    found = [
+        f"{mod}: {s!r}"
+        for mod in ("delta_py.py", "iceberg_py.py")
+        for s in forbidden
+        if s in (src / mod).read_text()
+    ]
+    assert not found, "DML planning forked back into a format module:\n" + "\n".join(found)

@@ -78,12 +78,14 @@ ALLOWED = {
         # appId) from the checkpoint's txn column — exactly-once
         # watermark lookup, never table data
         '.select(F.max("txn.version").alias("v"))',
-        # duplicate-MERGE-key probe: .limit(1) — at most ONE offending
-        # key tuple fetched to build the error message
-        ".limit(1)",
         # row-tracking watermark lookup: the checkpoint's domainMetadata
         # rows (one per domain — metadata, never table data)
         '.select("domainMetadata.configuration")',
+    ],
+    "sources/row_level.py": [
+        # duplicate-MERGE-key probe: .limit(1) — at most ONE offending
+        # key tuple fetched to build the error message
+        ".limit(1)",
     ],
     "sources/lakehouse_sql.py": [
         # DESCRIBE DETAIL: ONE aggregate row (file count + byte sum)
