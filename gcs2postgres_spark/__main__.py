@@ -47,6 +47,7 @@ def identity_target_schema(df) -> list[tuple[str, str]]:
         T.BooleanType: "boolean",
         T.DateType: "date",
         T.TimestampType: "timestamp",
+        T.TimestampNTZType: "timestamp",
     }
 
     out = []

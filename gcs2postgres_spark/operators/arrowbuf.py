@@ -16,7 +16,7 @@ width.
 
 The helpers are ``<locals>`` closures of one factory, so cloudpickle
 ships them BY VALUE inside the worker closures that use them (the
-``sinks._copy_serializers`` pattern): executors that cannot import this
+``sinks.make_copy_partition`` pattern): executors that cannot import this
 package still run them.
 """
 

@@ -27,7 +27,6 @@ import logging
 import re
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
 
@@ -60,9 +59,10 @@ def spark_type_for_pg(pg_type: str) -> str:
 def reconcile_to_target(df: DataFrame, target_schema: list[tuple[str, str]]) -> DataFrame:
     """Project/cast a source DataFrame onto a target (column, pg_type) list.
 
-    One narrow ``select`` — Catalyst prunes unreferenced source columns at
-    the scan and pipelines the casts into whole-stage codegen; nothing
-    here shuffles.
+    One narrow ``selectExpr`` — Catalyst prunes unreferenced source
+    columns at the scan and pipelines the casts into whole-stage codegen;
+    nothing here shuffles. Names are back-quoted, so a source column
+    named ``user.id`` is that column, not a struct field access.
     """
     by_lower = {c.lower(): c for c in df.columns}
     out = []
@@ -71,10 +71,15 @@ def reconcile_to_target(df: DataFrame, target_schema: list[tuple[str, str]]) -> 
         src = by_lower.get(tgt_col.lower())
         if src is None:
             log.warning("target column %s not in source — NULL-filled", tgt_col)
-            out.append(F.lit(None).cast(spark_t).alias(tgt_col))
+            out.append(f"CAST(NULL AS {spark_t}) AS {quoted_name(tgt_col)}")
         else:
-            out.append(F.col(src).cast(spark_t).alias(tgt_col))
-    return df.select(*out)
+            out.append(f"CAST({quoted_name(src)} AS {spark_t}) AS {quoted_name(tgt_col)}")
+    return df.selectExpr(*out)
+
+
+def quoted_name(name: str) -> str:
+    """``name`` as a back-quoted SQL identifier, for ``selectExpr``."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 _IDENTIFIER_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")

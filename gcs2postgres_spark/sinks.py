@@ -11,7 +11,11 @@ executors; nothing transits the driver.
   pre-exist — the reference's load semantics (no DDL anywhere,
   src/db/db.go:175-180).
 - ``write_jdbc_copy``: the COPY-speed path — per-partition psycopg
-  COPY via foreachPartition, gated behind an import-try since no
+  COPY over ``mapInArrow``: each Arrow record batch (at most
+  ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows) is written as
+  COPY csv by ``pyarrow.csv`` in C++ and sent as it arrives; columns
+  Arrow cannot write in COPY's form (timestamps, binary, nested types)
+  become strings in the JVM first. Gated behind an import-try since no
   Postgres driver ships in this harness.
 - ``write_parquet``: the harness-checkable sink.
 """
@@ -21,6 +25,9 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
+
+from gcs2postgres_spark.reconcile import quoted_name
 
 # Same plain-identifier guard as reconcile.fetch_target_schema_jdbc: table
 # and column names are config-controlled strings interpolated into SQL, and
@@ -70,102 +77,54 @@ def copy_sql(table: str, columns: list[str]) -> str:
     return f"COPY {table} ({', '.join(columns)}) FROM STDIN (FORMAT csv)"
 
 
-def _copy_serializers():
-    """COPY csv cell/line serializers, built as ``<locals>`` closures so
-    cloudpickle ships them BY VALUE into the foreachPartition closure
-    (module-level functions pickle by reference and break on executors
-    that don't have this package on sys.path — the _make_decoder
-    lesson). The module-level ``copy_csv_cell``/``copy_csv_line`` below
-    are the same objects, for unit tests and direct callers."""
-
-    def cell(v) -> str:
-        # One value in Postgres COPY csv form. Hand-rolled because
-        # Python's csv.writer CANNOT express COPY's NULL convention:
-        # COPY (FORMAT csv) reads an UNQUOTED empty field as NULL and a
-        # QUOTED empty field ("") as the empty string, while csv.writer
-        # emits both None and "" as the same unquoted empty field —
-        # silently loading empty strings as NULL. Here: None → unquoted
-        # empty; bool → t/f; bytes → bytea hex form; date/timestamp/
-        # Decimal via str() (the ISO/plain form COPY accepts); quoted
-        # iff empty or containing delimiter/quote/newline, with "
-        # doubled per the csv quoting rule.
-        if v is None:
-            return ""
-        if v is True:
-            return "t"
-        if v is False:
-            return "f"
-        if isinstance(v, bytes):
-            s = "\\x" + v.hex()
-        else:
-            s = str(v)
-        # '\.' must be quoted too: on PostgreSQL < 17 an unquoted line
-        # consisting solely of \. terminates COPY input, so a
-        # single-column row holding that value would silently truncate
-        # the load (documented COPY CSV caveat).
-        if s == "" or s == "\\." or any(c in s for c in (",", '"', "\n", "\r")):
-            return '"' + s.replace('"', '""') + '"'
-        return s
-
-    def line(row) -> str:
-        # One COPY csv input line (ordered per the COPY column list —
-        # callers pass rows already column-resolved by reconcile).
-        return ",".join(cell(v) for v in row) + "\n"
-
-    return cell, line
-
-
-copy_csv_cell, copy_csv_line = _copy_serializers()
-
-
 def make_copy_partition(dsn: str, table: str, columns: list[str], connect_factory=None):
-    """Build the per-partition COPY function (partition iterator → CSV
-    lines → COPY ... FROM STDIN). The connection opens on the first row
-    (an empty partition never connects) and each ~1 MiB of lines is
-    sent as it fills, so a partition is never held whole in memory.
-    Factory-nested so cloudpickle ships it by value to executors
-    (workers may not have this package on their sys.path — same
-    reasoning as operators/multimodal.py _make_decoder).
+    """Build the per-partition COPY function for ``mapInArrow``: Arrow
+    record batches -> COPY csv, written by ``pyarrow.csv`` in C++ ->
+    ``COPY ... FROM STDIN``. The connection opens on the first non-empty
+    batch (an empty partition never connects) and each batch is sent as
+    it arrives, so a partition holds at most one batch in memory. The
+    function returns no rows.
 
+    Arrow's writer gives COPY's forms: NULL is an unquoted empty field,
+    every string cell is quoted (so ``""`` is the empty string and the
+    end-of-data marker ``\\.`` never stands alone on a line), booleans
+    are ``true``/``false``. Unlike ``pa.array`` it never imports pandas
+    (see operators/arrowbuf.py).
+
+    Factory-nested so cloudpickle ships it by value to executors that
+    may not have this package on their sys.path (the
+    operators/multimodal.py ``_make_decoder`` reasoning).
     ``connect_factory`` defaults to ``psycopg.connect`` (imported lazily
-    ON THE EXECUTOR); tests inject a mock with the same context-manager
-    protocol, which is what lets the reference's flagship sink path
-    (pgx.CopyFrom, reference src/db/db.go:175-180) have executable
-    evidence without a live Postgres. Statement assembly and row
-    serialization live in copy_sql/copy_csv_line (unit-tested incl. the
-    NULL-vs-empty-string and quote-escaping edges), so the only surface
-    this closure adds is the socket itself."""
+    ON THE EXECUTOR); tests inject a client with the same
+    context-manager protocol."""
     stmt = copy_sql(table, columns)
-    _serialize = copy_csv_line
 
-    def copy_partition(rows) -> None:
+    def copy_partition(batches):
         import itertools
+
+        import pyarrow as pa
+        import pyarrow.csv as pacsv
 
         connect = connect_factory
         if connect is None:
             import psycopg
 
             connect = psycopg.connect
-        rows = iter(rows)
-        first = next(rows, None)
+        batches = (b for b in batches if b.num_rows)
+        first = next(batches, None)
         if first is None:
-            return  # empty partition: never open a connection
+            return iter(())  # empty partition: never open a connection
+        options = pacsv.WriteOptions(include_header=False, quoting_style="needed")
         with connect(dsn) as conn, conn.cursor() as cur:
             # an exception below leaves the copy context with it, so
             # the server gets CopyFail and loads nothing
             with cur.copy(stmt) as cp:
-                buf: list[str] = []
-                size = 0
-                for row in itertools.chain((first,), rows):
-                    line = _serialize(row)
-                    buf.append(line)
-                    size += len(line)
-                    if size >= 1 << 20:
-                        cp.write("".join(buf))
-                        buf, size = [], 0
-                if buf:
-                    cp.write("".join(buf))
+                for batch in itertools.chain((first,), batches):
+                    out = pa.BufferOutputStream()
+                    pacsv.write_csv(batch, out, options)
+                    cp.write(out.getvalue())
             conn.commit()
+        return iter(())
 
     return copy_partition
 
@@ -174,15 +133,11 @@ def write_jdbc_copy(
     df: DataFrame, dsn: str, table: str, columns: list[str], connect_factory=None
 ) -> None:
     """COPY-protocol sink: each executor partition opens its own connection
-    and streams rows with COPY ... FROM STDIN (~10× plain JDBC inserts).
-    Requires psycopg on executors (or an injected connect_factory) —
-    psycopg is absent in this harness, so the default raises with a clear
-    message; the plumbing is fully exercised by tests via the factory.
-
-    ``TIMESTAMP`` columns are formatted as strings in the JVM, in the
-    session zone, before the rows reach Python: PySpark builds their
-    ``datetime`` cells with ``fromtimestamp``, i.e. in the Python
-    worker's local zone, which need not be the session's."""
+    and streams its Arrow batches as COPY csv with COPY ... FROM STDIN
+    (~10× plain JDBC inserts). Requires psycopg on executors (or an
+    injected connect_factory); psycopg is not a dependency of this
+    package, so without it the default raises with a clear message. The
+    tests drive the whole path through an injected wire client."""
     if connect_factory is None:
         try:
             import psycopg  # noqa: F401
@@ -190,24 +145,47 @@ def write_jdbc_copy(
             raise NotImplementedError(
                 "write_jdbc_copy needs psycopg on executors; use write_jdbc here"
             ) from e
-    df = _session_zone_timestamps(df)
-    df.foreachPartition(make_copy_partition(dsn, table, columns, connect_factory))
+    copy = make_copy_partition(dsn, table, columns, connect_factory)
+    # the noop sink runs the job for its side effect; nothing reaches the driver
+    _copy_columns(df).mapInArrow(copy, _NO_ROWS).write.format("noop").mode("overwrite").save()
 
 
-def _session_zone_timestamps(df: DataFrame) -> DataFrame:
-    """``df`` with each top-level TIMESTAMP column cast to its session-zone
-    string (``cast(ts as string)``: ``2024-01-01 00:00:00``, fractional
-    seconds without trailing zeros), the form COPY reads for
-    ``timestamp``. A frame without such a column is returned as is, with
-    no extra projection."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import TimestampType
+def _copy_columns(df: DataFrame) -> DataFrame:
+    """``df`` with every column Arrow's CSV writer cannot write in COPY's
+    form turned into a string in the JVM, in one projection:
 
+    - ``TIMESTAMP`` and ``TIMESTAMP_NTZ``: ``cast(ts as string)``, the
+      session-zone form COPY reads for ``timestamp``
+      (``2024-01-01 00:00:00``, fractional seconds without trailing
+      zeros). A Python worker would format in its own local zone;
+    - ``BINARY``: ``\\x`` and lower-case hex, Postgres' bytea input form
+      (Arrow raises ``Invalid UTF8 payload`` on raw bytes);
+    - any other type that is not a number, boolean, string or date
+      (arrays, maps, structs, intervals): ``cast(c as string)``.
+
+    A frame without such a column is returned as is, with no extra
+    projection."""
     fields = df.schema.fields
-    if not any(isinstance(f.dataType, TimestampType) for f in fields):
+    if all(isinstance(f.dataType, _CSV_NATIVE) for f in fields):
         return df
-    cols = []
+    exprs = []
     for f in fields:
-        c = F.col("`" + f.name.replace("`", "``") + "`")
-        cols.append(c.cast("string").alias(f.name) if isinstance(f.dataType, TimestampType) else c)
-    return df.select(*cols)
+        c = quoted_name(f.name)
+        if isinstance(f.dataType, _CSV_NATIVE):
+            exprs.append(c)
+        elif isinstance(f.dataType, T.BinaryType):
+            exprs.append(f"concat(chr(92), 'x', lower(hex({c}))) AS {c}")  # chr(92): a backslash
+        else:
+            exprs.append(f"CAST({c} AS STRING) AS {c}")
+    return df.selectExpr(*exprs)
+
+
+# The COPY function's output schema (it returns no rows); a StructType,
+# not DDL text, which mapInArrow would parse in the JVM on every call.
+_NO_ROWS = T.StructType([T.StructField("rows", T.LongType())])
+
+# Types pyarrow.csv writes in the form COPY reads.
+_CSV_NATIVE = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.DecimalType, T.StringType, T.DateType,
+)

@@ -1,10 +1,12 @@
-"""Keep pandas out of the Python workers of the vector and dedup kernels.
+"""Keep pandas out of the Python workers of the vector and dedup kernels
+and of the COPY sink.
 
 Every Python worker's resident memory is multiplied by the cores of
 every executor, and a worker that imports pandas peaks ~30 MB higher.
 The kernels in ``operators/similarity.py`` and ``operators/dedup.py``
 therefore run on mapInArrow / applyInArrow / arrow_udf over the numpy
-views of ``operators/arrowbuf.py``. Three guards:
+views of ``operators/arrowbuf.py``, and ``sinks.py``'s COPY function
+writes its Arrow batches with ``pyarrow.csv``. Three guards:
 
 - a source sweep for the calls that bring pandas in (the pandas-based
   Spark APIs, ``Array.to_numpy`` and the pyarrow constructors whose
@@ -37,7 +39,7 @@ from gcs2postgres_spark.operators.arrowbuf import (
 REPO = Path(__file__).resolve().parent.parent
 PKG = REPO / "gcs2postgres_spark"
 
-SWEPT = ["operators/similarity.py", "operators/dedup.py", "operators/arrowbuf.py"]
+SWEPT = ["operators/similarity.py", "operators/dedup.py", "operators/arrowbuf.py", "sinks.py"]
 FORBIDDEN = [
     "mapInPandas",
     "applyInPandas",
@@ -63,6 +65,7 @@ sys.path.insert(0, sys.argv[1])
 import numpy as np
 import pyarrow as pa
 
+from gcs2postgres_spark import sinks
 from gcs2postgres_spark.operators import dedup, similarity
 from gcs2postgres_spark.operators.arrowbuf import arrow_array, arrow_lists, arrow_strings
 
@@ -109,9 +112,35 @@ texts = pa.RecordBatch.from_arrays(
 fps = [b.column(1).to_pylist() for b in dedup._winnow_fps_batches(8, 4)(iter([texts]))]
 shingles = dedup._shingles_arrow_udf(2).func(texts.column(1)).to_pylist()
 
+
+class Copy:
+    chunks = []
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *a):
+        return False
+
+    def cursor(self):
+        return self
+
+    def copy(self, stmt):
+        return self
+
+    def write(self, data):
+        self.chunks.append(bytes(data).decode())
+
+    def commit(self):
+        pass
+
+
+list(sinks.make_copy_partition("dsn", "t", ["_id", "text"], lambda dsn: Copy())(iter([texts])))
+
 print(json.dumps({
     "pandas": "pandas" in sys.modules,
     "topk": topk, "pairs": pairs, "keys": keys, "fps": fps, "shingles": shingles,
+    "copy": Copy.chunks,
 }))
 """
 
@@ -138,6 +167,7 @@ def test_kernels_run_without_importing_pandas():
     assert len(long_fps) > 1
     assert short_fps == [int(hashlib.md5(b"fox").hexdigest()[:15], 16)]
     assert out["shingles"] == [["brown fox", "quick brown", "the quick"], ["fox"]]
+    assert out["copy"] == ['1,"The quick  brown fox"\n2,"fox"\n']
 
 
 def _vectors(rows):

@@ -199,6 +199,31 @@ def test_cli_identity_target_schema_types(spark):
     ]
 
 
+def test_cli_identity_target_keeps_zoneless_timestamps(spark, tmp_path):
+    """A parquet TIMESTAMP_NTZ column (zone-less) reconciles as
+    ``timestamp``, not the ``text`` fallback: the offline transfer keeps
+    its wall-clock values under the pinned UTC session."""
+    from gcs2postgres_spark.__main__ import identity_target_schema
+    from gcs2postgres_spark.pipeline import transfer_file
+
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    src = tmp_path / "ntz.parquet"
+    spark.sql(
+        "SELECT 1 AS id, timestamp_ntz'1996-01-02 00:00:00' AS o_orderdate"
+        " UNION ALL SELECT 2, timestamp_ntz'2024-06-30 23:59:58.25'"
+    ).coalesce(1).write.parquet(str(src))
+    df = read_source(spark, str(src))
+    assert dict(df.dtypes)["o_orderdate"] == "timestamp_ntz"
+    target = identity_target_schema(df)
+    assert target == [("id", "integer"), ("o_orderdate", "timestamp")]
+    res = transfer_file(spark, str(src), "ntz", target, str(tmp_path / "sink"))
+    assert res.ok and res.rows == 2
+    out = spark.read.parquet(str(tmp_path / "sink" / "ntz"))
+    assert dict(out.dtypes)["o_orderdate"] == "timestamp"
+    got = out.selectExpr("CAST(o_orderdate AS STRING) AS s").orderBy("s").collect()
+    assert [r["s"] for r in got] == ["1996-01-02 00:00:00", "2024-06-30 23:59:58.25"]
+
+
 def test_resolve_source_path_bucket_vs_local():
     from gcs2postgres_spark.config import GCSConfig
     from gcs2postgres_spark.pipeline import resolve_source_path

@@ -102,3 +102,25 @@ def test_schema_fetch_rejects_malformed_identifiers(spark):
             fetch_target_schema_jdbc(spark, "jdbc:postgresql://x/y", bad, {})
     with pytest.raises(ValueError, match="invalid SQL identifier"):
         fetch_target_schema_jdbc(spark, "jdbc:postgresql://x/y", "orders", {}, table_schema="pub'lic")
+
+
+def test_dotted_backquoted_and_spaced_names_reconcile(spark):
+    # a CSV header or JSON key such as ``user.id`` is one column, not a
+    # struct field access; back-quotes and spaces are plain characters
+    df = spark.createDataFrame(
+        [(2**40, "x", "1.5"), (None, None, "oops")],
+        "`user.id` bigint, `we``ird` string, `has space` string",
+    )
+    out = reconcile_to_target(
+        df,
+        [("USER.ID", "integer"), ("we`ird", "text"), ("has space", "float8"),
+         ("absent.col", "date")],
+    )
+    assert out.columns == ["USER.ID", "we`ird", "has space", "absent.col"]
+    assert dict(out.dtypes) == {
+        "USER.ID": "int", "we`ird": "string", "has space": "double", "absent.col": "date",
+    }
+    rows = [tuple(r) for r in out.collect()]
+    wrapped = (2**40 + 2**31) % 2**32 - 2**31  # lenient int32 truncation
+    # a bad double is NULL (lenient cast), a missing column NULL-filled
+    assert rows == [(wrapped, "x", 1.5, None), (None, None, None, None)]
